@@ -39,10 +39,10 @@ object BucketBench {
     // stage the bucketed tables (first call writes, later calls reuse)
     graft.queries.QueryRegistry.queries("s9_bucketed_join")(spark, dir).count()
 
-    val tag = new java.io.File(dir).getName.replace('.', '_')
+    val staged = graft.queries.SourceQueries.bucketedTables(dir)
     val t = Tables(spark, dir)
     def bucketed(): DataFrame =
-      census(spark.table(s"graft_lineitem_bkt_$tag"), spark.table(s"graft_orders_bkt_$tag"))
+      census(spark.table(staged.lineitem), spark.table(staged.orders))
     def plain(): DataFrame =
       census(
         t.lineitem.select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * 100 TB, where AQE coalesces the post-shuffle partitions the static
   * number gets wrong.
   */
-object GraftSession {
+object GraftSession extends org.apache.spark.internal.Logging {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   /** Master override for cross-process validation legs: e.g.
@@ -77,19 +77,37 @@ object GraftSession {
     (num.toDouble * mult).toLong
   }
 
-  /** Ad-hoc conf overrides for A/B experiments, applied LAST so they win:
-    * SPARK_GRAFT_CONF="spark.x=1;spark.y=2". Never set by the bench
-    * driver; exists so a config hypothesis can be measured without a
-    * rebuild (the r13 A/B discipline). */
-  def extraConf: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';')).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
-        case _ => None
+  /** Ad-hoc conf overrides for A/B experiments:
+    * SPARK_GRAFT_CONF="spark.x=1;spark.y=2". [[builder]] applies them
+    * after its own settings, so they override graft's defaults; a
+    * caller's later `.config` on the returned builder (as RetryProbe
+    * does) still wins over them. Never set by the bench driver; exists
+    * so a config hypothesis can be measured without a rebuild (the r13
+    * A/B discipline).
+    *
+    * Parsing, pure so GraftSessionSpec can pin it: `;`-separated
+    * `key=value` segments, key and value trimmed, the value taken after
+    * the FIRST `=` (so it may itself contain `=`). Returns the pairs to
+    * apply and the dropped non-blank segments (no `=`, or a blank key);
+    * blank segments are skipped. */
+  def parseConf(spec: String): (Seq[(String, String)], Seq[String]) = {
+    val (dropped, applied) = spec.split(';').toSeq.filter(_.trim.nonEmpty).partitionMap { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => Right(k.trim -> v.trim)
+        case _ => Left(seg.trim)
       }
     }
+    (applied, dropped)
+  }
 
-  def builder(appName: String): SparkSession.Builder =
+  /** The session builder with graft's settings; every applied
+    * SPARK_GRAFT_CONF pair is logged and every dropped segment warned
+    * about, so an override never skews a run without a trace. */
+  def builder(appName: String): SparkSession.Builder = {
+    val (overrides, dropped) = parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+    overrides.foreach { case (k, v) => logInfo(s"SPARK_GRAFT_CONF applies $k=$v") }
+    dropped.foreach(seg =>
+      logWarning(s"SPARK_GRAFT_CONF drops malformed segment '$seg' (expected key=value)"))
     SparkSession
       .builder()
       .appName(appName)
@@ -107,7 +125,8 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
-      .config(scala.collection.immutable.ListMap(extraConf: _*))
+      .config(scala.collection.immutable.ListMap(overrides: _*))
+  }
 
   def local(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

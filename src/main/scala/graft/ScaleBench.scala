@@ -78,20 +78,15 @@ object ScaleBench {
     val spark = GraftSession.local("graft-scalebench")
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    // listener events are async; settle before reading the counter
-    def shuffleBytesSince(mark: Long): Long = {
-      Thread.sleep(300)
-      tally.bytes.get() - mark
-    }
 
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
              dir: String): (Double, Long, Long) = {
-      val mark = { Thread.sleep(300); tally.bytes.get() }
+      val mark = tally.settle()
       val t0 = System.nanoTime()
       val n = fn(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      (dt, n, shuffleBytesSince(mark))
+      (dt, n, tally.settle() - mark)
     }
 
     val auditSet = only.getOrElse(Audit.toSet)

@@ -4,6 +4,11 @@ package graft
   * each run plus the executed plan, for iterating on a single query's
   * physical plan without a full bench sweep.
   *
+  * Each run materializes the full result through the `noop` sink (as
+  * `tools/PlanFiles` does): timing `count()` would let the optimizer
+  * prune every column the count does not need and skew the number. The
+  * row count is taken once, outside the timed runs.
+  *
   * Usage: sbt "runMain graft.TimeQuery <name> [sfDir] [reps]"
   */
 object TimeQuery {
@@ -15,12 +20,12 @@ object TimeQuery {
     val fn = queries.QueryRegistry.queries(name)
     val times = (1 to reps).map { i =>
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"run $i: $dt%.3f s ($n rows)")
+      println(f"run $i: $dt%.3f s")
       dt
     }
-    println(f"min: ${times.min}%.3f s")
+    println(f"min: ${times.min}%.3f s (${fn(spark, sfDir).count()} rows)")
     fn(spark, sfDir).explain("formatted")
     spark.stop()
   }

@@ -91,7 +91,7 @@ object ConnectedComponents {
           }
         // Cached before the jump (r13): jump is a self-join, so an
         // uncached `stepped` is computed TWICE per round — the probed
-        // final plan (tools/CcPlanProbe) shows two separate shuffle
+        // final plan (OPTIMIZATION_r13.md §3) shows two separate shuffle
         // stages running the identical join+union+aggregate, which AQE's
         // stage reuse does NOT deduplicate across the self-join's
         // re-aliased attributes. The cache halves the per-round work;

@@ -99,14 +99,16 @@ object LabelProp {
     * fits an executor. Edge-SET semantics: `edges` is deduplicated in
     * place ([[prepare]]) — each neighbor contributes its label ONCE per
     * round, as LPA requires; a weighted-multiset (multigraph) LPA would
-    * need a different operator. */
+    * need a different operator. Requires `rounds >= 1` (round 1 is fused
+    * into the label initialization); `rounds = 0` throws
+    * IllegalArgumentException. */
   def propagateBroadcast(edges: DataFrame, rounds: Int): DataFrame =
     runRounds(prepare(edges), rounds, broadcastLabels = true)
 
   /** Shuffle mode: the Σdeg-sized edge side is partitioned on src once
     * and never exchanged again; each round moves only the label table
-    * and census-sized aggregate partials. Edge-SET semantics, as
-    * [[propagateBroadcast]]. */
+    * and census-sized aggregate partials. Edge-SET semantics and the
+    * `rounds >= 1` precondition, as [[propagateBroadcast]]. */
   def propagateShuffle(edges: DataFrame, rounds: Int): DataFrame =
     runRounds(prepare(edges), rounds, broadcastLabels = false)
 
@@ -114,7 +116,8 @@ object LabelProp {
     * both modes share (a co-partitioned distinct-count — no second
     * materialization, no extra exchange), then run the mode that
     * survives that size. Both modes compute the identical deterministic
-    * labeling. Edge-SET semantics, as [[propagateBroadcast]]. */
+    * labeling. Edge-SET semantics and the `rounds >= 1` precondition, as
+    * [[propagateBroadcast]]. */
   def propagate(edges: DataFrame, rounds: Int,
                 broadcastMaxLabels: Long = DefaultBroadcastMaxLabels): DataFrame = {
     val e = prepare(edges)

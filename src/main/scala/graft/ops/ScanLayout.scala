@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * immediately after the read", §2.2 "fewer, larger map tasks").
   *
   * The driver fixtures are single-row-group parquet, so every scan runs
-  * in ONE task (tools/ScanParallelism) and everything pipelined onto it
+  * in ONE task (OPTIMIZATION_r12.md §6) and everything pipelined onto it
   * — pair explosions, the partial side of a collect_set/distinct
   * aggregate (which falls back to sort-based beyond 128 groups), MinHash
   * signatures, regex censuses — is single-threaded no matter how many

@@ -48,7 +48,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * 0.47→0.94 s): at fixture group sizes (tens to hundreds of rows per
   * key) WindowExec's codegen'd sort beats the interpreted per-row heap
   * updates on constant factors. The crossover is MEASURED
-  * (`graft.TopKBench`, 10M rows, scale/topk_crossover.json): sort wins
+  * (10M rows, scale/topk_crossover.json): sort wins
   * 2.5× at 10 rows/key, parity at ~1,000 rows/key, heap wins 1.67× at
   * 100k rows/key and 3.21× at 2.5M rows/key — the regime the operator
   * documents, where the sort's O(n log n) and partition-sized spill

@@ -285,6 +285,23 @@ object SourceQueries {
             FROM planned GROUP BY 1, 2""")
   )
 
+  /** Catalog names and storage path of the bucketed `lineitem`/`orders`
+    * tables `s9_bucketed_join` stages for the estate at `dir`. Keyed on
+    * the FULL normalized path — its basename for readability plus a
+    * digest of the whole path — so two estates that share a basename
+    * (`/a/sf0.01`, `/b/sf0.01`) never read each other's tables. */
+  final case class BucketedTables(lineitem: String, orders: String, path: String)
+
+  def bucketedTables(dir: String): BucketedTables = {
+    val full = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
+    val name = Option(full.getFileName).fold("root")(_.toString).replaceAll("[^A-Za-z0-9]", "_")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(full.toString.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+    val key = s"${name}_$digest"
+    BucketedTables(s"graft_lineitem_bkt_$key", s"graft_orders_bkt_$key",
+      s"${graft.ops.Fixtures.Root}/bucketed_$key")
+  }
+
   /** S9 ⊕ — bucketed co-located join: the table-layout technique that
     * removes the BIG join shuffle entirely. `lineitem` and `orders` are
     * written once as parquet tables hash-bucketed (and sorted) on the
@@ -302,9 +319,10 @@ object SourceQueries {
     * `StreamingMerge` documents the same discipline for its versioned
     * snapshots; this query pins it for the batch path
     * (PlanShapeSpec asserts the single-exchange plan with broadcast
-    * disabled). Staging is per-sf idempotent: the in-memory catalog is
-    * per-JVM, so a fresh run rewrites the small derived tables, and a
-    * repeat call in the same session reuses them.
+    * disabled). Staging is per-estate idempotent: the in-memory catalog
+    * is per-JVM, so a fresh run rewrites the small derived tables, and a
+    * repeat call in the same session reuses them ([[bucketedTables]]
+    * keys them on the estate's full path).
     *
     * Revenue follows the TpchQueries integer-cents discipline —
     * `round(price*100)::long` sums are exact in any fold order. */
@@ -313,14 +331,11 @@ object SourceQueries {
     "Bucketed co-located join: both fact tables bucketBy(8, orderkey) sorted at write time; the join itself plans with zero Exchange.",
     (s, dir) => {
       val t = Tables(s, dir)
-      val tag = new java.io.File(dir).getName.replace('.', '_')
-      val lt = s"graft_lineitem_bkt_$tag"
-      val ot = s"graft_orders_bkt_$tag"
+      val BucketedTables(lt, ot, base) = bucketedTables(dir)
       // EXTERNAL tables at an explicit path: the in-memory catalog dies
       // with the JVM but the files survive, and a managed saveAsTable
       // over a surviving location is LOCATION_ALREADY_EXISTS — external
       // + overwrite is restart-idempotent.
-      val base = s"${graft.ops.Fixtures.Root}/bucketed_$tag"
       if (!s.catalog.tableExists(lt)) {
         t.lineitem.select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
           .write.mode("overwrite").format("parquet").option("path", s"$base/lineitem")

@@ -38,7 +38,6 @@ object ClusterScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    def shuffleMark(): Long = { Thread.sleep(300); tally.bytes.get() }
 
     val unknown = names.filterNot(QueryRegistry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
@@ -49,10 +48,10 @@ object ClusterScaleProbe {
       val (nRows, hash) = resultHash(spark, fn(spark, sfDir))
       spark.catalog.clearCache()
       val runs = (1 to reps).map { _ =>
-        val m0 = shuffleMark(); val t0 = System.nanoTime()
+        val m0 = tally.settle(); val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        val sb = shuffleMark() - m0
+        val sb = tally.settle() - m0
         spark.catalog.clearCache()
         (dt, sb)
       }

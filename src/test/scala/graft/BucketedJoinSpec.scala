@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** The 100 TB co-location story (SURVEY §2.3 scale notes): bucketing both
@@ -47,6 +48,39 @@ class BucketedJoinSpec extends SparkSpecBase {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", s"${64L * 1024 * 1024}")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
       spark.sql("DROP TABLE IF EXISTS orders_b")
+    }
+  }
+
+  test("s9_bucketed_join keys its staged tables on the full estate path, not the basename") {
+    import spark.implicits._
+    // two tiny estates under different parents that share a basename:
+    // keyed on the basename alone, the second call would silently read
+    // the tables the first call staged
+    val dirs = Seq(1, 2).map { i =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_bkt_$i").resolve("est")
+      Seq((1L, 1.0 * i, 10.0 * i), (2L, 2.0 * i, 20.0 * i))
+        .toDF("l_orderkey", "l_quantity", "l_extendedprice")
+        .write.parquet(s"$dir/lineitem.parquet")
+      Seq((1L, "F"), (2L, if (i == 1) "F" else "O")).toDF("o_orderkey", "o_orderstatus")
+        .write.parquet(s"$dir/orders.parquet")
+      dir.toString
+    }
+    val staged = dirs.map(queries.SourceQueries.bucketedTables)
+    try {
+      assert(staged.distinct.size == 2)
+      val answers = dirs.map { dir =>
+        queries.QueryRegistry.queries("s9_bucketed_join")(spark, dir)
+          .orderBy("o_orderstatus").collect().map(_.toSeq).toSeq
+      }
+      assert(answers(0) == Seq(Seq("F", 2L, 3L, 3000L)))
+      assert(answers(1) == Seq(Seq("F", 1L, 2L, 2000L), Seq("O", 1L, 4L, 4000L)))
+    } finally {
+      staged.foreach { t =>
+        spark.sql(s"DROP TABLE IF EXISTS ${t.lineitem}")
+        spark.sql(s"DROP TABLE IF EXISTS ${t.orders}")
+        FileUtils.deleteQuietly(new java.io.File(t.path))
+      }
+      dirs.foreach(d => FileUtils.deleteQuietly(new java.io.File(d).getParentFile))
     }
   }
 }

@@ -44,4 +44,12 @@ class GraftSessionSpec extends AnyFunSuite {
         GraftSession.derivedBroadcastMax(Runtime.getRuntime.maxMemory, GraftSession.master).toString)
     }
   }
+
+  test("SPARK_GRAFT_CONF parsing: trimmed pairs, '=' inside values, blanks skipped, malformed reported") {
+    val (applied, dropped) = GraftSession.parseConf(
+      " spark.a = 1 ;;  ; spark.b=x=y;k; =v ;spark.c=")
+    assert(applied == Seq("spark.a" -> "1", "spark.b" -> "x=y", "spark.c" -> ""))
+    assert(dropped == Seq("k", "=v"))
+    assert(GraftSession.parseConf("") == (Nil, Nil))
+  }
 }

@@ -116,6 +116,15 @@ class LabelPropSpec extends SparkSpecBase {
     spark.catalog.clearCache()
   }
 
+  test("rounds = 0 is rejected by every entry point (round 1 is the label initialization)") {
+    Seq[(DataFrame, Int) => DataFrame](
+      LabelProp.propagateBroadcast, LabelProp.propagateShuffle, LabelProp.propagate(_, _)
+    ).foreach { run =>
+      intercept[IllegalArgumentException](run(fixtureEdges, 0))
+    }
+    spark.catalog.clearCache()
+  }
+
   /** First key of every planner-inserted (ENSURE_REQUIREMENTS) shuffle
     * exchange in an executed-plan string, sorted. */
   private def plannerShuffles(p: String): Seq[String] =
