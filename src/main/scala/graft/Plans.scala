@@ -19,7 +19,7 @@ object Plans {
     "o2_topk_custom"    -> "custom partial/final bounded-heap top-k",
     "w2_range_frame"    -> "value-RANGE window frame",
     "x24_variant_access" -> "VariantType parse-once JSON",
-    "e2e_collect"       -> "single-shuffle pivot + summary aggregate",
+    "e2e_collect"       -> "row-local classify + summary: one projection, no exchange",
     "e2e_collect_full"  -> "binaryFile TIFF scans + broadcast CSV attrs + nested envelope assembly",
     "q2_min_cost_supplier" -> "struct-argmin, one aggregate, no window sort",
     "q10_returned_top"  -> "integer-cents revenue, TakeOrderedAndProject top-20",
@@ -39,7 +39,7 @@ object Plans {
     "e2e_hybrid_search" -> "two TakeOrdered legs fused by RRF over a 20-row join",
     "j9_spatial_neighbors" -> "grid-bucketed spatial self-join: 9-cell explode side, hash equi on cell key",
     "u4_merge_upsert"   -> "MERGE as ONE full-outer sort-merge join on the key",
-    "t6_event_collect"  -> "event->collect dispatch: one scan, one shuffle, enrichment rides the fan-out",
+    "t6_event_collect"  -> "event->collect dispatch: row-local classify; exchanges only for the scan widen and the census",
     "x28_bpe_merges"    -> "BPE round: map-side partial pair census, one-row driver argmax",
     "a10_decontaminate_pruned" -> "broadcast bucket-set runtime filter ahead of the exact probe",
     "a10_sample_weighted" -> "two-level distributed prefix sum, no corpus-wide window",

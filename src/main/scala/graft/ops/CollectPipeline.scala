@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
   * /root/reference/containers/orchestrator/orchestrator.py:634-808) as a
   * composable batch transform:
   *
-  *   requests → validate (F1-F4) → per-source enrichment (fan-out) →
-  *   union (U1) → pivot to wide rows (J1) → success summary (A6)
+  *   requests → validate (F1-F4) → classify (the four per-source
+  *   classifications, one wide row) → decode + success summary (A6)
   *
-  * The reference fans out over HTTP to four container processes; here the
-  * fan-out is a union of four per-source column pipelines over the same
-  * request scan — Spark parallelizes across partitions, and each source's
-  * enrichment is row-local expression work (codegen'd, no UDFs, no
-  * shuffles until the final pivot groupBy on request_id).
+  * The reference fans out over HTTP to four container processes and
+  * merges their four records into one AggregatedResponse (U1 + J1).
+  * Every source's classification here is a pure function of the
+  * request's own row, so the fan-out and the merge collapse into one
+  * row-local projection: no explode, no shuffle, no join — a /collect
+  * batch is one scan plus codegen'd expression work (no UDFs).
   *
   * Enrichment kernels are deterministic functions of the coordinates
   * standing in for the WAN fetches (the fetch itself is a source concern
@@ -22,10 +23,13 @@ import org.apache.spark.sql.functions._
   * the reference's, transcribed: X9 fire-weather, X10 vegetation health,
   * X12 terrain, X14 range interpretation.
   *
-  * Scale: one scan of requests, 4x row expansion, one shuffle on
-  * request_id for the pivot. At 100 TB of requests the pivot keys are
-  * unique per request, so the aggregate is a near-identity groupBy that
-  * AQE sizes; nothing here is quadratic or driver-bound.
+  * Each input row gets its own response. Two requests sharing a
+  * `request_id` are two responses (each with `sources_successful` = 4),
+  * not one merged response.
+  *
+  * Scale: one scan of requests and a narrow projection per row; output
+  * rows = input rows. Nothing here shuffles, is quadratic or is
+  * driver-bound.
   */
 object CollectPipeline {
 
@@ -69,110 +73,89 @@ object CollectPipeline {
   private def pixelCode: Column = (pmod(floor(col("lat") * 37 + col("lon") * 17), lit(10)) * lit(1000) + 2500).cast("int")
   private def elevRange: Column = round(pmod(col("lat") * 19 - col("lon") * 7, lit(150)), 2)
 
-  /** One tall record per (request × source): source, a numeric value, a
-    * risk classification — the §2 classify chains applied per source.
-    *
-    * The 4-way fan-out is an explode over an array of per-source
-    * structs, NOT a union of four selects: a union re-scans the request
-    * relation once per source (Catalyst reuses exchanges, not scans),
-    * while the explode is genuinely one scan + a row-local 4× expansion.
-    *
-    * @param carry extra request columns to thread through the fan-out —
-    *              callers that need per-request metadata downstream
-    *              (e.g. the §3.3 routing columns) carry it here instead
-    *              of joining it back on request_id afterwards. */
-  def enrich(valid: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-    val keep = (Seq("request_id") ++ carry).map(col)
-    // Kernels materialize ONCE per request behind projection boundaries
-    // (CollapseProject keeps non-cheap expressions un-inlined), then the
-    // risk chains reference them as plain attributes. Inlining the
-    // kernel trees into every when-branch of every struct multiplies
-    // the per-row arithmetic ~10x — measured ~20 micros/row at 100k
-    // requests, the difference between 0.3 s and 3 s per pass.
-    val kernels = valid.select(keep ++ Seq(
-      weatherTemp.as("w_temp"), weatherHumidity.as("w_hum"), weatherWind.as("w_wind"),
-      (ndviRaw * 0.0001).as("ndvi"), pixelCode.as("pixel"), elevRange.as("elev")): _*)
-    val scored = kernels.withColumn("w_score",
-      when(col("w_temp") > 30, 3).when(col("w_temp") > 25, 2).when(col("w_temp") > 20, 1).otherwise(0) +
-        when(col("w_hum") < 20, 3).when(col("w_hum") < 40, 2).when(col("w_hum") < 60, 1).otherwise(0) +
-        when(col("w_wind") > 15, 3).when(col("w_wind") > 10, 2).when(col("w_wind") > 5, 1).otherwise(0))
-    val weatherRisk =
-      when(col("w_score") >= 7, "EXTREME").when(col("w_score") >= 5, "HIGH")
-        .when(col("w_score") >= 3, "MODERATE").otherwise("LOW")
-    val modisRisk =
-      when(col("ndvi") > 0.6, "LOW")
-        .when(col("ndvi") > 0.3, "MODERATE")
-        .when(col("ndvi") > 0.1, "HIGH")
-        .otherwise("EXTREME")
-    val landfireRisk =
-      when(col("pixel") >= 7000 && col("pixel") < 8000, "LOW")           // Urban/Developed
-        .when(col("pixel") >= 3000 && col("pixel") < 4000, "MODERATE_TO_HIGH") // Forest fuels
-        .when(col("pixel") >= 2000 && col("pixel") < 3000, "MODERATE_TO_HIGH") // Grassland
-        .otherwise("MODERATE")
-    val topoRisk =
-      when(col("elev") > 100, "HIGH").when(col("elev") > 50, "MODERATE").otherwise("LOW")
-
-    scored
-      .select(keep :+ explode(array(
-        struct(lit("weather").as("source"), col("w_temp").as("value"), weatherRisk.as("risk")),
-        struct(lit("modis").as("source"), round(col("ndvi"), 4).as("value"), modisRisk.as("risk")),
-        struct(lit("landfire").as("source"), col("pixel").cast("double").as("value"), landfireRisk.as("risk")),
-        struct(lit("topography").as("source"), col("elev").as("value"), topoRisk.as("risk")))).as("e"): _*)
-      .select(keep ++ Seq(col("e.source").as("source"),
-        col("e.value").as("value"), col("e.risk").as("risk")): _*)
-  }
-
-  /** The risk label domain, ordered; shared by the integer-coded pivot
-    * below and EventStreamPipeline's event-keyed variant. A risk STRING
-    * in the aggregation buffer forces SortAggregate (var-length buffer
-    * fields are not hash-aggregable), which sorts the whole 4x tall
-    * fan-out twice (partial + final, measured as the two SortAggregates
-    * in plans/r12/t6_event_collect_before.txt) — so the pivot aggregates
-    * the integer CODE (HashAggregate, whole-stage codegen) and decodes
-    * back to the label after the exchange. Each (request, source)
-    * appears at most once in the tall frame, so max == first. */
+  /** The risk label domain, ordered. [[classify]] emits each source's
+    * risk as its index here + 1, an integer that [[riskDecode]] maps
+    * back to the label. */
   val riskLabels: Seq[String] =
     Seq("LOW", "MODERATE", "MODERATE_TO_HIGH", "HIGH", "EXTREME")
 
-  def riskCode(risk: Column): Column =
-    riskLabels.zipWithIndex.foldLeft(lit(null).cast("int")) { case (acc, (l, i)) =>
-      when(risk === l, i + 1).otherwise(acc)
-    }
+  private def labelCode(label: String): Column = lit(riskLabels.indexOf(label) + 1)
 
   def riskDecode(code: Column): Column =
     riskLabels.zipWithIndex.foldLeft(lit(null).cast("string")) { case (acc, (l, i)) =>
       when(code === (i + 1), l).otherwise(acc)
     }
 
-  /** J1 + A6 — pivot the tall records into one wide row per request with
-    * the success summary, in ONE aggregate: the explicit-value pivot is a
-    * conditional max per source over the integer risk code (exactly what
-    * Pivot lowers to, kept hash-aggregable — see [[riskCode]]), and
-    * the summary counts ride the same groupBy — one Exchange on
-    * request_id, no second aggregate + join back. */
-  def aggregate(tall: DataFrame): DataFrame =
-    tall
-      .withColumn("risk_c", riskCode(col("risk")))
-      .groupBy(col("request_id"))
-      .agg(
-        max(when(col("source") === "landfire", col("risk_c"))).as("landfire_c"),
-        max(when(col("source") === "modis", col("risk_c"))).as("modis_c"),
-        max(when(col("source") === "weather", col("risk_c"))).as("weather_c"),
-        max(when(col("source") === "topography", col("risk_c"))).as("topography_c"),
-        count(lit(1)).as("sources_successful"),
-        count(when(col("risk").isin("HIGH", "EXTREME"), 1)).as("n_high_risk"))
-      .select(col("request_id"),
-        riskDecode(col("landfire_c")).as("landfire"),
-        riskDecode(col("modis_c")).as("modis"),
-        riskDecode(col("weather_c")).as("weather"),
-        riskDecode(col("topography_c")).as("topography"),
-        col("sources_successful"), col("n_high_risk"))
+  /** The four sources, in response column order; [[classify]] names
+    * each one's risk code `<source>_c`. */
+  val sources: Seq[String] = Seq("landfire", "modis", "weather", "topography")
 
-  /** The full /collect shape. */
-  def run(requests: DataFrame): DataFrame = {
-    val v = validate(requests)
-    aggregate(enrich(v.filter(col("valid")))) // rejected rows carry `errors`
+  /** One wide row per input row: `request_id`, the `carry` columns, and
+    * the four per-source risk codes (`landfire_c`, `modis_c`,
+    * `weather_c`, `topography_c`) — the §2 classify chains, row-local.
+    *
+    * @param carry extra request columns to thread through — per-request
+    *              metadata a caller needs next to the codes (e.g. the
+    *              §3.3 routing columns). */
+  def classify(valid: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val keep = (Seq("request_id") ++ carry).map(col)
+    // Kernels materialize ONCE per request behind a projection boundary
+    // (CollapseProject keeps non-cheap expressions un-inlined), then the
+    // risk chains reference them as plain attributes. Inlining the
+    // kernel trees into every when-branch multiplies the per-row
+    // arithmetic ~10x — measured ~20 micros/row at 100k requests.
+    riskCodes(valid.select(keep ++ Seq(
+      weatherTemp.as("w_temp"), weatherHumidity.as("w_hum"), weatherWind.as("w_wind"),
+      (ndviRaw * 0.0001).as("ndvi"), pixelCode.as("pixel"), elevRange.as("elev")): _*), carry)
   }
+
+  /** [[classify]]'s chains over the kernel columns (`w_temp`, `w_hum`,
+    * `w_wind`, `ndvi`, `pixel`, `elev`), apart so a spec can drive every
+    * threshold; the landfire pixel edges are unreachable from
+    * coordinates. */
+  private[graft] def riskCodes(kernels: DataFrame, carry: Seq[String]): DataFrame = {
+    val keep = (Seq("request_id") ++ carry).map(col)
+    val scored = kernels.withColumn("w_score",
+      when(col("w_temp") > 30, 3).when(col("w_temp") > 25, 2).when(col("w_temp") > 20, 1).otherwise(0) +
+        when(col("w_hum") < 20, 3).when(col("w_hum") < 40, 2).when(col("w_hum") < 60, 1).otherwise(0) +
+        when(col("w_wind") > 15, 3).when(col("w_wind") > 10, 2).when(col("w_wind") > 5, 1).otherwise(0))
+    val weatherRisk =
+      when(col("w_score") >= 7, labelCode("EXTREME")).when(col("w_score") >= 5, labelCode("HIGH"))
+        .when(col("w_score") >= 3, labelCode("MODERATE")).otherwise(labelCode("LOW"))
+    val modisRisk =
+      when(col("ndvi") > 0.6, labelCode("LOW"))
+        .when(col("ndvi") > 0.3, labelCode("MODERATE"))
+        .when(col("ndvi") > 0.1, labelCode("HIGH"))
+        .otherwise(labelCode("EXTREME"))
+    val landfireRisk =
+      when(col("pixel") >= 7000 && col("pixel") < 8000, labelCode("LOW")) // Urban/Developed
+        .when(col("pixel") >= 3000 && col("pixel") < 4000, labelCode("MODERATE_TO_HIGH")) // Forest fuels
+        .when(col("pixel") >= 2000 && col("pixel") < 3000, labelCode("MODERATE_TO_HIGH")) // Grassland
+        .otherwise(labelCode("MODERATE"))
+    val topoRisk =
+      when(col("elev") > 100, labelCode("HIGH")).when(col("elev") > 50, labelCode("MODERATE"))
+        .otherwise(labelCode("LOW"))
+    scored.select(keep ++ Seq(landfireRisk.as("landfire_c"), modisRisk.as("modis_c"),
+      weatherRisk.as("weather_c"), topoRisk.as("topography_c")): _*)
+  }
+
+  /** J1 + A6 — the response columns over per-source risk codes, a null
+    * code meaning the source was not queried: the four decoded labels,
+    * then `sources_successful` (codes present) and `n_high_risk`
+    * (HIGH/EXTREME codes). */
+  def response(codeOf: String => Column): Seq[Column] = {
+    val codes = sources.map(codeOf)
+    def countOf(p: Column => Column) = codes.map(c => when(p(c), 1L).otherwise(0L)).reduce(_ + _)
+    sources.zip(codes).map { case (s, c) => riskDecode(c).as(s) } ++ Seq(
+      countOf(_.isNotNull).as("sources_successful"),
+      countOf(_ >= labelCode("HIGH")).as("n_high_risk"))
+  }
+
+  /** The full /collect shape: one response row per valid request
+    * (rejected rows carry `errors`, see [[validate]]). */
+  def run(requests: DataFrame): DataFrame =
+    classify(validate(requests).filter(col("valid")))
+      .select(col("request_id") +: response(s => col(s"${s}_c")): _*)
 
   /** Trace-id propagation (orchestrator.py:73-87): the caller-supplied
     * infrastructure header when present (the x-request-id /
@@ -194,12 +177,16 @@ object CollectPipeline {
     * QueryExecutionListener receives the run-level census from the SAME
     * job that computes the rows — the engine-native form of the
     * reference's log aggregation, with no second pass over the data
-    * (proven in CollectPipelineSpec). */
+    * (proven in CollectPipelineSpec). The whole envelope is one
+    * projection over [[validate]]'s rows — no join back on
+    * `request_id` — so each input row logs once, duplicate keys
+    * included; a reject reports 0 sources and 0 high risks. */
   def observedRun(requests: DataFrame, keyCol: String = "request_id",
                   headerCol: Option[String] = None): DataFrame = {
     val v = validate(requests.withColumn("trace_id", traceId(keyCol, headerCol)))
-    val agg = aggregate(enrich(v.filter(col("valid"))))
-    v.join(agg, Seq("request_id"), "left")
+    // rejects classify too, but their codes are masked to null: 0 sources
+    classify(v, carry = Seq("trace_id", "valid", "errors"))
+      .select(col("*") +: response(s => when(col("valid"), col(s"${s}_c"))): _*)
       .select(
         col("request_id"),
         col("trace_id"),
@@ -209,8 +196,8 @@ object CollectPipeline {
           .otherwise(concat(lit("collect rejected: "),
             concat_ws("; ", col("errors")))).as("message"),
         size(col("errors")).cast("long").as("n_errors"),
-        coalesce(col("sources_successful"), lit(0L)).as("sources_successful"),
-        coalesce(col("n_high_risk"), lit(0L)).as("n_high_risk"))
+        col("sources_successful"),
+        col("n_high_risk"))
       .observe("graft_collect",
         count(lit(1)).as("n_requests"),
         sum(when(col("level") === "INFO", 1L).otherwise(0L)).as("n_valid"),

@@ -102,15 +102,19 @@ object LabelProp {
     * need a different operator. Requires `rounds >= 1` (round 1 is fused
     * into the label initialization); `rounds = 0` throws
     * IllegalArgumentException. */
-  def propagateBroadcast(edges: DataFrame, rounds: Int): DataFrame =
+  def propagateBroadcast(edges: DataFrame, rounds: Int): DataFrame = {
+    requireRounds(rounds)
     runRounds(prepare(edges), rounds, broadcastLabels = true)
+  }
 
   /** Shuffle mode: the Σdeg-sized edge side is partitioned on src once
     * and never exchanged again; each round moves only the label table
     * and census-sized aggregate partials. Edge-SET semantics and the
     * `rounds >= 1` precondition, as [[propagateBroadcast]]. */
-  def propagateShuffle(edges: DataFrame, rounds: Int): DataFrame =
+  def propagateShuffle(edges: DataFrame, rounds: Int): DataFrame = {
+    requireRounds(rounds)
     runRounds(prepare(edges), rounds, broadcastLabels = false)
+  }
 
   /** Size-gated propagation: measure |nodes| FROM the partitioned cache
     * both modes share (a co-partitioned distinct-count — no second
@@ -120,6 +124,7 @@ object LabelProp {
     * [[propagateBroadcast]]. */
   def propagate(edges: DataFrame, rounds: Int,
                 broadcastMaxLabels: Long = DefaultBroadcastMaxLabels): DataFrame = {
+    requireRounds(rounds)
     val e = prepare(edges)
     // the gate count doubles as the cache-materializing action — a
     // co-partitioned distinct-count, no second materialization (r12);
@@ -128,6 +133,12 @@ object LabelProp {
     val nLabels = e.select(col("src").as("node")).distinct().count()
     runRounds(e, rounds, useBroadcast(nLabels, broadcastMaxLabels))
   }
+
+  /** Checked by every entry before [[prepare]] registers the edge cache
+    * (and before the gate count runs), so a rejected call leaves no
+    * cached plan behind and runs no job. */
+  private def requireRounds(rounds: Int): Unit =
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
 
   /** The single materialization both modes (and the gate) read:
     * src-partitioned cached DISTINCT edges. Lazily populated — the
@@ -159,7 +170,6 @@ object LabelProp {
     * returning and composing LabelProp inside a longer job never pays
     * lingering edge memory. */
   private def runRounds(e: DataFrame, rounds: Int, broadcastLabels: Boolean): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     var lbl: DataFrame = null
     for (r <- 1 to rounds) {
       // Round 1 fused (r13): under identity initial labels the round's

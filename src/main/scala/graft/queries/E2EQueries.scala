@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
   * golden coordinates (README.md:262-266 of the reference) plus invalid
   * requests, through [[graft.ops.CollectPipeline]]. The oracle mirrors
   * the entire pipeline — validation, deterministic enrichment kernels,
-  * classification chains, pivot, summary — in one SQL statement, so the
-  * full composition is hash-pinned, not just the parts.
+  * classification chains, the reference's per-source merge, summary —
+  * in one SQL statement, so the full composition is hash-pinned, not
+  * just the parts.
   */
 object E2EQueries {
 
   val collect = Q(
     "e2e_collect",
-    "Full /collect composition: validate -> 4-source enrichment fan-out -> union -> pivot -> summary, golden coordinates + rejects.",
+    "Full /collect composition: validate -> row-local 4-source classify -> decode + summary, golden coordinates + rejects.",
     (s, _) => {
       import s.implicits._
       val requests = Seq(

@@ -156,11 +156,11 @@ object StreamQueries {
     (s, dir) => {
       val t = Tables(s, dir)
       // widen the unsplittable event scan (r12 §2.5 fix): the whole
-      // route → validate → enrich → 4x fan-out chain is row-local and
-      // runs pipelined on the scan task — single-threaded on the
-      // 1-row-group fixture — while the event rows themselves are ~50
-      // bytes; hashing them out to the cores first costs one tiny
-      // exchange and parallelizes every per-row stage (no-op once the
+      // route → validate → classify chain is row-local (one wide row
+      // per event) and runs pipelined on the scan task — single-threaded
+      // on the 1-row-group fixture — while the event rows themselves are
+      // ~50 bytes; hashing them out to the cores first costs one tiny
+      // exchange and parallelizes the per-row work (no-op once the
       // input is splittable; see ops/ScanLayout)
       graft.streaming.EventStreamPipeline.collectForEvents(
           graft.ops.ScanLayout.widenByKey(t.events, col("event_id")))

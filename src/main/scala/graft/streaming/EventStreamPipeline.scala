@@ -213,58 +213,40 @@ object EventStreamPipeline {
   /** §3.3 end-to-end — the background dispatch the reference leaves as a
     * TODO (orchestrator.py:978-981 "Store result in database linked to
     * event_id"): the routed batch becomes /collect requests, runs the
-    * REAL §3.1 pipeline (validate → enrich → pivot) restricted to each
+    * REAL §3.1 pipeline (validate → classify → decode) restricted to each
     * event's routed sources, and comes back keyed by the triggering
     * event. Non-routed sources stay null in the wide row —
-    * 'weather'-only updates produce a weather-only response, exactly the
-    * reference's priority contract.
+    * 'weather'-only updates produce a weather-only response
+    * (`sources_successful` = 1), exactly the reference's priority
+    * contract.
     *
-    * Scale: ONE scan of the batch and one shuffle total — the routing
-    * metadata rides the enrichment fan-out (enrich's `carry`) instead
-    * of being joined back on request_id afterwards, and the pivot
-    * groups on (request_id, metadata) in the same aggregate. Nothing
-    * per-event on the driver. */
+    * Scale: ONE scan of the batch and one row-local projection — no
+    * explode, no shuffle, no join; the routing metadata rides
+    * classify's `carry`. Each event row gets its own response, so an
+    * event id seen twice (say, in two micro-batches of the stream) is
+    * two rows here too. Nothing per-event on the driver. */
   def collectForEvents(events: DataFrame): DataFrame = {
     import graft.ops.CollectPipeline
-    val reqs = eventRequests(events)
-    // routed-source membership precomputed as ONE boolean per request
-    // before the 4x fan-out: a per-tall-row split+array_contains over
-    // the sources string costs ~6 micros/row at 100k events (the
-    // expression tree is too large for whole-stage codegen), while this
-    // is a constant-time predicate
-    val valid = CollectPipeline.validate(reqs).filter(col("valid"))
+    val valid = CollectPipeline.validate(eventRequests(events)).filter(col("valid"))
       .withColumn("all_sources",
         col("sources") === "landfire,modis,weather,topography")
-    val tall = CollectPipeline.enrich(valid,
-        carry = Seq("trigger_event_id", "priority", "all_sources", "timeout_s"))
-      .filter(col("all_sources") || col("source") === "weather")
-    // integer-coded risk pivot (see CollectPipeline.riskCode): a string
-    // agg buffer would force SortAggregate over the 4x tall fan-out;
-    // max == first since each (request, source) appears at most once
-    tall
-      .withColumn("risk_c", CollectPipeline.riskCode(col("risk")))
-      .groupBy(col("request_id"), col("trigger_event_id"), col("priority"), col("timeout_s"))
-      .agg(
-        max(when(col("source") === "landfire", col("risk_c"))).as("landfire_c"),
-        max(when(col("source") === "modis", col("risk_c"))).as("modis_c"),
-        max(when(col("source") === "weather", col("risk_c"))).as("weather_c"),
-        max(when(col("source") === "topography", col("risk_c"))).as("topography_c"),
-        count(lit(1)).as("sources_successful"),
-        count(when(col("risk").isin("HIGH", "EXTREME"), 1)).as("n_high_risk"))
-      .select(col("request_id"), col("trigger_event_id").as("event_id"),
-        col("priority"), col("timeout_s"),
-        CollectPipeline.riskDecode(col("landfire_c")).as("landfire"),
-        CollectPipeline.riskDecode(col("modis_c")).as("modis"),
-        CollectPipeline.riskDecode(col("weather_c")).as("weather"),
-        CollectPipeline.riskDecode(col("topography_c")).as("topography"),
-        col("sources_successful"), col("n_high_risk"))
+    CollectPipeline.classify(valid,
+        carry = Seq("trigger_event_id", "priority", "timeout_s", "all_sources"))
+      .select(Seq(col("request_id"), col("trigger_event_id").as("event_id"),
+        col("priority"), col("timeout_s")) ++
+        CollectPipeline.response {
+          case "weather" => col("weather_c")
+          case s => when(col("all_sources"), col(s"${s}_c"))
+        }: _*)
   }
 
   /** §3.3 streaming entry — T1 ingest → T2 route → the §3.1 collect
     * pipeline per micro-batch → T3 event-keyed result sink. foreachBatch
-    * hands a STATIC frame to collectForEvents, so the full batch operator
-    * chain (joins, pivot) runs unmodified inside the stream — the
-    * streamed results provably equal the batch run on the same events. */
+    * hands a STATIC frame to collectForEvents, so the batch operator
+    * chain runs unmodified inside the stream. That chain is row-local,
+    * so each micro-batch is one job with no shuffle, and the streamed
+    * results equal the batch run on the same events however the files
+    * split into micro-batches. */
   def runEventCollect(spark: SparkSession, srcDir: String, sinkDir: String,
                       checkpointDir: String): StreamingQuery = {
     val stream = spark.readStream

@@ -31,17 +31,27 @@ class CollectPipelineSpec extends SparkSpecBase {
     ))
   }
 
-  test("aggregate is a single shuffle: exactly one Exchange, keyed on request_id") {
-    val out = CollectPipeline.run(requests)
-    out.collect()
-    // AQE's toString repeats the plan under "== Initial Plan =="; count
-    // exchanges only in the executed (final) section
-    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected one request_id exchange, saw $exchanges:\n${plan.take(2000)}")
-    assert(plan.contains("Exchange hashpartitioning(request_id"),
-      s"exchange not keyed on request_id:\n${plan.take(2000)}")
-    assert(!plan.contains("Join"), s"pivot+summary should not join back:\n${plan.take(2000)}")
+  /** The executed plan once `df` has run: every operator, AQE-final or not. */
+  private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan.toString
+  }
+
+  private def assertRowLocal(plan: String): Unit =
+    Seq("Exchange", "Join", "Generate").foreach { op =>
+      assert(!plan.contains(op), s"$op in a row-local plan:\n${plan.take(3000)}")
+    }
+
+  test("run is row-local: no Exchange, no Join, no Generate in the executed plan") {
+    assertRowLocal(executedPlan(CollectPipeline.run(requests)))
+  }
+
+  test("collectForEvents is row-local: no Exchange, no Join, no Generate in the executed plan") {
+    val events = spark.range(0, 2000).select(col("id").as("event_id"),
+      timestamp_seconds(col("id") + 1700000000L).as("ts"), (col("id") % 97).as("user_id"),
+      element_at(array(lit("error"), lit("signup"), lit("click")), (col("id") % 3 + 1).cast("int"))
+        .as("event_type"), (col("id") * 0.5).as("value"), lit("{}").as("props"))
+    assertRowLocal(executedPlan(graft.streaming.EventStreamPipeline.collectForEvents(events)))
   }
 
   test("golden coordinates produce one wide row each with all four sources populated") {

@@ -76,6 +76,44 @@ class EventStreamSpec extends SparkSpecBase {
     assert(batch.count() < events.count())
   }
 
+  test("§3.3: an event id delivered in two micro-batches equals the batch run over every delivery") {
+    // file set A (every event) is older than file set B (a third of the
+    // events again); with maxFilesPerTrigger = 4, A's four files make
+    // micro-batch 0 and B's four make micro-batch 1
+    val events = spark.read.parquet(srcDir)
+    val src = tmp("ec_dup_src")
+    def stage(df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
+      val out = tmp("ec_dup_part")
+      df.repartition(4).write.mode("overwrite").parquet(out)
+      new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+        val to = new java.io.File(src, f.getName)
+        Files.move(f.toPath, to.toPath)
+        assert(to.setLastModified(mtime))
+      }
+    }
+    val now = System.currentTimeMillis()
+    stage(events, now - 60000)
+    stage(events.filter(pmod(col("event_id"), lit(3)) === 0), now)
+
+    val sink = tmp("ec_dup_sink")
+    val q = EventStreamPipeline.runEventCollect(spark, src, sink, tmp("ec_dup_ck"))
+    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
+    val out = spark.read.parquet(sink)
+    // the duplicates really landed in different micro-batches
+    val dups = out.groupBy("event_id")
+      .agg(count(lit(1)).as("n"), countDistinct(col("batch_id")).as("n_batches"))
+      .filter(col("n") > 1)
+    assert(dups.count() > 0)
+    assert(dups.filter(col("n") =!= 2 || col("n_batches") =!= 2).isEmpty)
+
+    val streamed = out.drop("batch_id")
+    val batch = EventStreamPipeline.collectForEvents(
+      spark.read.schema(EventStreamPipeline.eventSchema).parquet(src))
+    assert(streamed.count() == batch.count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+    assert(batch.filter(col("sources_successful") > 4).isEmpty)
+  }
+
   test("W3 sessions: streamed session windows match batch session_window on finalized sessions") {
     val sink = tmp("sess_sink")
     val q = EventStreamPipeline.runSessionized(spark, srcDir, sink, tmp("sess_ck"))
