@@ -124,6 +124,12 @@ object GraftSession extends org.apache.spark.internal.Logging {
       // native engine functions (cosine_sim, §2.10 D5)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.parquet.compression.codec", "zstd")
+      // RocksDB state store for every stateful stream: keyed state spills
+      // to local disk instead of living on-heap — the setting that lets
+      // billions of keys fit a fixed executor memory budget
+      // (HDFSBackedStateStore is heap-bound); transformWithState requires it
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
       .config(scala.collection.immutable.ListMap(overrides: _*))
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** SURVEY.md §2.9 T1–T5 — the Structured Streaming form of the
@@ -20,10 +20,10 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: file-source micro-batches parallelize per file split;
   * the windowed aggregation keeps state per (window, event_type) — tiny
-  * key space — and the watermark bounds it. The foreachBatch sink writes
-  * partitioned parquet append-only, so re-running a batch after failure
-  * is idempotent-by-overwrite at the batch-id level if exactly-once is
-  * needed (Spark's default file sink already commits atomically).
+  * key space — and the watermark bounds it. Every entry drains through
+  * [[Drain]]: the sinks append each micro-batch to unpartitioned parquet,
+  * at-least-once (a replayed batch appends twice — the contract is stated
+  * once, on Drain).
   */
 object EventStreamPipeline {
 
@@ -37,6 +37,14 @@ object EventStreamPipeline {
     StructField("value", DoubleType),
     StructField("props", StringType)
   ))
+
+  /** Event time in microseconds (ms clock + sub-ms nanos): how the typed
+    * stream processors order and store `ts`. */
+  def micros(t: java.sql.Timestamp): Long =
+    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+
+  private def eventSource(spark: SparkSession, srcDir: String, filesPerBatch: Int): DataFrame =
+    Drain.parquetSource(spark, eventSchema, srcDir, filesPerBatch)
 
   /** T2 — the routing transform, shared verbatim between the batch
     * query (`t2_priority_route`) and the stream. Pure column logic:
@@ -92,39 +100,15 @@ object EventStreamPipeline {
 
   /** Streaming entry for hopping windows. */
   def runHopping(spark: SparkSession, srcDir: String, sinkDir: String,
-                 checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(srcDir)
-    hoppingCounts(stream)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
+                 checkpointDir: String): StreamingQuery =
+    Drain(hoppingCounts(eventSource(spark, srcDir, 4)), checkpointDir)(
+      Drain.appendParquet(sinkDir))
 
   /** Streaming entry for session windows. */
   def runSessionized(spark: SparkSession, srcDir: String, sinkDir: String,
-                     checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(srcDir)
-    sessionizedCounts(stream)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
+                     checkpointDir: String): StreamingQuery =
+    Drain(sessionizedCounts(eventSource(spark, srcDir, 4)), checkpointDir)(
+      Drain.appendParquet(sinkDir))
 
   /** T-depth — stream-stream interval join: each purchase joins the same
     * user's clicks from the preceding hour. Both sides carry watermarks so
@@ -151,43 +135,23 @@ object EventStreamPipeline {
 
   /** Streaming entry for the interval join. */
   def runIntervalJoin(spark: SparkSession, srcDir: String, sinkDir: String,
-                      checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(srcDir)
-    clickToPurchaseJoin(stream)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
+                      checkpointDir: String): StreamingQuery =
+    Drain(clickToPurchaseJoin(eventSource(spark, srcDir, 2)), checkpointDir)(
+      Drain.appendParquet(sinkDir))
 
   /** T1+T2+T3 — the full event-trigger pipeline: stream events from
     * `srcDir`, route, and append event-keyed collection requests to
     * `sinkDir` via foreachBatch. Returns the running query. */
   def runRouting(spark: SparkSession, srcDir: String, sinkDir: String,
                  checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(srcDir)
-    route(stream)
+    val requests = route(eventSource(spark, srcDir, 4))
       .select(col("event_id"), col("user_id"), col("priority"),
         col("sources"), col("timeout_s"), col("ts").as("requested_at"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // T3: the event-keyed persistence the reference stubs out
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(requests, checkpointDir) { (batch, batchId) =>
+      // T3: the event-keyed persistence the reference stubs out
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(sinkDir)
+    }
   }
 
   /** §3.3 — event → DataRequest derivation (the reference's
@@ -248,38 +212,17 @@ object EventStreamPipeline {
     * results equal the batch run on the same events however the files
     * split into micro-batches. */
   def runEventCollect(spark: SparkSession, srcDir: String, sinkDir: String,
-                      checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(srcDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        collectForEvents(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
+                      checkpointDir: String): StreamingQuery =
+    Drain(eventSource(spark, srcDir, 4), checkpointDir) { (batch, batchId) =>
+      collectForEvents(batch)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(sinkDir)
+    }
 
   /** T5 — watermarked windowed aggregation as a stream, appending
     * finalized windows to `sinkDir`. */
   def runWindowed(spark: SparkSession, srcDir: String, sinkDir: String,
-                  checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(srcDir)
-    windowedCounts(stream)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
+                  checkpointDir: String): StreamingQuery =
+    Drain(windowedCounts(eventSource(spark, srcDir, 4)), checkpointDir)(
+      Drain.appendParquet(sinkDir))
 }

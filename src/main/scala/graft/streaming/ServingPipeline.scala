@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.types.StructType
 
 /** §3 COMPOSED serving path — the continuous deployment shape a
   * production rollout of the reference actually runs, chained from the
@@ -46,7 +47,7 @@ object ServingPipeline {
       .select(explode(split(col("body").cast("string"), "\n")).as("line"))
       .filter(length(trim(col("line"))) > 0)
       .select(from_json(col("line"),
-        org.apache.spark.sql.types.StructType.fromDDL(lineSchema)).as("e"))
+        StructType.fromDDL(lineSchema)).as("e"))
       .select(col("e.event_id").as("event_id"),
         expr("timestamp_micros(e.ts_us)").as("ts"),
         col("e.user_id").as("user_id"), col("e.event_type").as("event_type"),
@@ -100,15 +101,11 @@ object ServingPipeline {
   def runServe(spark: SparkSession, handoffDir: String, serveDir: String,
                checkpointDir: String, ttlSeconds: Long): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(
+    val stream = Drain.parquetSource(spark, StructType.fromDDL(
         "event_id LONG, request_id STRING, priority STRING, timeout_s INT, " +
           "landfire STRING, modis STRING, weather STRING, topography STRING, " +
-          "sources_successful LONG, n_high_risk LONG, ts TIMESTAMP, v LONG, batch_id LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(handoffDir)
+          "sources_successful LONG, n_high_risk LONG, ts TIMESTAMP, v LONG, batch_id LONG"),
+        handoffDir, 1)
       .select(col("event_id").as("key"), col("ts"), col("v"))
       .as[StreamingResultCache.Upstream]
     stream
@@ -119,7 +116,6 @@ object ServingPipeline {
       .writeStream
       .queryName("serving_serve") // named so the scrape listener's rows identify the stage
       .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
       .foreachBatch { (batch: Dataset[StreamingResultCache.Served], _: Long) =>
         batch.write.mode("append").parquet(serveDir)
       }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import EventStreamPipeline.micros
 
 /** The streaming face of the `w10_attribution` batch query — real-time
   * multi-touch attribution: as purchases arrive, each distributes its
@@ -39,9 +40,6 @@ object StreamingAttribution {
   case class CreditRow(p_id: Long, touch_type: String,
                        first_cents: Long, last_cents: Long, linear_cents: Long)
 
-  private def us(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   class Processor extends StatefulProcessor[Long, Event, CreditRow] {
     @transient private var touches: ListState[Touch] = _
 
@@ -52,12 +50,12 @@ object StreamingAttribution {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
                                  timers: TimerValues): Iterator[CreditRow] = {
-      val evs = rows.toArray.sortBy(e => (us(e.ts), e.event_id))
+      val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
       val out = Seq.newBuilder[CreditRow]
       var window = touches.get().toArray.sortBy(t => (t.t_us, t.t_id))
       var dirty = false
       for (e <- evs) {
-        val eUs = us(e.ts)
+        val eUs = micros(e.ts)
         e.event_type match {
           case "click" | "view" =>
             window :+= Touch(eUs, e.event_id, e.event_type)
@@ -92,25 +90,12 @@ object StreamingAttribution {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
-    stream
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[CreditRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[CreditRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
-import org.apache.spark.sql.types._
 
 /** The streaming face of the `a13_slo_burn_rate` batch query — SLO
   * error-budget monitoring that keeps up with the event firehose
@@ -28,11 +27,6 @@ object StreamingBurnRate {
   case class Counts(n: Long, errs: Long)
   case class BucketRow(bucket: Long, n: Long, errs: Long)
 
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
   class Processor extends StatefulProcessor[Long, Ev, BucketRow] {
     @transient private var st: ValueState[Counts] = _
 
@@ -55,26 +49,13 @@ object StreamingBurnRate {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(expr("unix_micros(ts) div 1800000000").as("bucket"),
         (col("event_type") === "error").cast("long").as("is_err"))
       .as[Ev]
-    stream
       .groupByKey(_.bucket)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[BucketRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[BucketRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import EventStreamPipeline.micros
 
 /** The streaming face of the `w8_change_detect` batch query — the
   * SCD/compaction primitive run incrementally: per user, a row is a
@@ -38,10 +39,6 @@ object StreamingChangeDetect {
   case class ChangeRow(event_id: Long, user_id: Long, event_type: String,
                        changed: Boolean)
 
-  /** Event-time in microseconds (ms clock + sub-ms nanos). */
-  private def us(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   class Processor extends StatefulProcessor[Long, Event, ChangeRow] {
     @transient private var st: ValueState[LastType] = _
 
@@ -52,7 +49,7 @@ object StreamingChangeDetect {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
                                  timers: TimerValues): Iterator[ChangeRow] = {
-      val evs = rows.toArray.sortBy(e => (us(e.ts), e.event_id))
+      val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
       if (evs.isEmpty) return Iterator.empty
       var last: String = if (st.exists()) st.get().event_type else null
       val out = evs.map { e =>
@@ -70,25 +67,12 @@ object StreamingChangeDetect {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .as[Event]
-    stream
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[ChangeRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[ChangeRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
-import org.apache.spark.sql.types._
 
 /** The streaming face of the `f12_contract_checks` batch gate — the
   * data-contract checks a 100 TB ingest runs ON THE WAY IN, so a bad
@@ -26,11 +25,6 @@ object StreamingContractGate {
   case class CheckRow(check: String, ok: Long)
   case class Counts(n: Long, violations: Long)
   case class GateRow(check: String, n_checked: Long, n_violations: Long)
-
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
 
   /** The row-local contract checks as (check, ok) pairs — the single
     * source of truth shared by this gate's counters and by composed
@@ -67,26 +61,13 @@ object StreamingContractGate {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(explode(checkPairs).as("c"))
       .select(col("c.check").as("check"), col("c.ok").as("ok"))
       .as[CheckRow]
-    stream
       .groupByKey(_.check)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[GateRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[GateRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

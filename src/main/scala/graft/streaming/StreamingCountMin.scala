@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
-import org.apache.spark.sql.types._
 
 /** The streaming face of the `a11_countmin_sketch` batch query — the
   * Count-Min counter matrix maintained incrementally over the event
@@ -34,11 +33,6 @@ object StreamingCountMin {
   case class Cell(cell: Long) // cell id = j * W + bucket
   case class CellRow(j: Long, b: Long, cnt: Long)
 
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
   class Processor extends StatefulProcessor[Long, Cell, CellRow] {
     @transient private var st: ValueState[Long] = _
 
@@ -61,31 +55,18 @@ object StreamingCountMin {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val cells = (0 until 4).map { j =>
       struct(expr(
         s"${j}L * $W + (((user_id % 1000003L) * ${A(j)}L + ${B(j)}L) % 1000003L) % $W")
         .as("cell"))
     }
-    val stream = spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(explode(array(cells: _*)).as("h"))
       .select(col("h.cell").as("cell"))
       .as[Cell]
-    stream
       .groupByKey(_.cell)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[CellRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[CellRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types._
@@ -58,25 +58,12 @@ object StreamingDrift {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, docSchema, srcDir, 1)
       .select(col("doc_id"), col("n_chars"))
       .as[Doc]
-    stream
       .groupByKey(d => math.min(d.n_chars / 100L, 19L))
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[DriftRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[DriftRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import EventStreamPipeline.micros
 
 /** The streaming face of the `w5_ewma` batch query — the order-SENSITIVE
   * recurrence s₁ = x₁, sₜ = (xₜ + sₜ₋₁)·0.5 folded incrementally in
@@ -28,10 +29,6 @@ object StreamingEwma {
   case class EwmaState(n: Long, ewma: Double)
   case class EwmaRow(user_id: Long, n_events: Long, ewma: Double)
 
-  /** Event-time in microseconds (ms clock + sub-ms nanos). */
-  private def us(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   class Processor extends StatefulProcessor[Long, Event, EwmaRow] {
     @transient private var st: ValueState[EwmaState] = _
 
@@ -42,7 +39,7 @@ object StreamingEwma {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
                                  timers: TimerValues): Iterator[EwmaRow] = {
-      val evs = rows.toArray.sortBy(e => (us(e.ts), e.event_id))
+      val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
       if (evs.isEmpty) return Iterator.empty
       var s = if (st.exists()) st.get() else EwmaState(0L, 0.0)
       for (e <- evs)
@@ -58,25 +55,12 @@ object StreamingEwma {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .as[Event]
-    stream
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[EwmaRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[EwmaRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import EventStreamPipeline.micros
 
 /** SURVEY.md §2.9 depth — the streaming face of `w4_funnel`: a per-user
   * sequential-pattern state machine (view → click-after-view →
@@ -36,9 +37,6 @@ object StreamingFunnel {
 
   case class FunnelSnapshot(user_id: Long, stage: Int, tv_us: Long,
                             tc_us: Long, tp_us: Long)
-
-  private def micros(ts: java.sql.Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
 
   /** Fold a batch of one user's events into the stage machine. Pure
     * function of (key, events, state) — unit-testable without a stream.
@@ -89,25 +87,12 @@ object StreamingFunnel {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String, idleMs: Long = 3600000L): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .as[Event]
-    stream
       .withWatermark("ts", "1 hour")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(advance(idleMs))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[FunnelSnapshot], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming face of the `u4_merge_upsert` operator — foreachBatch
   * CDC apply into a keyed snapshot, the Delta-style MERGE loop built on
@@ -58,10 +58,14 @@ object StreamingMerge {
         (coalesce(col("s_n"), lit(0L)) + coalesce(col("d_n"), lit(0L))).as("n_events"))
   }
 
-  private def versions(snapDir: String): Seq[java.io.File] =
+  /** Version directories as (batch id, dir), in batch-id order. Ordered
+    * and bounded by the NUMBER: `v%05d` names widen past v99999, so name
+    * order would put v100000 before v10001. */
+  private def versions(snapDir: String): Seq[(Long, java.io.File)] =
     Option(new java.io.File(snapDir).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .sortBy(_.getName)
+      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+      .map(f => f.getName.drop(1).toLong -> f)
+      .sortBy(_._1)
 
   /** Latest snapshot version as a DataFrame, or None before the first
     * batch lands. `beforeBatch` bounds the lookup for the apply path: a
@@ -70,30 +74,22 @@ object StreamingMerge {
     * batch-id-keyed rewrite idempotent. */
   def latestSnapshot(spark: SparkSession, snapDir: String,
                      beforeBatch: Long = Long.MaxValue): Option[DataFrame] =
-    versions(snapDir)
-      .filter(_.getName < f"v$beforeBatch%05d")
-      .lastOption.map(f => spark.read.parquet(f.getAbsolutePath))
+    versions(snapDir).filter(_._1 < beforeBatch)
+      .lastOption.map { case (_, f) => spark.read.parquet(f.getAbsolutePath) }
 
   /** Streaming entry: events stream → per-batch reduce → merge with the
     * previous version → write version `v<batchId>`. */
   def run(spark: SparkSession, srcDir: String, snapDir: String,
           checkpointDir: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(srcDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = reduceBatch(batch)
-        val merged = latestSnapshot(spark, snapDir, beforeBatch = batchId) match {
-          case Some(prev) => merge(prev, delta)
-          case None => delta
-        }
-        merged.write.mode("overwrite")
-          .parquet(f"$snapDir/v$batchId%05d")
+    val stream = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
+    Drain(stream, checkpointDir) { (batch, batchId) =>
+      val delta = reduceBatch(batch)
+      val merged = latestSnapshot(spark, snapDir, beforeBatch = batchId) match {
+        case Some(prev) => merge(prev, delta)
+        case None => delta
       }
-      .start()
+      merged.write.mode("overwrite")
+        .parquet(f"$snapDir/v$batchId%05d")
+    }
   }
 }

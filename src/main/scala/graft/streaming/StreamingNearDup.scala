@@ -87,8 +87,7 @@ object StreamingNearDup {
     * → distinct candidate pairs appended to the sink. */
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery =
-    runWithSink(spark, srcDir, checkpointDir,
-      (batch, _) => batch.write.mode("append").parquet(sinkDir))
+    runWithSink(spark, srcDir, checkpointDir, Drain.appendParquet(sinkDir))
 
   /** Same pipeline with a caller-supplied foreachBatch sink — the probe
     * surface: crash-recovery probes inject a sink that writes and then
@@ -100,22 +99,12 @@ object StreamingNearDup {
   def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
                   sink: (Dataset[CandPair], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "2")
-      .parquet(srcDir)
-    bandRows(docs)
+    val docs = Drain.parquetSource(spark, StreamingDrift.docSchema, srcDir, 2)
+    val pairs = bandRows(docs)
       .as[BandRow]
       .groupByKey(r => s"${r.b}|${r.band_key}")
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[CandPair])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch(sink)
-      .start()
+    Drain(pairs, checkpointDir)(sink)
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.types.StructType
+import EventStreamPipeline.micros
 
 /** The streaming face of [[graft.ops.ResultCache]] — the request cache
   * run as a stateful stream instead of a batch fold: per request key, a
@@ -32,10 +34,6 @@ object StreamingResultCache {
   case class Entry(v: Long, cached_at_us: Long)
   case class Served(key: Long, outcome: String, v: Long, cached_at_us: Long)
 
-  /** Event-time in microseconds (ms clock + sub-ms nanos). */
-  private def us(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   class Processor(ttlSeconds: Long, compute: (Long, Long) => Long)
     extends StatefulProcessor[Long, Req, Served] {
     @transient private var st: ValueState[Entry] = _
@@ -47,7 +45,7 @@ object StreamingResultCache {
 
     override def handleInputRows(key: Long, rows: Iterator[Req],
                                  timers: TimerValues): Iterator[Served] = {
-      val probes = rows.map(r => us(r.ts)).toArray
+      val probes = rows.map(r => micros(r.ts)).toArray
       if (probes.isEmpty) return Iterator.empty
       val rts = probes.min // coalesce the batch's requests to one probe
       val cached = if (st.exists()) Some(st.get()) else None
@@ -69,26 +67,16 @@ object StreamingResultCache {
           checkpointDir: String, ttlSeconds: Long,
           compute: (Long, Long) => Long): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema("key LONG, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val served = Drain
+      .parquetSource(spark, StructType.fromDDL("key LONG, ts TIMESTAMP"), srcDir, 1)
       .as[Req]
-    stream
       .groupByKey(_.key)
       .transformWithState(new Processor(ttlSeconds, compute), TimeMode.None(),
         OutputMode.Append(), Encoders.product[Served])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Served], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(served, checkpointDir) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(sinkDir)
+    }
   }
 
   /** The MEMOIZING face: the value arrives ON the row (computed by an
@@ -113,8 +101,8 @@ object StreamingResultCache {
                                  timers: TimerValues): Iterator[Served] = {
       val rs = rows.toArray
       if (rs.isEmpty) return Iterator.empty
-      val first = rs.minBy(r => us(r.ts)) // coalesce within the batch
-      val rts = us(first.ts)
+      val first = rs.minBy(r => micros(r.ts)) // coalesce within the batch
+      val rts = micros(first.ts)
       val cached = if (st.exists()) Some(st.get()) else None
       cached match {
         case Some(e) if rts - e.cached_at_us <= ttlSeconds * 1000000L =>

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import EventStreamPipeline.micros
 
 /** The streaming face of the `w7_retention_cohorts` batch query — the
   * cohort×age retention triangle kept incrementally. Per user, state is
@@ -36,13 +37,10 @@ object StreamingRetention {
   case class RetState(firstDay: Long, mask: Long)
   case class RetRow(user_id: Long, cohort_day: Long, mask: Long)
 
-  private def us(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   /** Epoch day in UTC — matches the batch query's to_date under the
     * engine's UTC session timezone. */
   private def epochDay(t: java.sql.Timestamp): Long =
-    Math.floorDiv(us(t), 86400000000L)
+    Math.floorDiv(micros(t), 86400000000L)
 
   class Processor extends StatefulProcessor[Long, Event, RetRow] {
     @transient private var st: ValueState[RetState] = _
@@ -54,7 +52,7 @@ object StreamingRetention {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
                                  timers: TimerValues): Iterator[RetRow] = {
-      val evs = rows.toArray.sortBy(e => (us(e.ts), e.event_id))
+      val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
       if (evs.isEmpty) return Iterator.empty
       var s = if (st.exists()) st.get() else null
       for (e <- evs) {
@@ -77,8 +75,7 @@ object StreamingRetention {
     * → per-batch per-user snapshots appended to the sink. */
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery =
-    runWithSink(spark, srcDir, checkpointDir,
-      (batch, _) => batch.write.mode("append").parquet(sinkDir))
+    runWithSink(spark, srcDir, checkpointDir, Drain.appendParquet(sinkDir))
 
   /** Same pipeline with a caller-supplied foreachBatch sink — the
     * crash-probe surface (see StreamingNearDup.runWithSink): snapshots
@@ -87,23 +84,12 @@ object StreamingRetention {
   def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
                   sink: (Dataset[RetRow], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"))
       .as[Event]
-    stream
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[RetRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch(sink)
-      .start()
+    Drain(out, checkpointDir)(sink)
   }
 }

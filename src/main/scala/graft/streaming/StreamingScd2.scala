@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
+import EventStreamPipeline.micros
 
 /** The streaming face of the `u5_scd2_history` batch query — SCD Type-2
   * interval construction run incrementally: per user, the OPEN interval
@@ -36,10 +37,6 @@ object StreamingScd2 {
   case class ClosedRow(user_id: Long, version: Int, event_type: String,
                        valid_from_us: Long, valid_to_us: Long)
 
-  /** Event-time in microseconds (ms clock + sub-ms nanos). */
-  private def us(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   class Processor extends StatefulProcessor[Long, Event, ClosedRow] {
     @transient private var st: ValueState[OpenInterval] = _
 
@@ -50,16 +47,16 @@ object StreamingScd2 {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
                                  timers: TimerValues): Iterator[ClosedRow] = {
-      val evs = rows.toArray.sortBy(e => (us(e.ts), e.event_id))
+      val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
       if (evs.isEmpty) return Iterator.empty
       var open: OpenInterval = if (st.exists()) st.get() else null
       val out = scala.collection.mutable.ArrayBuffer.empty[ClosedRow]
       for (e <- evs) {
         if (open == null) {
-          open = OpenInterval(e.event_type, us(e.ts), 1)
+          open = OpenInterval(e.event_type, micros(e.ts), 1)
         } else if (open.event_type != e.event_type) {
-          out += ClosedRow(key, open.version, open.event_type, open.from_us, us(e.ts))
-          open = OpenInterval(e.event_type, us(e.ts), open.version + 1)
+          out += ClosedRow(key, open.version, open.event_type, open.from_us, micros(e.ts))
+          open = OpenInterval(e.event_type, micros(e.ts), open.version + 1)
         } // repeat: the open interval absorbs it
       }
       st.update(open)
@@ -72,25 +69,12 @@ object StreamingScd2 {
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
           checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream
-      .schema(EventStreamPipeline.eventSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
+    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .as[Event]
-    stream
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[ClosedRow])
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[ClosedRow], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

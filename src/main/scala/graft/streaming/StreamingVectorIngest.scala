@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.PqIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming ANN-index maintenance: arriving vectors are PQ-encoded
@@ -59,17 +59,10 @@ object StreamingVectorIngest {
     * write-once segment per micro-batch. */
   def run(spark: SparkSession, srcDir: String, indexDir: String,
           checkpointDir: String, codebook: DataFrame): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(vectorSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        encodeBatch(batch, codebook).write.mode("overwrite")
-          .parquet(f"$indexDir/b$batchId%05d")
-      }
-      .start()
+    val stream = Drain.parquetSource(spark, vectorSchema, srcDir, 1)
+    Drain(stream, checkpointDir) { (batch, batchId) =>
+      encodeBatch(batch, codebook).write.mode("overwrite")
+        .parquet(f"$indexDir/b$batchId%05d")
+    }
   }
 }

@@ -173,4 +173,18 @@ class EventStreamSpec extends SparkSpecBase {
     // Emission correctness is pinned by count > 0 + the exact-match join.
     assert(streamed.count() > 0)
   }
+
+  test("stateful streams use the session's RocksDB state store, whatever ran before") {
+    // the provider is a session setting (GraftSession.builder), not a
+    // per-stream conf mutation: the windowed stream's first offset-log
+    // entry records the provider it ran with
+    val ck = tmp("win_provider_ck")
+    val q = EventStreamPipeline.runWindowed(spark, srcDir, tmp("win_provider_sink"), ck)
+    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
+    val offsets = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(ck, "offsets", "0")), "UTF-8")
+    assert(offsets.contains("\"spark.sql.streaming.stateStore.providerClass\":" +
+      "\"org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider\""),
+      offsets)
+  }
 }

@@ -52,4 +52,12 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(dropped == Seq("k", "=v"))
     assert(GraftSession.parseConf("") == (Nil, Nil))
   }
+
+  test("sessions from the builder start with the RocksDB state-store provider") {
+    // a new session carries only the builder's base settings, none of a
+    // spec's runtime conf.set calls
+    val fresh = SharedSpark.spark.newSession()
+    assert(fresh.conf.get("spark.sql.streaming.stateStore.providerClass") ==
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  }
 }

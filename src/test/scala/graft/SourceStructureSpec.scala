@@ -1,0 +1,41 @@
+package graft
+
+import java.io.File
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the streaming layer's single-policy structure against
+  * copy-paste regrowth: the state-store provider is set once, in the
+  * session builder; the AvailableNow drain lives once, in
+  * `streaming/Drain`; and no stream restates the default append output
+  * mode. Reads the main sources as text (run from the repo root, as
+  * sbt's forked tests are). */
+class SourceStructureSpec extends AnyFunSuite {
+
+  private val root = new File("src/main/scala/graft")
+
+  private lazy val sources: Seq[(String, String)] = {
+    assert(root.isDirectory, s"main sources not found under ${root.getAbsolutePath}")
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    walk(root).map { f =>
+      root.toPath.relativize(f.toPath).toString.replace('\\', '/') ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+  }
+
+  private def filesWith(needle: String): Seq[String] =
+    sources.collect { case (path, text) if text.contains(needle) => path }
+
+  test("the state-store provider is set only in GraftSession.scala") {
+    assert(filesWith("stateStore.providerClass") == Seq("GraftSession.scala"))
+  }
+
+  test("Trigger.AvailableNow appears only in streaming/Drain.scala") {
+    assert(filesWith("Trigger.AvailableNow") == Seq("streaming/Drain.scala"))
+  }
+
+  test("no stream under streaming/ restates the default append output mode") {
+    assert(filesWith(""".outputMode("append")""").filter(_.startsWith("streaming/")).isEmpty)
+  }
+}

@@ -56,4 +56,23 @@ class StreamingMergeSpec extends SparkSpecBase {
     assert(prevTotal < finalTotal,
       "beforeBatch lookup resolved to the final version — a retry would double-apply")
   }
+
+  test("version lookup orders by batch number, not name: v100000 follows v99999") {
+    // one-row marker snapshots; zero-padded names sort wrongly as strings
+    // once they widen past five digits (and against v9223372036854775807)
+    val snap = Files.createTempDirectory("mrg_versions").toString
+    for (v <- Seq("v09999", "v10000", "v92233", "v92234", "v99999", "v100000"))
+      spark.range(1).select(lit(v).as("marker")).write.parquet(s"$snap/$v")
+    def marker(beforeBatch: Long): String =
+      StreamingMerge.latestSnapshot(spark, snap, beforeBatch)
+        .getOrElse(fail(s"no version before $beforeBatch")).head().getString(0)
+
+    assert(marker(Long.MaxValue) == "v100000")
+    assert(StreamingMerge.latestSnapshot(spark, snap).map(_.head().getString(0)) ==
+      Some("v100000"))
+    assert(marker(100000L) == "v99999")
+    assert(marker(92234L) == "v92233")
+    assert(marker(10000L) == "v09999")
+    assert(StreamingMerge.latestSnapshot(spark, snap, beforeBatch = 9999L).isEmpty)
+  }
 }
