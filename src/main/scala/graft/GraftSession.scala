@@ -10,6 +10,17 @@ import org.apache.spark.sql.SparkSession
   * joins/skew re-plan at runtime — the setting that actually matters at
   * 100 TB, where AQE coalesces the post-shuffle partitions the static
   * number gets wrong.
+  *
+  * Two settings keep local file I/O in-process. Without Hadoop's native
+  * library (libhadoop, which Spark's jars do not ship), its `file:`
+  * filesystem runs `chmod` (on every create and mkdirs) and `readlink`
+  * (on every FileContext rename) as child processes: about 200 per
+  * drain of the event stream, most of them one after another on the
+  * stream thread. `fs.file.impl` is [[graft.io.LocalFs]], which sets
+  * permissions through `java.nio`; the streaming checkpoint manager is
+  * Spark's FileSystem-based one, whose rename never resolves links. Rename atomicity on a local disk
+  * is unchanged; its check-then-rename matters only with two writers on
+  * one checkpoint, which Spark already forbids.
   */
 object GraftSession extends org.apache.spark.internal.Logging {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -130,6 +141,10 @@ object GraftSession extends org.apache.spark.internal.Logging {
       // (HDFSBackedStateStore is heap-bound); transformWithState requires it
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // local file I/O without child processes (see the scaladoc above)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .config("spark.ui.enabled", "false")
       .config(scala.collection.immutable.ListMap(overrides: _*))
   }

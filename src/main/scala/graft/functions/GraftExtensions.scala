@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Engine extension point (registered via `spark.sql.extensions`,
   * GraftSession): injects the native SQL functions so `cosine_sim(a, b)`
-  * / `dot_product(a, b)` are available to `expr()`/`spark.sql`
-  * everywhere, and the [[FuseDotProduct]] optimizer rule so the composed
+  * / `dot_product(a, b)` / `validation_mask(lat, lon, buffer_m,
+  * event_id)` are available to `expr()`/`spark.sql` everywhere, and
+  * the [[FuseDotProduct]] optimizer rule so the composed
   * `aggregate(zip_with(...))` dot idiom is rewritten to the fused native
   * kernel — the idiomatic way to ship custom Catalyst expressions and
   * rewrites with a library. */
@@ -47,6 +48,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 1,
           s"cdc_boundaries requires exactly 1 argument, got ${children.size}")
         CdcBoundaries(children(0))
+      }
+    ))
+    ext.injectFunction((
+      FunctionIdentifier("validation_mask"),
+      new ExpressionInfo(classOf[ValidationMask].getName, "validation_mask"),
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(children.size == 4,
+          s"validation_mask requires exactly 4 arguments (lat, lon, buffer_m, event_id), got ${children.size}")
+        ValidationMask(children(0), children(1), children(2), children(3))
       }
     ))
     // Spark ships a native, codegen'd bloom-filter pair

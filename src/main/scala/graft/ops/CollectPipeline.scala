@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.ValidationMask
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +15,13 @@ import org.apache.spark.sql.functions._
   * merges their four records into one AggregatedResponse (U1 + J1).
   * Every source's classification here is a pure function of the
   * request's own row, so the fan-out and the merge collapse into one
-  * row-local projection: no explode, no shuffle, no join — a /collect
-  * batch is one scan plus codegen'd expression work (no UDFs).
+  * row-local projection: no explode, no shuffle, no join. In `run` and
+  * `collectForEvents` a /collect batch is one whole-stage-codegen'd
+  * scan → filter → projection: validation is one native kernel
+  * ([[graft.functions.ValidationMask]]) and classification is plain
+  * column arithmetic, with no UDF and no higher-order function.
+  * `observedRun` also decodes each row's error list, the one
+  * array-valued (interpreted) step.
   *
   * Enrichment kernels are deterministic functions of the coordinates
   * standing in for the WAN fetches (the fetch itself is a source concern
@@ -33,34 +39,26 @@ import org.apache.spark.sql.functions._
   */
 object CollectPipeline {
 
-  /** F1-F4 — accept/reject with accumulated error strings (X27).
-    * The four predicates materialize once as boolean columns behind a
-    * projection boundary (boundsOk is referenced twice in the error
-    * array; inlining it would re-run the compound range checks). The
-    * scratch columns are namespaced `__graft_*` so a caller column of
-    * the same spelling is never clobbered and dropped. */
+  /** F1-F4 — accept/reject with accumulated error strings (X27). One
+    * native kernel ([[graft.functions.ValidationMask]]) evaluates the
+    * four checks once per row into a failure mask: `valid` is the mask
+    * being 0, so a `filter(valid)` pushed down to the scan stays inside
+    * whole-stage codegen, and `errors` is decoded from the mask only
+    * where a caller keeps it. The kernel is the `validation_mask`
+    * function that [[graft.functions.GraftExtensions]] registers in
+    * every session [[graft.GraftSession]] builds. The mask column is
+    * namespaced `__graft_*` so a caller column of the same spelling is
+    * never clobbered and dropped. */
   def validate(requests: DataFrame): DataFrame = {
-    val boundsOk = col("lat").between(-90, 90) && col("lon").between(-180, 180) &&
-      !(col("lat") === 0 && col("lon") === 0)
-    val usOk = (col("lat").between(24.5, 49.5) && col("lon").between(-125, -67)) ||
-      (col("lat").between(54, 71.5) && (col("lon").between(-180, -130) || col("lon").between(170, 180))) ||
-      (col("lat").between(18, 29) && col("lon").between(-178, -154))
-    val bufferOk = col("buffer_m").between(100, 50000)
-    val idOk = col("event_id").isNull ||
-      (length(col("event_id")).between(3, 100) && col("event_id").rlike("^[a-zA-Z0-9_-]+$"))
+    val mask = call_function("validation_mask", col("lat").cast("double"), col("lon").cast("double"),
+      col("buffer_m").cast("double"), col("event_id").cast("string"))
     requests
-      .withColumn("__graft_bounds_ok", boundsOk)
-      .withColumn("__graft_us_ok", usOk)
-      .withColumn("__graft_buffer_ok", bufferOk)
-      .withColumn("__graft_id_ok", idOk)
-      .withColumn("errors", filter(array(
-        when(!col("__graft_bounds_ok"), "invalid coordinates"),
-        when(col("__graft_bounds_ok") && !col("__graft_us_ok"), "outside supported US regions"),
-        when(!col("__graft_buffer_ok"), "buffer out of range"),
-        when(!col("__graft_id_ok"), "invalid event id")
-      ), e => e.isNotNull))
-      .withColumn("valid", size(col("errors")) === 0)
-      .drop("__graft_bounds_ok", "__graft_us_ok", "__graft_buffer_ok", "__graft_id_ok")
+      .withColumn("__graft_mask", mask)
+      .withColumn("errors", filter(array(ValidationMask.errors.zipWithIndex.map { case (e, i) =>
+        when(col("__graft_mask").bitwiseAND(1 << i) =!= 0, e)
+      }: _*), e => e.isNotNull))
+      .withColumn("valid", col("__graft_mask") === 0)
+      .drop("__graft_mask")
   }
 
   /** Deterministic per-source "fetch" kernels — pure functions of the

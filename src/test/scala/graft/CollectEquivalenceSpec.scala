@@ -3,6 +3,7 @@ package graft
 import graft.ops.CollectPipeline
 import graft.streaming.EventStreamPipeline
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,6 +99,36 @@ private object TallCollect {
     pivot(routed, keys).select(Seq(col("request_id"), col("trigger_event_id").as("event_id"),
       col("priority"), col("timeout_s")) ++
       (CollectPipeline.sources ++ Seq("sources_successful", "n_high_risk")).map(col): _*)
+  }
+}
+
+/** `CollectPipeline.validate` as column expressions — the four checks
+  * as boolean columns and the error list as `filter(array(when…))` —
+  * kept here as the reference the native validation kernel must
+  * reproduce, nulls and edges included. */
+private object ColumnValidate {
+  def validate(requests: DataFrame): DataFrame = {
+    val boundsOk = col("lat").between(-90, 90) && col("lon").between(-180, 180) &&
+      !(col("lat") === 0 && col("lon") === 0)
+    val usOk = (col("lat").between(24.5, 49.5) && col("lon").between(-125, -67)) ||
+      (col("lat").between(54, 71.5) && (col("lon").between(-180, -130) || col("lon").between(170, 180))) ||
+      (col("lat").between(18, 29) && col("lon").between(-178, -154))
+    val bufferOk = col("buffer_m").between(100, 50000)
+    val idOk = col("event_id").isNull ||
+      (length(col("event_id")).between(3, 100) && col("event_id").rlike("^[a-zA-Z0-9_-]+$"))
+    requests
+      .withColumn("__graft_bounds_ok", boundsOk)
+      .withColumn("__graft_us_ok", usOk)
+      .withColumn("__graft_buffer_ok", bufferOk)
+      .withColumn("__graft_id_ok", idOk)
+      .withColumn("errors", filter(array(
+        when(!col("__graft_bounds_ok"), "invalid coordinates"),
+        when(col("__graft_bounds_ok") && !col("__graft_us_ok"), "outside supported US regions"),
+        when(!col("__graft_buffer_ok"), "buffer out of range"),
+        when(!col("__graft_id_ok"), "invalid event id")
+      ), e => e.isNotNull))
+      .withColumn("valid", size(col("errors")) === 0)
+      .drop("__graft_bounds_ok", "__graft_us_ok", "__graft_buffer_ok", "__graft_id_ok")
   }
 }
 
@@ -228,5 +259,53 @@ class CollectEquivalenceSpec extends SparkSpecBase {
     assert(got.filter(col("sources_successful") === 1).count() > 0)
     assert(got.filter(col("sources_successful") === 4).count() > 0)
     assert(got.count() < events.count())
+  }
+
+  test("validate's kernel equals the column-expression checks on a null/edge grid, int and double buffers") {
+    // every bound of every `between`, each with its two neighbours, plus
+    // null, NaN, 0.0 and -0.0 and an interior value
+    def edges(bounds: Double*): Seq[Option[Double]] =
+      (bounds.flatMap(b => Seq(math.nextDown(b), b, math.nextUp(b))) ++
+        Seq(Double.NaN, 0.0, -0.0, 40.0)).map(Some(_)) :+ None
+    val lats = edges(-90, 90, 24.5, 49.5, 54, 71.5, 18, 29)
+    val lons = edges(-180, 180, -125, -67, -130, 170, -178, -154, -100)
+    val buffers = Seq(Some(99), Some(100), Some(50000), Some(50001), Some(1000), None)
+    val ids = Seq(None, Some("ab"), Some("abc"), Some("a" * 100), Some("a" * 101), Some("fïre_01"),
+      Some("a;b"), Some("abc\n"), Some("fire_2024-001"))
+    // every coordinate pair, buffer and id cycling; then every buffer x id
+    // at a valid, a null and a (0, 0) coordinate
+    val coordRows = (for (la <- lats; lo <- lons) yield (la, lo)).zipWithIndex.map { case ((la, lo), i) =>
+      (la, lo, buffers(i % buffers.size), ids(i % ids.size))
+    }
+    val fieldRows = for (c <- Seq((Some(34.0), Some(-118.0)), (None, None), (Some(0.0), Some(-0.0)));
+                         b <- buffers; id <- ids) yield (c._1, c._2, b, id)
+    val rows = (coordRows ++ fieldRows).zipWithIndex.map { case ((la, lo, b, id), i) => (s"g$i", la, lo, b, id) }
+    val intBuffers = rows.toDF("request_id", "lat", "lon", "buffer_m", "event_id")
+    val doubleBuffers = intBuffers.withColumn("buffer_m", col("buffer_m").cast("double"))
+    assert(intBuffers.filter(col("lat").isNull && col("lon").isNull && col("buffer_m").isNull &&
+      col("event_id").isNull).count() > 0)
+
+    def check(codegen: Boolean): Unit = Seq(intBuffers, doubleBuffers).foreach { r =>
+      val cols = Seq("request_id", "errors", "valid").map(col)
+      val got = CollectPipeline.validate(r).select(cols: _*)
+      assertSameRows(got, ColumnValidate.validate(r).select(cols: _*))
+      assert(got.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+        .exists(_.toString.contains("validation_mask")) == codegen, got.queryExecution.executedPlan)
+      // every error is reached, and so is a request passing every check
+      assert(got.select(explode(col("errors"))).distinct().count() == 4)
+      assert(got.filter(col("valid")).count() > 0)
+    }
+    def withConf(confs: (String, String)*)(body: => Unit): Unit = {
+      val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+      finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    // a projection over a local Seq is otherwise evaluated (interpreted)
+    // by the optimizer itself
+    val scan = "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    withConf(scan, "spark.sql.codegen.fallback" -> "false")(check(codegen = true))
+    withConf(scan, "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check(codegen = false))
   }
 }

@@ -107,4 +107,37 @@ class CollectPipelineSpec extends SparkSpecBase {
       spark.listenerManager.unregister(listener)
     }
   }
+
+  test("validation stays in whole-stage codegen: every Filter inside a codegen stage, none holding a higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // each FilterExec with whether a codegen stage encloses it (an
+    // InputAdapter ends the enclosing stage)
+    def filters(p: SparkPlan, inStage: Boolean): Seq[(FilterExec, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => filters(a.executedPlan, inStage)
+      case w: WholeStageCodegenExec => filters(w.child, inStage = true)
+      case i: InputAdapter => filters(i.child, inStage = false)
+      case f: FilterExec => (f, inStage) +: filters(f.child, inStage)
+      case other => other.children.flatMap(filters(_, inStage))
+    }
+    // range-generated inputs: a local Seq would be folded into a
+    // LocalRelation by the optimizer, leaving no Filter to inspect
+    val reqs = spark.range(0, 200).select(concat(lit("r"), col("id")).as("request_id"),
+      (lit(20.0) + col("id") * 0.15).as("lat"), (lit(-130.0) + col("id") * 0.3).as("lon"),
+      (col("id") * 300.0).as("buffer_m"), when(col("id") % 5 === 0, lit("x;y")).as("event_id"))
+    val events = spark.range(0, 200).select(col("id").as("event_id"),
+      timestamp_seconds(col("id") + 1700000000L).as("ts"), (col("id") % 97).as("user_id"),
+      element_at(array(lit("error"), lit("signup"), lit("click")), (col("id") % 3 + 1).cast("int"))
+        .as("event_type"), (col("id") * 0.5).as("value"), lit("{}").as("props"))
+    for (df <- Seq(CollectPipeline.run(reqs), graft.streaming.EventStreamPipeline.collectForEvents(events))) {
+      df.collect()
+      val found = filters(df.queryExecution.executedPlan, inStage = false)
+      assert(found.nonEmpty, df.queryExecution.executedPlan.toString)
+      found.foreach { case (f, inStage) =>
+        assert(inStage, s"Filter outside whole-stage codegen:\n${df.queryExecution.executedPlan}")
+        assert(!f.condition.exists(_.isInstanceOf[HigherOrderFunction]), f.condition.sql)
+      }
+    }
+  }
 }

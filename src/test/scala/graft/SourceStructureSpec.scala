@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the streaming layer's single-policy structure against
   * copy-paste regrowth: the state-store provider is set once, in the
-  * session builder; the AvailableNow drain lives once, in
+  * session builder, as are the local filesystem and the streaming
+  * checkpoint file manager; the AvailableNow drain lives once, in
   * `streaming/Drain`; and no stream restates the default append output
   * mode. Reads the main sources as text (run from the repo root, as
   * sbt's forked tests are). */
@@ -37,5 +38,10 @@ class SourceStructureSpec extends AnyFunSuite {
 
   test("no stream under streaming/ restates the default append output mode") {
     assert(filesWith(""".outputMode("append")""").filter(_.startsWith("streaming/")).isEmpty)
+  }
+
+  test("the local filesystem and checkpoint file manager are set only in GraftSession.scala") {
+    assert(filesWith("fs.file.impl") == Seq("GraftSession.scala"))
+    assert(filesWith("checkpointFileManagerClass") == Seq("GraftSession.scala"))
   }
 }
