@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * engine; at 100 TB neither side of lineitem ⋈ orders broadcasts, so
   * shuffle-vs-no-shuffle is exactly the production question. Each
   * variant gets one untimed warm-up then min-of-3, interleaved A/B so
-  * host drift hits both sides equally (the ScaleBench discipline).
+  * host drift hits both sides equally (the `tools/QueryRuns` discipline).
   *
   * Usage: sbt "runMain graft.BucketBench [sfDir] [outFile]"
   */
@@ -33,8 +33,7 @@ object BucketBench {
       else "/root/repo/target/scale/bucket_bench.json"
     val spark = GraftSession.local("graft-bucketbench")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val profile = Profile(spark)
 
     // stage the bucketed tables (first call writes, later calls reuse)
     graft.queries.QueryRegistry.queries("s9_bucketed_join")(spark, dir).count()
@@ -48,18 +47,13 @@ object BucketBench {
         t.lineitem.select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
         t.orders.select(col("o_orderkey"), col("o_orderstatus")))
 
-    def once(mk: () => DataFrame): (Double, Long) = {
-      val mark = tally.settle()
-      val t0 = System.nanoTime()
-      mk().count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      (dt, tally.settle() - mark)
-    }
+    def once(variant: String, mk: () => DataFrame): Profile.Run[Long] =
+      profile.run(s"bucket_bench:$variant")(mk().count())
 
-    once(bucketed); once(plain) // warm-up, untimed
-    val timed = (1 to 3).map(_ => (once(bucketed), once(plain)))
-    val (tb, tp) = (timed.map(_._1._1).min, timed.map(_._2._1).min)
-    val (sb, sp) = (timed.head._1._2, timed.head._2._2)
+    once("bucketed", bucketed); once("plain", plain) // warm-up, untimed
+    val timed = (1 to 3).map(_ => (once("bucketed", bucketed), once("plain", plain)))
+    val (tb, tp) = (timed.map(_._1.wallS).min, timed.map(_._2.wallS).min)
+    val (sb, sp) = (timed.head._1.shuffleWriteBytes, timed.head._2.shuffleWriteBytes)
     val line =
       s"""{"metric":"bucket_bench","dir":"$dir","bucketed_s":$tb,"plain_s":$tp,""" +
         s""""speedup":${tp / tb},"bucketed_shuffle_bytes":$sb,"plain_shuffle_bytes":$sp}"""

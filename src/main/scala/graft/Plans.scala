@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.internal.SQLConf
+
 /** Regenerates PLANS.md: the formatted physical plan of each headline
   * query at the given SF — the plan-shape evidence (pushdown, broadcast
   * choices, partial aggregation, custom operators) reviewed per round.
@@ -124,6 +130,35 @@ object Plans {
     "sql_entry_contract" -> "raw-SQL contract gate: two broadcast anti-joins + four scan censuses, one union"
   )
 
+  /** The whole executed tree in Spark's layout, except that an AQE node
+    * shows only its final plan and a cached relation's plan is printed
+    * under its first scan only: a chain of caches that each read the one
+    * before (`e2e_result_cache`) otherwise prints its plans exponentially
+    * often, 4.8 MB for that one query at sf0.001. */
+  private def tree(root: SparkPlan): String = {
+    val shown = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val sb = new StringBuilder
+    def go(node: QueryPlan[_], star: String, lead: String, indent: String): Unit = node match {
+      case w: WholeStageCodegenExec => go(w.child, s"*(${w.codegenStageId}) ", lead, indent)
+      case i: InputAdapter          => go(i.child, "", lead, indent)
+      case _ =>
+        sb ++= lead ++= star ++= node.simpleString(SQLConf.get.maxToStringFields) += '\n'
+        val (kids, kidStar) = node match {
+          case a: AdaptiveSparkPlanExec => (Seq(a.executedPlan), "")
+          case q: QueryStageExec        => (Seq(q.plan), "")
+          case m: InMemoryTableScanExec => (Seq(m.relation), "")
+          case r: InMemoryRelation      => (Seq(r.cachedPlan).filter(shown.add), "")
+          case p                        => (p.children.collect { case c: QueryPlan[_] => c }, star)
+        }
+        kids.zipWithIndex.foreach { case (k, i) =>
+          val last = i == kids.size - 1
+          go(k, kidStar, indent + (if (last) "+- " else ":- "), indent + (if (last) "   " else ":  "))
+        }
+    }
+    go(root, "", "", "")
+    sb.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
@@ -135,7 +170,7 @@ object Plans {
       val df = queries.QueryRegistry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE so the printed plan is the executed one
       sb.append(s"\n## $name — $why\n\n```\n")
-      sb.append(df.queryExecution.executedPlan.toString.take(4000))
+      sb.append(tree(df.queryExecution.executedPlan))
       sb.append("\n```\n")
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), sb.toString)

@@ -33,14 +33,18 @@ final case class Tables(spark: SparkSession, dir: String) {
     *    the cast is deterministic and matches the DuckDB oracle).
     *  - plain TIMESTAMP: pass through.
     */
-  def events: DataFrame = {
-    val raw = table("events")
+  def events: DataFrame = Tables.normalizeTs(table("events"))
+  def documents: DataFrame  = table("documents")
+  def embeddings: DataFrame = table("embeddings")
+}
+
+object Tables {
+  /** `raw` events with `ts` as a session-TZ `TimestampType`, whichever of
+    * the three encodings it was read in (see [[Tables.events]]). */
+  private[graft] def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
       case _                => raw
     }
-  }
-  def documents: DataFrame  = table("documents")
-  def embeddings: DataFrame = table("embeddings")
 }

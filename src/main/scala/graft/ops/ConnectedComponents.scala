@@ -59,10 +59,9 @@ object ConnectedComponents {
       df.join(j, col("lbl") === col("jnode"), "left")
         .select(col("node"), coalesce(col("jlbl"), col("lbl")).as("lbl"))
     }
-    // every round's pre-jump label table, cached so the jump self-join
-    // reads ONE materialization; released in the epilogue once the final
-    // labels are checkpoint-backed
-    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // the live round's pre-jump label table, cached so the jump
+    // self-join reads ONE materialization
+    var steppedM: DataFrame = null
     try {
       // Lazy checkpoints: each round's convergence-sum action is the one
       // job that both materializes the round's labels and measures them —
@@ -97,13 +96,17 @@ object ConnectedComponents {
         // re-aliased attributes. The cache halves the per-round work;
         // block-level locking makes the concurrent first scans fill it
         // once.
-        val steppedM = stepped.cache()
-        roundCaches += steppedM
+        steppedM = stepped.cache()
         lbl = jump(steppedM).localCheckpoint(false)
         // sum over an empty frame is null: an empty node set is trivially
         // converged, not an NPE
         val s = Option(lbl.agg(sum(col("lbl")).cast("decimal(38,0)")).head().getDecimal(0))
           .map(BigDecimal(_))
+        // the sum job checkpointed this round's labels, so nothing reads
+        // the pre-jump cache again: releasing it here keeps at most one
+        // round's cache alive
+        steppedM.unpersist(blocking = false)
+        steppedM = null
         converged = s.isEmpty || prevSum == s
         prevSum = s
         round += 1
@@ -115,9 +118,8 @@ object ConnectedComponents {
       Result(lbl, round, converged)
     } finally {
       sym.unpersist()
-      // every round's labels are checkpoint-backed by its convergence
-      // action, so the pre-jump caches can be dropped with the edges
-      roundCaches.foreach(_.unpersist(blocking = false))
+      // a round that threw before its release still holds its cache
+      if (steppedM != null) steppedM.unpersist(blocking = false)
     }
   }
 }

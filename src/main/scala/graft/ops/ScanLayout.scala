@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scale-adaptive widening for UNSPLITTABLE scans (optimization guide
   * §2.5 "input skew: one huge unsplittable file … repartition
@@ -24,15 +27,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * that — on a real estate the inputs are splittable, the scan already
   * carries ≥ cores partitions, and this is the identity.
   *
-  * CONTRACT: pass scan-level or already-materialized frames ONLY. The
-  * partition probe converts the frame to an RDD, and under AQE that
-  * conversion (`getFinalPhysicalPlan`) EAGERLY EXECUTES any upstream
-  * shuffle stages the frame contains — on a raw scan or a checkpointed
-  * frame it runs no job, on a frame with exchanges it runs them all
-  * (the r12 ADVICE footgun, now enforced by this doc + the probe
-  * cache). Probe results are memoized per (session, canonical plan), so
-  * repeated widens of the same table — 16 call sites, many hit per
-  * bench run — pay the physical-plan conversion once per session.
+  * Precondition, checked: `df`'s physical plan holds no exchange. The
+  * partition probe turns the frame into an RDD, and under AQE that
+  * (`getFinalPhysicalPlan`) EAGERLY EXECUTES every upstream shuffle or
+  * broadcast stage. On a raw scan or a checkpointed frame the probe
+  * runs no job; any other frame is rejected before one runs. The probe is cheap, so it runs on every
+  * call: nothing is memoized across calls or sessions.
   *
   * NOT applied where the round-12 A/B measured it as a loss: payload
   * rows whose downstream per-row work is a single cheap pass (the
@@ -42,23 +42,23 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object ScanLayout {
 
-  /** Partition-count memo keyed on (session identity, canonical-plan
-    * semantic hash). A hash collision could only return a stale COUNT —
-    * a widen mis-decision, never a correctness issue — and the map stays
-    * tiny (one entry per distinct widened scan per session). */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Int]()
-
   /** `df` hash-partitioned `defaultParallelism` ways on `keys` when the
     * current layout has fewer partitions; `df` unchanged otherwise.
     * Key-based (not round-robin): no sort-before-repartition pass, and
-    * deterministic row placement under task retry. */
+    * deterministic row placement under task retry.
+    * @throws IllegalArgumentException if `df`'s plan holds an exchange */
   def widenByKey(df: DataFrame, keys: Column*): DataFrame = {
+    val plan = df.queryExecution.executedPlan
+    require(!hasExchange(plan),
+      s"ScanLayout.widenByKey takes a scan or a checkpointed frame; this plan has an exchange:\n$plan")
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val cacheKey = (System.identityHashCode(df.sparkSession),
-      df.queryExecution.logical.canonicalized.semanticHash())
-    val n = probeCache.computeIfAbsent(cacheKey, _ => df.rdd.getNumPartitions)
-    if (n < target) df.repartition(target, keys: _*)
+    if (df.queryExecution.toRdd.getNumPartitions < target) df.repartition(target, keys: _*)
     else df
   }
+
+  private def hasExchange(plan: SparkPlan): Boolean =
+    plan.collectWithSubqueries {
+      case _: Exchange              => true
+      case a: AdaptiveSparkPlanExec => hasExchange(a.executedPlan)
+    }.contains(true)
 }

@@ -444,14 +444,10 @@ object TextQueries {
     * plans flat (a lazily-chained broadcast-argmax would nest the
     * previous round's whole plan under each new top-1 subtree —
     * exponential re-execution). */
-  /** Number of BPE trainer rounds — the ONE knob for both the engine
-    * loops and the generated oracle CTE chains, so any round count
-    * stays cross-engine green (`SPARK_GRAFT_BPE_ROUNDS=5 tools/gate.sh`
-    * proves it; default 3 keeps bench numbers comparable across
-    * rounds). Verify dumps the oracle from the same JVM, so the env
-    * override reaches both engines in lock-step. */
-  private[graft] val BpeRounds: Int =
-    sys.env.get("SPARK_GRAFT_BPE_ROUNDS").map(_.toInt).getOrElse(3)
+  /** Number of BPE trainer rounds, shared by the engine loops and the
+    * generated oracle CTE chains so the two cannot drift apart; 3 keeps
+    * bench numbers comparable across rounds. */
+  private[graft] val BpeRounds: Int = 3
 
   /** The oracle's per-round CTE chain (tokenize → pair census → argmax
     * merge → re-segmented corpus), generated instead of hand-unrolled so

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
 import graft.ops.{ConnectedComponents, LabelProp}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *    them (LPA is defined on a symmetric edge set).
   *
   * One untimed warm-up, then three timed runs, each under its own job
-  * group and each starting with no label tables of earlier runs
-  * persisted. Prints one JSON line: every run's seconds, their minimum,
-  * the rounds and convergence of `cc`, and the component-size census
+  * group ([[graft.Profile.run]]) and each starting with no label tables
+  * of earlier runs persisted. Prints one JSON line: every run's seconds
+  * and job count, the minimum seconds, the rounds and convergence of
+  * `cc`, and the component-size census
   * (`[size, components of that size]`, sorted by size) with whether
   * every run produced the same one. An A/B of an operator change is
   * this main run on both commits, censuses diffed.
@@ -37,6 +38,7 @@ object GraphScale {
     val lpaRounds = if (args.length > 3) args(3).toInt else 3
     val spark = GraftSession.local(s"graft-graph-scale-$op")
     val sc = spark.sparkContext
+    val profile = Profile(spark)
 
     val directed = spark.range(m)
       .select(
@@ -53,37 +55,34 @@ object GraphScale {
         .groupBy(col("sz")).agg(count(lit(1)).as("k"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
 
-    // one run: (seconds, census, cc's (rounds, converged)); the census
-    // is taken after the clock stops
-    def run(tag: String): (Double, Seq[(Long, Long)], Option[(Int, Boolean)]) = {
+    // one run: its profile (seconds, jobs; the value is the labels and
+    // cc's (rounds, converged)) and the census, taken after the clock stops
+    def run(tag: String): (Profile.Run[(DataFrame, Option[(Int, Boolean)])], Seq[(Long, Long)]) = {
       sc.getPersistentRDDs.collect { case (id, rdd) if !edgeRdds(id) => rdd }
         .foreach(_.unpersist(blocking = true))
-      sc.setJobGroup(s"graph_scale_${op}_$tag", s"GraphScale $op $tag")
-      val t0 = System.nanoTime()
-      val (labels, cc) =
+      val p = profile.run(s"graph_scale_${op}_$tag") {
         if (op == "cc") {
           val r = ConnectedComponents.resolveChecked(edges)
           (r.labels, Some((r.rounds, r.converged)))
         } else (LabelProp.propagateShuffle(edges, lpaRounds), None)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val c = census(labels)
-      sc.clearJobGroup()
-      System.err.println(f"GraphScale $op $tag%-7s $secs%8.3f s")
-      (secs, c, cc)
+      }
+      System.err.println(f"GraphScale $op $tag%-7s ${p.wallS}%8.3f s  jobs=${p.jobs}%d")
+      (p, census(p.value._1))
     }
 
     val warmup = run("warmup")
     val timed = (1 to 3).map(i => run(s"run$i"))
     val all = warmup +: timed
     val census0 = warmup._2
-    val ccFields = timed.last._3.fold("") { case (rounds, converged) =>
+    val ccFields = timed.last._1.value._2.fold("") { case (rounds, converged) =>
       s""","rounds":$rounds,"converged":$converged"""
     }
     val lpaFields = if (op == "lpa") s""","lpa_rounds":$lpaRounds""" else ""
     println(
       s"""{"tool":"graph_scale","op":"$op","n_nodes":$n,"m_edges":$m$lpaFields,""" +
-        s""""cores":${sc.defaultParallelism},"warmup_s":${warmup._1},""" +
-        s""""runs_s":[${timed.map(_._1).mkString(",")}],"min_s":${timed.map(_._1).min}$ccFields,""" +
+        s""""cores":${sc.defaultParallelism},"warmup_s":${warmup._1.wallS},""" +
+        s""""runs_s":[${timed.map(_._1.wallS).mkString(",")}],"min_s":${timed.map(_._1.wallS).min}$ccFields,""" +
+        s""""runs_jobs":[${timed.map(_._1.jobs).mkString(",")}],""" +
         s""""census_identical":${all.forall(_._2 == census0)},""" +
         s""""census":[${census0.map { case (sz, k) => s"[$sz,$k]" }.mkString(",")}]}""")
     spark.stop()

@@ -4,7 +4,6 @@ import graft.GraftSession
 import graft.streaming.StreamingRetention
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Estate-scale RocksDB leg for a ValueState-family operator (VERDICT
   * r11 next #5): runs the transformWithState retention triangle
@@ -27,32 +26,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object RetentionScaleProbe {
 
-  private def progressRows(q: StreamingQuery): Seq[String] =
-    q.recentProgress.toSeq.filter(_.numInputRows > 0).map { p =>
-      val so = p.stateOperators.headOption
-      val rocksBytes = so.map(_.customMetrics.getOrDefault("rocksdbSstFileSize", -1L))
-        .getOrElse(-1L)
-      s"""{"batch":${p.batchId},"input_rows":${p.numInputRows},""" +
-        s""""trigger_ms":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +
-        s""""state_rows":${so.map(_.numRowsTotal).getOrElse(-1L)},""" +
-        s""""rocksdb_sst_bytes":$rocksBytes}"""
-    }
-
   /** Stage the estate as one single-file parquet per activity day, file
     * names and mtimes ascending in day order so the file stream source
     * delivers days in order. */
   private def stageByDay(spark: SparkSession, eventsDir: String, stageDir: String): Int = {
-    // same ts normalization as Tables.events (driver fixtures store
-    // nanos-as-long under the session's legacy flag; estates store µs)
-    val raw = spark.read.parquet(eventsDir)
-    val normalized = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-    val ev = normalized.withColumn("day", expr("unix_micros(ts) div 86400000000"))
+    val ev = graft.Tables.normalizeTs(spark.read.parquet(eventsDir))
+      .withColumn("day", expr("unix_micros(ts) div 86400000000"))
     val days = ev.select(col("day")).distinct().orderBy(col("day"))
       .collect().map(_.getLong(0)) // bounded: the fixture horizon is <= 64 days
     val base = java.nio.file.Paths.get(stageDir)
@@ -114,23 +93,8 @@ object RetentionScaleProbe {
     val stage = s"$work/staged"; val sink = s"$work/snaps"; val ck = s"$work/ck"
     val nDays = stageByDay(spark, eventsDir, stage)
 
-    // ---- phase 1: crash with an uncommitted batch ----------------------
-    val crashedAt = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val q1 = StreamingRetention.runWithSink(spark, stage, ck, (batch, id) => {
-      batch.write.mode("append").parquet(sink)
-      if (id >= 5 && crashedAt.compareAndSet(-1L, id))
-        throw new RuntimeException(
-          s"graft injected post-write crash at batch $id (sink written, offset uncommitted)")
-    })
-    val crashSurfaced =
-      try { q1.awaitTermination(); false }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
-    val p1 = progressRows(q1)
-
-    // ---- phase 2: restart from the checkpoint and drain -----------------
-    val q2 = StreamingRetention.run(spark, stage, sink, ck)
-    q2.awaitTermination()
-    val p2 = progressRows(q2)
+    val (crashedAt, crashSurfaced, p1, p2) = StreamScaleProbe.crashThenDrain[StreamingRetention.RetRow](
+      sink, 5)(StreamingRetention.runWithSink(spark, stage, ck, _))(StreamingRetention.run(spark, stage, sink, ck))
 
     // ---- correctness: streamed triangle == batch triangle ---------------
     val streamed = triangleFromSnapshots(spark.read.parquet(sink)).cache()
@@ -141,15 +105,11 @@ object RetentionScaleProbe {
     val nEvents = spark.read.parquet(stage).count()
     val ok = crashSurfaced && missing == 0 && extra == 0
 
-    val ckBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(ck))
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(java.nio.file.Files.size(_)).sum()
-
     val line = s"""{"probe":"stream_retention","events_dir":"$eventsDir",""" +
       s""""n_events":$nEvents,"n_users":$nUsers,"n_day_files":$nDays,""" +
-      s""""crashed_at_batch":${crashedAt.get()},"crash_surfaced":$crashSurfaced,""" +
+      s""""crashed_at_batch":$crashedAt,"crash_surfaced":$crashSurfaced,""" +
       s""""triangle_rows":${expected.count()},"missing":$missing,"extra":$extra,""" +
-      s""""match":$ok,"checkpoint_bytes":$ckBytes,""" +
+      s""""match":$ok,"checkpoint_bytes":${StreamScaleProbe.dirBytes(ck)},""" +
       s""""progress_phase1":[${p1.mkString(",")}],""" +
       s""""progress_phase2":[${p2.mkString(",")}]}"""
     println(line)

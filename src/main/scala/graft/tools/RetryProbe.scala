@@ -31,13 +31,6 @@ object RetryProbe {
         sum(col("l_extendedprice").cast("decimal(18,2)")).as("sum_price"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
-  private def resultHash(df: DataFrame): (Long, String) = {
-    val rows = df.collect()
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update(r.toString.getBytes("UTF-8")))
-    (rows.length.toLong, md.digest().map("%02x".format(_)).mkString)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val master = GraftSession.master
@@ -56,12 +49,12 @@ object RetryProbe {
       .select(col("l_returnflag"), col("l_linestatus"),
         col("l_quantity"), col("l_extendedprice"))
 
-    val (nClean, clean) = resultHash(probeQuery(scan()))
-    val (nThrow, thrown) = resultHash(probeQuery(
+    val (nClean, clean) = QueryRuns.fingerprint(probeQuery(scan()))
+    val (nThrow, thrown) = QueryRuns.fingerprint(probeQuery(
       FaultInjection.throwOnFirstAttempt(scan())))
     val killLeg: Option[(Long, String)] =
       if (master.startsWith("local-cluster"))
-        Some(resultHash(probeQuery(FaultInjection.killExecutorOnFirstAttempt(scan()))))
+        Some(QueryRuns.fingerprint(probeQuery(FaultInjection.killExecutorOnFirstAttempt(scan()))))
       else None
 
     val throwMatch = nThrow == nClean && thrown == clean

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.streaming.StreamingNearDup
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,7 +24,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamScaleProbe {
 
-  private def progressRows(q: StreamingQuery): Seq[String] =
+  /** One JSON object per progress event of `q` that read input: batch,
+    * rows, trigger time and the first state operator's rows and RocksDB
+    * SST bytes (-1 where absent). */
+  private[tools] def progressRows(q: StreamingQuery): Seq[String] =
     q.recentProgress.toSeq.filter(_.numInputRows > 0).map { p =>
       val so = p.stateOperators.headOption
       val rocksBytes = so.map(_.customMetrics.getOrDefault("rocksdbSstFileSize", -1L))
@@ -33,6 +37,39 @@ object StreamScaleProbe {
         s""""state_rows":${so.map(_.numRowsTotal).getOrElse(-1L)},""" +
         s""""rocksdb_sst_bytes":$rocksBytes}"""
     }
+
+  /** The crash drill both stream probes run. The first run's sink
+    * appends each batch to `sink` and then throws on the first batch
+    * with id >= `crashFrom`: that batch's output lands but its offset
+    * commit never does, so the query dies with a genuinely UNCOMMITTED
+    * batch (not a graceful stop()'s clean commit). `restart` then runs
+    * from the same checkpoint and drains, replaying that batch against
+    * the version-restored RocksDB state. foreachBatch is at-least-once,
+    * so the replay appends the batch again; each probe's check absorbs
+    * that. Returns the crashed batch id, whether the crash surfaced as a
+    * failed query, and both runs' progress rows. */
+  private[tools] def crashThenDrain[T](sink: String, crashFrom: Long)(
+      crashing: ((Dataset[T], Long) => Unit) => StreamingQuery)(
+      restart: => StreamingQuery): (Long, Boolean, Seq[String], Seq[String]) = {
+    val crashedAt = new java.util.concurrent.atomic.AtomicLong(-1L) // set on the stream thread
+    val q1 = crashing { (batch, id) =>
+      batch.write.mode("append").parquet(sink)
+      if (id >= crashFrom && crashedAt.compareAndSet(-1L, id))
+        throw new RuntimeException(
+          s"graft injected post-write crash at batch $id (sink written, offset uncommitted)")
+    }
+    val surfaced =
+      try { q1.awaitTermination(); false }
+      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
+    val q2 = restart
+    q2.awaitTermination() // AvailableNow: terminates when caught up
+    (crashedAt.get(), surfaced, progressRows(q1), progressRows(q2))
+  }
+
+  /** Total bytes of the regular files under `dir`. */
+  private[tools] def dirBytes(dir: String): Long =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
 
   def main(args: Array[String]): Unit = {
     val docsDir = if (args.length > 0) args(0)
@@ -45,35 +82,8 @@ object StreamScaleProbe {
     val work = java.nio.file.Files.createTempDirectory("stream_probe").toString
     val sink = s"$work/pairs"; val ck = s"$work/ck"
 
-    // ---- phase 1: CRASH the stream with an uncommitted batch -----------
-    // The sink writes its parquet output and then throws on the first
-    // batch with id >= 3 — the batch's side effects land but its offset
-    // commit never happens, so the query dies with a genuinely
-    // UNCOMMITTED batch (not a graceful stop()'s clean commit) and the
-    // restart must replay it. foreachBatch is at-least-once by contract:
-    // the replay double-appends that batch's pairs, which the
-    // distinct-on-read below absorbs — and the raw-vs-distinct sink row
-    // counts recorded in the artifact are the visible proof the replay
-    // actually happened.
-    val crashedAt = new java.util.concurrent.atomic.AtomicLong(-1L) // set on the stream thread, read on main
-    val q1 = StreamingNearDup.runWithSink(spark, docsDir, ck, (batch, id) => {
-      batch.write.mode("append").parquet(sink)
-      if (id >= 3 && crashedAt.compareAndSet(-1L, id))
-        throw new RuntimeException(
-          s"graft injected post-write crash at batch $id (sink written, offset uncommitted)")
-    })
-    val crashSurfaced =
-      try { q1.awaitTermination(); false }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
-    val p1 = progressRows(q1)
-    val killedAfter = p1.size
-
-    // ---- phase 2: restart from the checkpoint and drain ----------------
-    // the replayed batch re-runs through transformWithState against the
-    // RocksDB state RESTORED to the pre-crash-batch version
-    val q2 = StreamingNearDup.run(spark, docsDir, sink, ck)
-    q2.awaitTermination() // AvailableNow: terminates when caught up
-    val p2 = progressRows(q2)
+    val (crashedAt, crashSurfaced, p1, p2) = crashThenDrain[StreamingNearDup.CandPair](sink, 3)(
+      StreamingNearDup.runWithSink(spark, docsDir, ck, _))(StreamingNearDup.run(spark, docsDir, sink, ck))
 
     // ---- correctness: drained pairs == batch LSH candidate set ---------
     val docs = spark.read.parquet(docsDir)
@@ -97,17 +107,13 @@ object StreamScaleProbe {
     // unless the replayed batch emitted zero pairs
     val ok = capOk && missing == 0 && extra == 0 && crashSurfaced
 
-    val ckBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(ck))
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(java.nio.file.Files.size(_)).sum()
-
     val line = s"""{"probe":"stream_state","docs_dir":"$docsDir",""" +
       s""""n_docs":${docs.count()},"max_bucket":$maxBucket,"cap_ok":$capOk,""" +
-      s""""killed_after_batches":$killedAfter,"crashed_at_batch":${crashedAt.get()},""" +
+      s""""killed_after_batches":${p1.size},"crashed_at_batch":$crashedAt,""" +
       s""""crash_surfaced":$crashSurfaced,"raw_sink_rows":$nRaw,""" +
       s""""expected_pairs":$nExpected,"streamed_pairs":$nStreamed,""" +
       s""""missing":$missing,"extra":$extra,"match":$ok,""" +
-      s""""checkpoint_bytes":$ckBytes,""" +
+      s""""checkpoint_bytes":${dirBytes(ck)},""" +
       s""""progress_phase1":[${p1.mkString(",")}],""" +
       s""""progress_phase2":[${p2.mkString(",")}]}"""
     println(line)

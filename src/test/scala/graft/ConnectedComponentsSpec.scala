@@ -95,4 +95,26 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       assert(labelsOf(edges) == unionFind(edges))
     }
   }
+
+  test("at most one round cache besides the edges is persisted at any job start") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a cache()'s RDD is named after its plan; a localCheckpoint's has no name
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val cached = sc.getPersistentRDDs.count { case (id, r) => !before(id) && r.name != null }
+        peak.accumulateAndGet(cached, math.max(_, _))
+      }
+    }
+    sc.addSparkListener(listener)
+    val r = try {
+      ConnectedComponents.resolveChecked((0L until 15L).map(i => (i, i + 1)).toDF("src", "dst"))
+    } finally {
+      org.apache.spark.sql.graftbridge.PlanBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(r.converged && r.rounds >= 3, s"the chain should need >= 3 rounds, used ${r.rounds}")
+    assert(peak.get() <= 2, s"${peak.get()} caches (edges included) were held at one job start")
+  }
 }

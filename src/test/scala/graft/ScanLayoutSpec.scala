@@ -28,8 +28,37 @@ class ScanLayoutSpec extends SparkSpecBase {
 
   test("identity when the layout already has >= defaultParallelism partitions") {
     val n = spark.sparkContext.defaultParallelism
-    val df = (1 to 100).map(i => (i.toLong, i)).toDF("k", "v").repartition(n + 1)
+    // checkpointed: widenByKey rejects a frame that still holds an exchange
+    val df = (1 to 100).map(i => (i.toLong, i)).toDF("k", "v").repartition(n + 1).localCheckpoint()
     val out = ScanLayout.widenByKey(df, col("k"))
     assert(out eq df) // the very same frame — no repartition node added
+  }
+
+  private def parquetScan() = {
+    val dir = java.nio.file.Files.createTempDirectory("scan_layout").toString
+    (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1)
+      .write.parquet(s"$dir/t.parquet")
+    spark.read.parquet(s"$dir/t.parquet")
+  }
+
+  test("widening a raw parquet scan runs no job") {
+    val scan = parquetScan()
+    val profile = Profile(spark)
+    try {
+      val widened = profile.run("scan-layout-spec-widen")(ScanLayout.widenByKey(scan, col("k")))
+      assert(widened.jobs == 0, s"the partition probe ran ${widened.jobs} jobs")
+      assert(widened.value.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    } finally profile.close()
+  }
+
+  test("a frame with an exchange is rejected before any job runs") {
+    val grouped = parquetScan().groupBy(col("k")).agg(count(lit(1)).as("n"))
+    val profile = Profile(spark)
+    try {
+      val rejected = profile.run("scan-layout-spec-reject") {
+        intercept[IllegalArgumentException](ScanLayout.widenByKey(grouped, col("k")))
+      }
+      assert(rejected.jobs == 0, s"the rejected probe ran ${rejected.jobs} jobs")
+    } finally profile.close()
   }
 }

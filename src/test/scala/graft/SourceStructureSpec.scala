@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * copy-paste regrowth: the state-store provider is set once, in the
   * session builder, as are the local filesystem and the streaming
   * checkpoint file manager; the AvailableNow drain lives once, in
-  * `streaming/Drain`; and no stream restates the default append output
-  * mode. Reads the main sources as text (run from the repo root, as
+  * `streaming/Drain`; no stream restates the default append output
+  * mode; and `graft.Profile` is the one Spark listener. Reads the main sources as text (run from the repo root, as
   * sbt's forked tests are). */
 class SourceStructureSpec extends AnyFunSuite {
 
@@ -43,5 +43,9 @@ class SourceStructureSpec extends AnyFunSuite {
   test("the local filesystem and checkpoint file manager are set only in GraftSession.scala") {
     assert(filesWith("fs.file.impl") == Seq("GraftSession.scala"))
     assert(filesWith("checkpointFileManagerClass") == Seq("GraftSession.scala"))
+  }
+
+  test("the only SparkListener registered in the main sources is Profile's") {
+    assert(filesWith("addSparkListener") == Seq("Profile.scala"))
   }
 }
