@@ -46,11 +46,9 @@ object GraftSession extends org.apache.spark.internal.Logging {
     * `spark.executor.memory` (spark-submit --conf lands in system
     * properties) or SPARK_EXECUTOR_MEMORY; under in-process local[N]
     * masters the executors share the driver heap, so Runtime.maxMemory
-    * is the honest input. SPARK_GRAFT_BROADCAST_MAX (bytes) remains the
-    * manual override. */
-  def broadcastMax: String =
-    sys.env.getOrElse("SPARK_GRAFT_BROADCAST_MAX",
-      derivedBroadcastMax(executorMemoryBytes, master).toString)
+    * is the honest input. To override it, set
+    * `SPARK_GRAFT_CONF="spark.sql.autoBroadcastJoinThreshold=<bytes>"`. */
+  def broadcastMax: String = derivedBroadcastMax(executorMemoryBytes, master).toString
 
   /** The derivation, pure so GraftSessionSpec can pin it:
     * min(64 MB, executor heap / 384), floored at 1 MB so a tiny-heap

@@ -92,7 +92,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }
     ))
     ext.injectOptimizerRule(_ => FuseDotProduct)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteRankFilterToTopK)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
 }

@@ -171,9 +171,9 @@ object CollectPipeline {
     * message (rejects carry the X27-formatted error list), error count,
     * and the per-request success metrics. The returned frame also
     * carries a real Spark `observe()` aggregate
-    * (n_requests / n_valid / n_high_risk_total), so a
-    * QueryExecutionListener receives the run-level census from the SAME
-    * job that computes the rows — the engine-native form of the
+    * (n_requests / n_valid / n_high_risk_total), so the run's
+    * `queryExecution.observedMetrics` holds the run-level census from
+    * the SAME job that computes the rows — the engine-native form of the
     * reference's log aggregation, with no second pass over the data
     * (proven in CollectPipelineSpec). The whole envelope is one
     * projection over [[validate]]'s rows — no join back on

@@ -1,137 +1,45 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.Profile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The engine-side `/metrics` scrape surface — the analog of the
   * reference's Prometheus scrape config over every container
-  * (`monitoring/prometheus.yml:15-23`, `/metrics` path): a
-  * [[QueryExecutionListener]] that turns each completed query execution
-  * into one machine-readable metrics row (label, output rows, wall
-  * time, shuffled bytes) that a scraper polls as a table.
-  *
-  * The row values come from the ENGINE's own instrumentation, not from
-  * the driver re-counting results: output rows are read from the
-  * executed plan's `numOutputRows` SQLMetric (topmost metered node —
-  * the final aggregate for an agg query), shuffled bytes from the sum
-  * of every shuffle exchange's `dataSize` metric, wall time from the
-  * listener's `durationNs`. Correlation between action and listener
-  * event is by a label column planted in the plan itself (an
-  * `Alias(Literal(label))` the listener extracts from `qe.analyzed`) —
-  * correlation by arrival order or thread-locals is racy because the
-  * ExecutionListenerBus delivers asynchronously on the listener-bus
-  * thread.
-  *
-  * AQE-proof: the plan walk descends through `AdaptiveSparkPlanExec`
-  * (reading the FINALIZED adaptive plan — after the action completes,
-  * `executedPlan` is the re-optimized final tree) and through
-  * `QueryStageExec` wrappers (whose materialized exchanges AQE hides
-  * behind leaf nodes), so the scrape runs under the production default
-  * `spark.sql.adaptive.enabled=true` with no conf toggling.
-  *
-  * Execution is driven by a NOOP SINK write, not `collect()`: a metrics
-  * scraper must never pull the scraped query's result rows into the
-  * driver (a large result would OOM the driver for a surface that only
-  * reads SQLMetrics). The noop write executes the full plan on the
-  * executors and discards rows at the sink.
-  *
-  * Scale shape: the listener is driver-side constant work per QUERY
-  * (not per row) — the same cost model as a Prometheus exporter. The
-  * scrape table is |queries| rows.
+  * (`monitoring/prometheus.yml:15-23`): each labeled query runs to
+  * completion under [[graft.Profile.run]], its label as the job tag, and
+  * becomes one metrics row read from the engine's own instrumentation:
+  *  - `rows_out`: an `Observation` counted on the job that writes the
+  *    rows (no second pass);
+  *  - `wall_ms`: the wall time of the write;
+  *  - `shuffle_bytes`: the shuffle-write bytes the query's tasks report,
+  *    AQE stage jobs included (not the exchanges' uncompressed
+  *    `dataSize`, which an earlier plan-walking version reported).
+  * The write is a NOOP sink, not `collect()`: the full plan runs on the
+  * executors and no result row reaches the driver. Driver-side work is
+  * constant per query, as for a Prometheus exporter.
   */
 object MetricsScrape {
-
-  val LabelCol = "graft_metrics_label"
 
   final case class MetricRow(query_label: String, rows_out: Long,
                              wall_ms: Long, shuffle_bytes: Long)
 
-  /** Run each labeled DataFrame to completion under the scrape listener
-    * and return the metrics table (one row per query, in label order). */
+  /** Run each labeled DataFrame to completion and return the metrics
+    * table (one row per query, in label order). A label is a job tag:
+    * non-empty, without a comma, and unique in `items`. */
   def run(spark: SparkSession, items: Seq[(String, DataFrame)]): DataFrame = {
-    // duplicate labels would silently overwrite one query's row with the
-    // other's AND make the completeness poll unsatisfiable — fail at entry
+    // duplicate labels would give two queries one tag and one row — fail at entry
     require(items.map(_._1).distinct.size == items.size,
       s"duplicate scrape labels: ${items.map(_._1).diff(items.map(_._1).distinct).distinct.mkString(", ")}")
-    val buf = new java.util.concurrent.ConcurrentHashMap[String, MetricRow]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        labelOf(qe).foreach { lbl =>
-          buf.put(lbl,
-            MetricRow(lbl, topRows(qe), durationNs / 1000000L, shuffleBytes(qe)))
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      items.foreach { case (lbl, df) =>
-        // noop sink: full executor-side execution, zero rows to the driver
-        df.withColumn(LabelCol, lit(lbl)).write.format("noop").mode("overwrite").save()
-      }
-      // ExecutionListenerBus delivery is async; poll for the SET of
-      // missing labels (not a size comparison) until complete
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def missing: Seq[String] = items.map(_._1).filterNot(buf.containsKey)
-      while (missing.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      require(missing.isEmpty, s"metrics scrape missed: ${missing.mkString(", ")}")
-    } finally spark.listenerManager.unregister(listener)
+    items.foreach { case (lbl, _) => Profile.requireFreeTag(spark.sparkContext, lbl) }
+    val profile = Profile(spark)
+    val rows = try items.map { case (lbl, df) =>
+      val obs = Observation(lbl)
+      val r = profile.run(lbl)(
+        df.observe(obs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save())
+      MetricRow(lbl, obs.get("rows").asInstanceOf[Long], (r.wallS * 1000).toLong, r.shuffleWriteBytes)
+    } finally profile.close()
     import spark.implicits._
-    items.map { case (lbl, _) => buf.get(lbl) }.toDF()
-      .orderBy(col("query_label"))
-  }
-
-  /** The label planted by [[run]]: an Alias(Literal) in the analyzed
-    * plan's top projection. */
-  private def labelOf(qe: QueryExecution): Option[String] =
-    qe.analyzed.collectFirst {
-      case p: Project if p.projectList.exists(_.name == LabelCol) =>
-        p.projectList.collectFirst {
-          case a: Alias if a.name == LabelCol =>
-            a.child match {
-              case l: Literal if l.value != null => Some(l.value.toString)
-              case _ => None
-            }
-        }.flatten
-    }.flatten
-
-  /** Preorder flatten of the executed plan that descends through the
-    * AQE wrappers an ordinary `collect` treats as leaves: the finalized
-    * adaptive tree under `AdaptiveSparkPlanExec` and the materialized
-    * plan under each `QueryStageExec` (shuffle/broadcast stages). */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val inner: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    p +: inner.flatMap(allNodes)
-  }
-
-  /** Output rows of the topmost metered node — for an aggregate query,
-    * the final aggregate's numOutputRows. The noop write command node
-    * itself carries no row metric, so the walk lands on the query's
-    * real top operator under it. */
-  private def topRows(qe: QueryExecution): Long =
-    allNodes(qe.executedPlan).collectFirst {
-      case p if p.metrics.contains("numOutputRows") =>
-        p.metrics("numOutputRows").value
-    }.getOrElse(-1L)
-
-  /** Total bytes through shuffle exchanges (the `dataSize` SQLMetric).
-    * Reused exchanges (`ReusedExchangeExec`) are NOT descended into —
-    * their original is metered once elsewhere in the tree. */
-  private def shuffleBytes(qe: QueryExecution): Long = {
-    val sizes = allNodes(qe.executedPlan).collect {
-      // exact match: ShuffleExchangeExec prints as "Exchange";
-      // BroadcastExchange also carries dataSize but is not a shuffle
-      case p if p.nodeName == "Exchange" && p.metrics.contains("dataSize") =>
-        p.metrics("dataSize").value
-    }
-    if (sizes.isEmpty) 0L else sizes.sum
+    rows.toDF().orderBy(col("query_label"))
   }
 }

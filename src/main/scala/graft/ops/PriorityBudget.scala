@@ -9,15 +9,17 @@ import org.apache.spark.sql.SparkSession
   * budgets per priority, then awaits the container calls with no
   * cancellation — a slow source holds the whole collect).
   *
-  * Spark-first enforcement: every budgeted action runs inside a Spark
-  * job group, and a watchdog cancels the group when the budget expires.
-  * `cancelJobGroup` is the cluster-correct mechanism — it kills the
-  * job's running stages/tasks on every executor (with
-  * `interruptOnCancel=true`, tasks blocked in IO are interrupted too),
+  * Spark-first enforcement: every budgeted action runs under a Spark
+  * job tag, and a watchdog cancels the tag's jobs when the budget
+  * expires. `cancelJobsWithTag` is the cluster-correct mechanism — it
+  * kills the jobs' running stages/tasks on every executor (with
+  * interrupt-on-cancel set, tasks blocked in IO are interrupted too),
   * so at 1000 executors a timed-out query stops consuming cluster
   * resources immediately instead of running to completion in the
   * background. The driver thread gets a SparkException, which we fold
-  * into a typed `Budgeted` result rather than letting it escape.
+  * into a typed `Budgeted` result rather than letting it escape. A tag
+  * adds to the calling thread's tags, so the caller's job group, and a
+  * [[graft.Profile.run]] around the budgeted action, still see its jobs.
   */
 object PriorityBudget {
 
@@ -36,7 +38,7 @@ object PriorityBudget {
     else 30000L
 
   // one daemon watchdog thread for the whole JVM — cancellation is a
-  // single sc.cancelJobGroup call, never long-running
+  // single sc.cancelJobsWithTag call, never long-running
   private lazy val watchdog: ScheduledExecutorService =
     Executors.newSingleThreadScheduledExecutor { r =>
       val t = new Thread(r, "graft-priority-budget-watchdog")
@@ -44,20 +46,27 @@ object PriorityBudget {
       t
     }
 
+  private val InterruptOnCancel = "spark.job.interruptOnCancel"
+
   /** Run `action` (any driver-side code that launches Spark jobs) under
-    * `budgetMs`. Jobs launched from the calling thread join the group
-    * (job-group membership is thread-local); the watchdog cancels the
-    * group at the deadline. The session stays fully usable afterwards —
-    * cancellation is scoped to the group, not the SparkContext.
+    * `budgetMs`. Jobs launched from the calling thread carry the job tag
+    * `groupId` (job tags are thread-local); the watchdog cancels that
+    * tag's jobs at the deadline. The session stays fully usable
+    * afterwards — cancellation is scoped to the tag, not the
+    * SparkContext. `groupId` must be a valid job tag (non-empty, no
+    * comma) that the calling thread does not already carry.
     */
   def run[T](spark: SparkSession, groupId: String, budgetMs: Long)(action: => T): Budgeted[T] = {
     val sc = spark.sparkContext
+    graft.Profile.requireFreeTag(sc, groupId)
+    val interruptBefore = sc.getLocalProperty(InterruptOnCancel)
+    sc.addJobTag(groupId)
+    sc.setInterruptOnCancel(true)
     val start = System.nanoTime()
     @volatile var fired = false
     val canceller = watchdog.schedule(new Runnable {
-      def run(): Unit = { fired = true; sc.cancelJobGroup(groupId) }
+      def run(): Unit = { fired = true; sc.cancelJobsWithTag(groupId) }
     }, budgetMs, TimeUnit.MILLISECONDS)
-    sc.setJobGroup(groupId, s"graft budgeted action ($budgetMs ms)", interruptOnCancel = true)
     try {
       val v = action
       val elapsed = (System.nanoTime() - start) / 1000000L
@@ -70,7 +79,8 @@ object PriorityBudget {
         Budgeted(None, budgetMs, elapsed, timedOut = true)
     } finally {
       canceller.cancel(false)
-      sc.clearJobGroup()
+      sc.removeJobTag(groupId)
+      sc.setLocalProperty(InterruptOnCancel, interruptBefore)
     }
   }
 

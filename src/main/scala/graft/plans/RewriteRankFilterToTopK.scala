@@ -1,8 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** SURVEY.md §2.6 O2 depth — optimizer rule lowering the declarative
   * per-key top-k idiom onto the bounded-heap operator:
@@ -40,21 +42,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * query tiebreaks explicitly) is row-identical after it; a query that
   * relied on ties was never deterministic.
   *
-  * DEFAULT OFF (`spark.graft.topk.rewrite=true` to enable), on
-  * measurement, not principle: with the rule on engine-wide the full
-  * oracle gate stays green (186/186 — the rewrite is semantically safe
-  * across the registry), but the sf0.1 bench moved the rank-filter-heavy
-  * j5 family 1.7-2.0× SLOWER (e.g. j5_pq_adc 0.78→1.46 s, j5_mmr_rerank
-  * 0.47→0.94 s): at fixture group sizes (tens to hundreds of rows per
-  * key) WindowExec's codegen'd sort beats the interpreted per-row heap
-  * updates on constant factors. The crossover is MEASURED
-  * (10M rows, scale/topk_crossover.json): sort wins
-  * 2.5× at 10 rows/key, parity at ~1,000 rows/key, heap wins 1.67× at
-  * 100k rows/key and 3.21× at 2.5M rows/key — the regime the operator
-  * documents, where the sort's O(n log n) and partition-sized spill
-  * surface are the job. Flip the flag (per session or per query) when
-  * groups are large; `o2_topk_custom` uses the operator explicitly
-  * either way.
+  * Applied per frame by [[lower]], never by the session's optimizer, on
+  * measurement: engine-wide, the oracle gate stays green (186/186) but
+  * the sf0.1 bench moved the rank-filter-heavy j5 family 1.7-2.0×
+  * SLOWER (j5_pq_adc 0.78→1.46 s): at tens to hundreds of rows per key
+  * WindowExec's codegen'd sort beats the interpreted heap. The measured
+  * crossover (10M rows, scale/topk_crossover.json): sort wins 2.5× at
+  * 10 rows/key, parity at ~1,000, heap wins 1.67× at 100k and 3.21× at
+  * 2.5M rows/key. Lower a frame when its groups are large;
+  * `o2_topk_custom` uses the operator explicitly either way.
   */
 object RewriteRankFilterToTopK extends Rule[LogicalPlan] {
 
@@ -68,11 +64,12 @@ object RewriteRankFilterToTopK extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.topk.rewrite", "false").toBoolean
+  /** `df` with every supported rank filter in its optimized plan
+    * lowered onto [[TopKPerKeyPlan]]; lazy, like any frame. */
+  def lower(df: DataFrame): DataFrame =
+    PlanBridge.ofRows(df.sparkSession, apply(df.queryExecution.optimizedPlan))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case Project(projectList,
           Filter(cond,
@@ -82,8 +79,9 @@ object RewriteRankFilterToTopK extends Rule[LogicalPlan] {
             rankBound(cond, al.exprId).exists(_ > 0) &&
             projectList.forall(!_.references.contains(al.toAttribute)) &&
             projectList.forall(_.references.subsetOf(child.outputSet)) =>
+        // the heap replaces Spark's sort-based WindowGroupLimit pre-filter
+        val input = child match { case WindowGroupLimit(p, o, _, _, c) if p == parts && o == order => c; case c => c }
         Project(projectList,
-          TopKPerKeyPlan(parts, order, rankBound(cond, al.exprId).get, child))
+          TopKPerKeyPlan(parts, order, rankBound(cond, al.exprId).get, input))
     }
-  }
 }

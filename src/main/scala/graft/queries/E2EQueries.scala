@@ -654,11 +654,11 @@ LEFT JOIN topo2 t ON s.site = t.site""")
     * request emits exactly one structured-log record — INFO + success
     * metrics for accepted requests, ERROR + the X27-formatted error list
     * for rejects. The same run carries a Spark `observe()` census
-    * (n_requests/n_valid/n_high_risk_total) to a QueryExecutionListener
-    * with no second job — spec-proven in CollectPipelineSpec. The oracle
-    * replays validation, kernels, classification, and the envelope
-    * format in SQL, so both the trace-id rule and the log format are
-    * hash-pinned. */
+    * (n_requests/n_valid/n_high_risk_total) in its own
+    * `observedMetrics`, with no second job — spec-proven in
+    * CollectPipelineSpec. The oracle replays validation, kernels,
+    * classification, and the envelope format in SQL, so both the
+    * trace-id rule and the log format are hash-pinned. */
   val observeEnvelope = Q(
     "e2e_observe_envelope",
     "Request-id observability envelope: header-or-generated trace ids, one structured-log row per request (level/message/metrics), observe() census on the same job.",
@@ -762,19 +762,17 @@ LEFT JOIN topo2 t ON s.site = t.site""")
     * reference exposes a Prometheus `/metrics` endpoint on every
     * container and a scrape config over them
     * (monitoring/prometheus.yml:15-23); the engine-native analog is
-    * [[graft.ops.MetricsScrape]] — a QueryExecutionListener that turns
-    * each completed query into one metrics row (label, output rows,
-    * wall ms, shuffled bytes) read from the engine's own SQLMetrics.
-    * Three representative aggregations are run under the listener and
-    * the scrape TABLE is the query result: the deterministic columns
-    * (labels and listener-reported output rows, which must equal the
-    * true group counts) are oracled; the nondeterministic gauges are
-    * asserted as recorded (wall >= 0 ms is a flag here because a 32-way
+    * [[graft.ops.MetricsScrape]], one metrics row per query (label,
+    * output rows, wall ms, shuffle bytes) from [[graft.Profile]] and an
+    * `Observation`. Three aggregations are scraped and the scrape TABLE
+    * is the query result: the deterministic columns (labels and observed
+    * output rows, which must equal the true group counts) are oracled;
+    * the nondeterministic gauges are asserted as recorded (wall >= 0 ms is a flag here because a 32-way
     * local agg can complete inside one millisecond tick; the exact
     * values are covered in MetricsScrapeSpec). */
   val metricsScrape = Q(
     "e2e_metrics_scrape",
-    "Engine /metrics scrape: QueryExecutionListener metrics table over three aggregations — listener-reported output rows oracled against true group counts; wall and shuffle gauges flagged as recorded.",
+    "Engine /metrics scrape: a Profile-backed metrics table over three aggregations — observed output rows oracled against true group counts; wall and shuffle gauges flagged as recorded.",
     (s, dir) => {
       val t = graft.Tables(s, dir)
       val items = Seq(

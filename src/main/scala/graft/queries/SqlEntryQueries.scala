@@ -20,33 +20,18 @@ import graft.Tables
   */
 object SqlEntryQueries {
 
-  /** Flag-scoped, plan-asserted execution of SQL text that must lower
-    * onto the custom TopKPerKey operator — WITHOUT a driver collect
-    * (VERDICT r11 next #8): optimization is lazy and a harness action on
-    * the returned frame would re-plan AFTER the finally-block restores
-    * the flag, silently undoing the rewrite, so the plan must execute
-    * while the flag is set. The rows go executor→parquet→re-scan (the
-    * spill-shaped analogue of MetricsScrape's noop-sink discipline: a
-    * large result would OOM a driver-side collect, a parquet round-trip
-    * is distributed on both sides). */
+  /** SQL text lowered onto the custom TopKPerKey operator by
+    * [[graft.plans.RewriteRankFilterToTopK.lower]], plan-asserted before
+    * it is returned; the frame stays lazy, so the harness's own action
+    * runs the lowered plan. */
   private def runLoweredTopK(s: org.apache.spark.sql.SparkSession,
                              sqlText: String,
                              requiredNodes: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val flag = "spark.graft.topk.rewrite"
-    val prev = s.conf.getOption(flag)
-    s.conf.set(flag, "true")
-    try {
-      val df = s.sql(sqlText)
-      val plan = df.queryExecution.executedPlan.toString
-      requiredNodes.foreach(n => require(plan.contains(n),
-        s"expected $n in plan:\n${plan.take(1500)}"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_topk_sql").toString
-      df.write.mode("overwrite").parquet(dir) // executes UNDER the flag
-      s.read.parquet(dir)
-    } finally prev match {
-      case Some(v) => s.conf.set(flag, v)
-      case None => s.conf.unset(flag)
-    }
+    val df = graft.plans.RewriteRankFilterToTopK.lower(s.sql(sqlText))
+    val plan = df.queryExecution.executedPlan.toString
+    requiredNodes.foreach(n => require(plan.contains(n),
+      s"expected $n in plan:\n${plan.take(1500)}"))
+    df
   }
 
   /** Backward as-of join as PURE SQL: union probe+build rows, one
@@ -450,10 +435,8 @@ object SqlEntryQueries {
     * before executing, so its green oracle row is simultaneously the
     * proof that SQL text reaches the custom SparkPlan and that the heap
     * reproduces the window's answer bit-for-bit (the ORDER BY is total,
-    * so ties cannot hide behind row_number nondeterminism). The rewrite
-    * flag is scoped to this query: set, executed eagerly, restored —
-    * the engine-wide default stays off on the measured fixture-scale
-    * crossover (see RewriteRankFilterToTopK's scaladoc). */
+    * so ties cannot hide behind row_number nondeterminism). The
+    * session's optimizer never applies the rule (see its scaladoc). */
   val sqlTopK = Q(
     "sql_entry_topk",
     "Raw-SQL per-key top-3 (rank-filter idiom) lowered onto the custom bounded-heap TopKPerKey operator by the opt-in rewrite Rule; plan-asserted in-query, oracled by the same rank filter in DuckDB.",
@@ -804,8 +787,8 @@ object SqlEntryQueries {
     * LOWERED onto the custom bounded-heap [[graft.plans.TopKPerKeyPlan]]
     * by the opt-in rewrite Rule (the r11 stretch goal): one statement
     * exercises native expression + custom LogicalPlan + Strategy + heap
-    * SparkPlan from raw SQL text. Plan-asserted in-query; same
-    * no-driver-collect execution discipline as sql_entry_topk. The
+    * SparkPlan from raw SQL text. Plan-asserted in-query, lowered per
+    * frame like sql_entry_topk. The
     * output deliberately omits the rank column — the rewrite's
     * soundness gate requires the projection not reference it (see
     * RewriteRankFilterToTopK's scaladoc). */

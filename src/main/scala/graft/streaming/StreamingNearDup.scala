@@ -83,6 +83,9 @@ object StreamingNearDup {
     }
   }
 
+  /** Parquet files the stream reads per micro-batch. */
+  val FilesPerBatch = 2
+
   /** Streaming entry: documents parquet stream → band rows → keyed state
     * → distinct candidate pairs appended to the sink. */
   def run(spark: SparkSession, srcDir: String, sinkDir: String,
@@ -99,7 +102,7 @@ object StreamingNearDup {
   def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
                   sink: (Dataset[CandPair], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    val docs = Drain.parquetSource(spark, StreamingDrift.docSchema, srcDir, 2)
+    val docs = Drain.parquetSource(spark, StreamingDrift.docSchema, srcDir, FilesPerBatch)
     val pairs = bandRows(docs)
       .as[BandRow]
       .groupByKey(r => s"${r.b}|${r.band_key}")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, Profile}
 import graft.streaming.StreamingNearDup
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
@@ -19,23 +19,38 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * engine's own StreamingQueryProgress. Prints ONE JSON line (the
   * committed artifact) and exits nonzero on any divergence.
   *
+  * `docsDir` must be a directory of at least [[MinFiles]] parquet files.
+  *
   * Usage: spark-submit --class graft.tools.StreamScaleProbe <jar>
   *        [docsDir] [outJson]
   */
 object StreamScaleProbe {
 
+  /** The batch id the drill crashes at; with
+    * [[StreamingNearDup.FilesPerBatch]] (2) files per micro-batch, fewer
+    * than [[MinFiles]] (7) files never reach it and the probe would
+    * report a drill that did not happen. */
+  val CrashBatch = 3
+  val MinFiles: Int = StreamingNearDup.FilesPerBatch * CrashBatch + 1
+
+  /** Fails unless `dir` is a directory holding at least [[MinFiles]]
+    * parquet files (hidden and `_` files skipped, as the source does). */
+  def requireInput(dir: String): Unit = {
+    val files = Option(new java.io.File(dir).listFiles)
+    require(files.isDefined, s"StreamScaleProbe needs a directory of parquet files, not '$dir'")
+    val n = files.get.count(f => f.isFile && f.getName.endsWith(".parquet") && !"._".contains(f.getName.head))
+    require(n >= MinFiles, s"StreamScaleProbe needs at least $MinFiles parquet files under '$dir' " +
+      s"(${StreamingNearDup.FilesPerBatch} per micro-batch, crash at batch $CrashBatch), found $n")
+  }
+
   /** One JSON object per progress event of `q` that read input: batch,
     * rows, trigger time and the first state operator's rows and RocksDB
     * SST bytes (-1 where absent). */
   private[tools] def progressRows(q: StreamingQuery): Seq[String] =
-    q.recentProgress.toSeq.filter(_.numInputRows > 0).map { p =>
-      val so = p.stateOperators.headOption
-      val rocksBytes = so.map(_.customMetrics.getOrDefault("rocksdbSstFileSize", -1L))
-        .getOrElse(-1L)
-      s"""{"batch":${p.batchId},"input_rows":${p.numInputRows},""" +
-        s""""trigger_ms":${p.durationMs.getOrDefault("triggerExecution", -1L)},""" +
-        s""""state_rows":${so.map(_.numRowsTotal).getOrElse(-1L)},""" +
-        s""""rocksdb_sst_bytes":$rocksBytes}"""
+    Profile.progress(q).filter(_.input_rows > 0).map { p =>
+      s"""{"batch":${p.batch_id},"input_rows":${p.input_rows},""" +
+        s""""trigger_ms":${p.trigger_ms},"state_rows":${p.state_rows},""" +
+        s""""rocksdb_sst_bytes":${p.rocksdb_sst_bytes}}"""
     }
 
   /** The crash drill both stream probes run. The first run's sink
@@ -76,13 +91,14 @@ object StreamScaleProbe {
       else "/root/repo/target/scale/sf1/documents.parquet"
     val outJson = if (args.length > 1) args(1)
       else "/root/repo/scale/stream_state_sf1_r12.json"
+    requireInput(docsDir)
     val spark = GraftSession.local("graft-stream-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val work = java.nio.file.Files.createTempDirectory("stream_probe").toString
     val sink = s"$work/pairs"; val ck = s"$work/ck"
 
-    val (crashedAt, crashSurfaced, p1, p2) = crashThenDrain[StreamingNearDup.CandPair](sink, 3)(
+    val (crashedAt, crashSurfaced, p1, p2) = crashThenDrain[StreamingNearDup.CandPair](sink, CrashBatch)(
       StreamingNearDup.runWithSink(spark, docsDir, ck, _))(StreamingNearDup.run(spark, docsDir, sink, ck))
 
     // ---- correctness: drained pairs == batch LSH candidate set ---------

@@ -70,42 +70,26 @@ class CollectPipelineSpec extends SparkSpecBase {
     val withHeader = requests.withColumn("header_trace",
       when(col("request_id") === "req_la", lit("lb-trace-001")))
 
-    @volatile var observed: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-        qe.observedMetrics.get("graft_collect").foreach(r => observed = Some(r))
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // no .orderBy here: a global sort's range-partitioning SAMPLING
-      // pass would execute the observe() node a second time and
-      // double-count the census — sort locally instead
-      val env = CollectPipeline.observedRun(withHeader, headerCol = Some("header_trace"))
-      val rows = env.collect().sortBy(_.getString(0))
-      assert(rows.length == 6) // EVERY request logs exactly once, rejects included
-      val byId = rows.map(r => r.getString(0) -> r).toMap
-      // header propagation vs deterministic generation (orchestrator.py:73-87)
-      assert(byId("req_la").getString(1) == "lb-trace-001")
-      assert(byId("req_yellowstone").getString(1).matches("req_[0-9a-f]{12}"))
-      assert(byId("req_london").getString(3) == "ERROR")
-      assert(byId("req_london").getString(4) == "collect rejected: outside supported US regions")
-      assert(byId("req_la").getString(3) == "INFO")
-      // the observe() census arrives on the SAME job, no second pass
-      // (listener delivery is async; poll briefly instead of touching
-      // the private listener bus)
-      val deadline = System.nanoTime() + 10000000000L
-      while (observed.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(observed.isDefined, "observe() metrics never reached the listener")
-      val m = observed.get
-      assert(m.getLong(m.fieldIndex("n_requests")) == 6)
-      assert(m.getLong(m.fieldIndex("n_valid")) == 2)
-    } finally {
-      spark.listenerManager.unregister(listener)
-    }
+    // no .orderBy here: a global sort's range-partitioning SAMPLING
+    // pass would execute the observe() node a second time and
+    // double-count the census — sort locally instead
+    val env = CollectPipeline.observedRun(withHeader, headerCol = Some("header_trace"))
+    val rows = env.collect().sortBy(_.getString(0))
+    assert(rows.length == 6) // EVERY request logs exactly once, rejects included
+    val byId = rows.map(r => r.getString(0) -> r).toMap
+    // header propagation vs deterministic generation (orchestrator.py:73-87)
+    assert(byId("req_la").getString(1) == "lb-trace-001")
+    assert(byId("req_yellowstone").getString(1).matches("req_[0-9a-f]{12}"))
+    assert(byId("req_london").getString(3) == "ERROR")
+    assert(byId("req_london").getString(4) == "collect rejected: outside supported US regions")
+    assert(byId("req_la").getString(3) == "INFO")
+    // the observe() census arrives on the SAME job, no second pass: the
+    // collect's own query execution holds it once the collect returns
+    val observed = env.queryExecution.observedMetrics.get("graft_collect")
+    assert(observed.isDefined, "observe() metrics missing from the collect's execution")
+    val m = observed.get
+    assert(m.getLong(m.fieldIndex("n_requests")) == 6)
+    assert(m.getLong(m.fieldIndex("n_valid")) == 2)
   }
 
   test("validation stays in whole-stage codegen: every Filter inside a codegen stage, none holding a higher-order function") {

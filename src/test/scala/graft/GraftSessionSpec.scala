@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the broadcast-ceiling derivation (VERDICT r11 next #1): the
-  * sizing rule that replaced the OOM-discovered SPARK_GRAFT_BROADCAST_MAX
-  * knob. The rule's anchor points are MEASURED: 8 MB was the ceiling that
+  * sizing rule that replaced a hand-set broadcast ceiling after an OOM. The rule's anchor points are MEASURED: 8 MB was the ceiling that
   * ran the sf10 local-cluster leg clean on 3 GB executor heaps (a <64 MB
   * serialized build side deserializes at 10-20x and killed them), and
   * 64 MB is right for big heaps where shuffle beats any larger broadcast
@@ -32,17 +31,15 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.derivedBroadcastMax(64L * 1024 * 1024, "local[2]") == 1L * 1024 * 1024)
   }
 
-  test("env override still wins and local masters read this JVM's heap") {
-    // no SPARK_GRAFT_BROADCAST_MAX in the test env: the derived default
-    // must be what broadcastMax reports, and under the in-process test
-    // master the executor heap IS this JVM's max heap
-    if (sys.env.get("SPARK_GRAFT_BROADCAST_MAX").isEmpty &&
-        sys.props.get("spark.executor.memory").isEmpty &&
-        sys.env.get("SPARK_EXECUTOR_MEMORY").isEmpty) {
+  test("broadcastMax is derived; local masters read this JVM's heap") {
+    // the derived ceiling is what broadcastMax reports, and with no
+    // executor memory configured the in-process test master's executor
+    // heap IS this JVM's max heap
+    assert(GraftSession.broadcastMax ==
+      GraftSession.derivedBroadcastMax(GraftSession.executorMemoryBytes, GraftSession.master).toString)
+    if (sys.props.get("spark.executor.memory").isEmpty &&
+        sys.env.get("SPARK_EXECUTOR_MEMORY").isEmpty)
       assert(GraftSession.executorMemoryBytes == Runtime.getRuntime.maxMemory)
-      assert(GraftSession.broadcastMax ==
-        GraftSession.derivedBroadcastMax(Runtime.getRuntime.maxMemory, GraftSession.master).toString)
-    }
   }
 
   test("SPARK_GRAFT_CONF parsing: trimmed pairs, '=' inside values, blanks skipped, malformed reported") {

@@ -129,31 +129,15 @@ class LabelPropSpec extends SparkSpecBase {
     spark.catalog.clearCache()
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.keySet
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("lpa-rejected", "LabelProp calls with rounds = 0")
+    val profile = Profile(spark)
+    val rejected = try profile.run("lpa-rejected") {
       Seq[(DataFrame, Int) => DataFrame](
         LabelProp.propagateBroadcast, LabelProp.propagateShuffle, LabelProp.propagate(_, _)
       ).foreach { run =>
         intercept[IllegalArgumentException](run(fixtureEdges, 0))
       }
-      // listener events arrive in order: once a later marker job is seen,
-      // any job the rejected calls started has been seen too
-      sc.setJobGroup("lpa-marker", "listener barrier")
-      sc.parallelize(1 to 1, 1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!groups.contains("lpa-marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("lpa-marker"), "marker job never reached the listener")
-      assert(!groups.contains("lpa-rejected"), s"a rejected call ran a job: $groups")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    } finally profile.close()
+    assert(rejected.jobs == 0, s"a rejected call ran ${rejected.jobs} jobs")
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty, "a rejected call left a cached plan")
     assert(sc.getPersistentRDDs.keySet == persistedBefore, "a rejected call persisted an RDD")

@@ -3,12 +3,12 @@ package graft
 import graft.ops.MetricsScrape
 import org.apache.spark.sql.functions._
 
-/** The batch /metrics scrape surface: listener-reported output rows must
-  * equal the true result cardinalities (they come from the executed
-  * plan's own SQLMetrics, not from re-counting), shuffle gauges must
-  * distinguish shuffling from non-shuffling queries, and the scrape must
-  * work under the production default AQE=on (the walk descends the
-  * finalized adaptive plan) with no conf toggling at all.
+/** The batch /metrics scrape surface: observed output rows must equal
+  * the true result cardinalities (an `Observation` on the same job, not
+  * a re-count), shuffle gauges must distinguish shuffling from
+  * non-shuffling queries, and the scrape must work under the production
+  * default AQE=on (AQE stage jobs carry the query's job tag) with no
+  * conf toggling at all.
   */
 class MetricsScrapeSpec extends SparkSpecBase {
 
@@ -26,7 +26,7 @@ class MetricsScrapeSpec extends SparkSpecBase {
 
     val trueStatuses = t.orders.select("o_orderstatus").distinct().count()
     val (aggRows, aggWall, aggShuffle) = out("orders_by_status")
-    assert(aggRows == trueStatuses, s"listener rows $aggRows != true $trueStatuses")
+    assert(aggRows == trueStatuses, s"observed rows $aggRows != true $trueStatuses")
     assert(aggWall >= 0)
     assert(aggShuffle > 0, "a groupBy must report shuffled bytes")
 
@@ -36,9 +36,8 @@ class MetricsScrapeSpec extends SparkSpecBase {
   }
 
   test("a missed label fails loudly instead of returning a short table") {
-    // labels are correlated through the plan itself; an item whose plan
-    // never executes (empty relation short-circuit) must not silently
-    // vanish from the scrape — MetricsScrape requires completeness.
+    // every item gets its row from its own run: none may silently
+    // vanish from the scrape
     val t = Tables(spark, "/root/testdata/sf0.001")
     val out = MetricsScrape.run(spark,
       Seq("one" -> t.region.select(col("r_name"))))
@@ -46,8 +45,7 @@ class MetricsScrapeSpec extends SparkSpecBase {
   }
 
   test("duplicate labels are rejected at entry, not silently merged") {
-    // a duplicate label would overwrite one query's metrics row with the
-    // other's and stall the completeness poll to its full deadline
+    // a duplicate label would give two queries one job tag and one row
     val t = Tables(spark, "/root/testdata/sf0.001")
     val e = intercept[IllegalArgumentException] {
       MetricsScrape.run(spark, Seq(
@@ -56,5 +54,12 @@ class MetricsScrapeSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("duplicate scrape labels"))
     assert(e.getMessage.contains("same"))
+    // a label is a job tag, and a comma separates job tags
+    val c = intercept[IllegalArgumentException] {
+      MetricsScrape.run(spark, Seq(
+        "fine" -> t.region.select(col("r_name")),
+        "a,b" -> t.nation.select(col("n_name"))))
+    }
+    assert(c.getMessage.contains("a,b"))
   }
 }

@@ -87,25 +87,22 @@ class PlanInvarianceSpec extends SparkSpecBase {
     assertNoFailures("broadcast/AQE invariance")
   }
 
-  test("rank-filter queries are invariant to the TopK rewrite flag") {
-    // the queries whose row_number-filter-drop shape the opt-in
-    // RewriteRankFilterToTopK rule lowers; flipping the flag must never
-    // change a result (every registered rank filter tiebreaks totally)
+  test("rank-filter queries are invariant to the TopK lowering") {
+    // the queries whose row_number-filter-drop shape
+    // RewriteRankFilterToTopK.lower rewrites; lowering must never change
+    // a result (every registered rank filter tiebreaks totally)
     for (name <- Seq("a7_latest_last", "a7_latest_first", "j5_hard_negatives",
         "j5_mmr_rerank", "j5_ivf_probe", "e2e_rag_context",
         "a10_dedup_exact", "w2_window_funcs", "q15_top_supplier")) {
       val fn = QueryRegistry.queries(name)
       try {
         val off = fn(spark, dir).collect().map(_.toString).sorted
-        spark.conf.set("spark.graft.topk.rewrite", "true")
-        val on = try fn(spark, dir).collect().map(_.toString).sorted
-        finally spark.conf.unset("spark.graft.topk.rewrite")
+        val on = graft.plans.RewriteRankFilterToTopK.lower(fn(spark, dir))
+          .collect().map(_.toString).sorted
         if (!on.sameElements(off))
-          failures += s"$name: result depends on spark.graft.topk.rewrite"
+          failures += s"$name: result depends on the TopK lowering"
       } catch {
-        case e: Throwable =>
-          spark.conf.unset("spark.graft.topk.rewrite")
-          failures += s"$name failed to execute: ${firstLine(e)}"
+        case e: Throwable => failures += s"$name failed to execute: ${firstLine(e)}"
       }
     }
     assertNoFailures("TopK-rewrite invariance")

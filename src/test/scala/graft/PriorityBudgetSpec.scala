@@ -4,9 +4,10 @@ import graft.ops.PriorityBudget
 
 /** Priority timeout ENFORCEMENT (SURVEY §4): the reference routes
   * 60/120/30 s budgets but never cancels a slow source. PriorityBudget
-  * runs the action in a Spark job group and a watchdog cancels the
-  * group at the deadline — these specs prove a slow job is actually
-  * killed (promptly, not at completion) and the session survives it.
+  * runs the action under a Spark job tag and a watchdog cancels the
+  * tag's jobs at the deadline — these specs prove a slow job is actually
+  * killed (promptly, not at completion), the session survives it, and
+  * the caller's job group and profile still see the budgeted jobs.
   */
 class PriorityBudgetSpec extends SparkSpecBase {
 
@@ -52,5 +53,26 @@ class PriorityBudgetSpec extends SparkSpecBase {
     }
     assert(r1.value.contains(100L) && r1.budgetMs == 30000L)
     assert(r2.value.contains(200L) && r2.budgetMs == 60000L)
+  }
+
+  test("the caller's job group survives a budgeted run") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("pb-caller", "caller's group")
+    try {
+      val r = PriorityBudget.run(spark, "pb-in-group", budgetMs = 30000L)(spark.range(10).count())
+      assert(r.value.contains(10L))
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "pb-caller")
+    } finally sc.clearJobGroup()
+  }
+
+  test("a budgeted run inside Profile.run counts for the profile") {
+    val profile = Profile(spark)
+    try {
+      val p = profile.run("pb-profiled") {
+        PriorityBudget.run(spark, "pb-inner", budgetMs = 30000L)(spark.range(10).collect().length)
+      }
+      assert(p.value.value.contains(10))
+      assert(p.jobs == 1, s"profile saw ${p.jobs} jobs of the budgeted run")
+    } finally profile.close()
   }
 }

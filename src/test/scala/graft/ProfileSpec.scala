@@ -7,8 +7,9 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 /** Pins [[Profile]]: a run's counters are exact when `run` returns (the
-  * listener bus is drained, nothing waits on a timer), and they belong
-  * to the run's own job group, also while another group runs. */
+  * listener bus is drained, nothing waits on a timer), they belong to
+  * the run's own job tag, also while another tag runs, an outer run
+  * counts the runs inside it, and the caller's job group is left alone. */
 class ProfileSpec extends SparkSpecBase {
 
   // partial aggregates shuffle a row per key and map task: the key
@@ -37,6 +38,32 @@ class ProfileSpec extends SparkSpecBase {
       val both = Future.sequence(Seq(
         Future(bytes("profile-spec-small-2", 10)), Future(bytes("profile-spec-big-2", 4000))))
       assert(Await.result(both, 2.minutes) == Seq(small, big))
+    } finally profile.close()
+  }
+
+  test("a run leaves the caller's job group as it found it") {
+    val sc = spark.sparkContext
+    val profile = Profile(spark)
+    sc.setJobGroup("profile-spec-caller", "caller's group")
+    try {
+      profile.run("profile-spec-in-group")(spark.range(10).collect())
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "profile-spec-caller")
+    } finally { sc.clearJobGroup(); profile.close() }
+  }
+
+  test("an outer run's jobs include an inner run's; bad and reopened tags are rejected") {
+    val profile = Profile(spark)
+    try {
+      val outer = profile.run("profile-spec-outer") {
+        spark.range(10).collect()
+        profile.run("profile-spec-inner")(spark.range(10).collect())
+      }
+      assert(outer.value.jobs == 1, s"inner run: ${outer.value}")
+      assert(outer.jobs == 2, s"outer run: $outer")
+      Seq("", "a,b").foreach(t => intercept[IllegalArgumentException](profile.run(t)(())))
+      profile.run("profile-spec-twice") {
+        intercept[IllegalArgumentException](profile.run("profile-spec-twice")(()))
+      }
     } finally profile.close()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.RewriteRankFilterToTopK.lower
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,16 +10,10 @@ import org.apache.spark.sql.functions._
   * per-partition sort), results are row-identical to the un-rewritten
   * plan on a total order, and every soundness gate holds — rank kept,
   * rank/dense_rank, second window expression, and fused predicates all
-  * refuse the rewrite. */
+  * refuse the rewrite. The session's optimizer never applies the rule
+  * (measured small-group constant factors, see its scaladoc), so every
+  * positive proof here asks for it with `lower`. */
 class RewriteRankFilterSpec extends SparkSpecBase {
-
-  /** The rewrite is opt-in (default off on measured small-group constant
-    * factors — see the rule's scaladoc); every positive proof here runs
-    * with it enabled. */
-  private def withRule[T](on: Boolean)(body: => T): T = {
-    spark.conf.set("spark.graft.topk.rewrite", on.toString)
-    try body finally spark.conf.unset("spark.graft.topk.rewrite")
-  }
 
   private def sample: DataFrame = {
     import spark.implicits._
@@ -34,13 +29,13 @@ class RewriteRankFilterSpec extends SparkSpecBase {
 
   private def exec(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
-  test("the rewrite is off by default — stock plans keep WindowExec") {
+  test("not lowered unless asked — stock plans keep WindowExec") {
     val p = exec(windowed(sample))
-    assert(!p.contains("TopKPerKey"), "default-off flag did not hold")
+    assert(!p.contains("TopKPerKey"), "the session's optimizer lowered a frame nobody asked for")
   }
 
   test("the window row_number idiom lowers to TopKPerKeyExec with no sort") {
-    val p = withRule(true) { exec(windowed(sample)) }
+    val p = exec(lower(windowed(sample)))
     assert(p.contains("TopKPerKey"), s"rewrite did not fire:\n${p.take(1500)}")
     assert(!p.contains("WindowExec") && !p.contains("Window "),
       s"WindowExec survived the rewrite:\n${p.take(1500)}")
@@ -50,12 +45,10 @@ class RewriteRankFilterSpec extends SparkSpecBase {
   test("rewritten results equal the WindowExec plan row-for-row on a total order") {
     val df = sample.cache()
     try {
-      val rewritten = withRule(true) {
-        val d = windowed(df)
-        assert(exec(d).contains("TopKPerKey"), "rewrite did not fire on the comparison plan")
-        d.collect().map(_.toString).sorted
-      }
-      val stock = withRule(false) { windowed(df).collect().map(_.toString).sorted }
+      val d = lower(windowed(df))
+      assert(exec(d).contains("TopKPerKey"), "rewrite did not fire on the comparison plan")
+      val rewritten = d.collect().map(_.toString).sorted
+      val stock = windowed(df).collect().map(_.toString).sorted
       assert(rewritten.sameElements(stock), "rewrite changed the result set")
     } finally df.unpersist()
   }
@@ -63,18 +56,14 @@ class RewriteRankFilterSpec extends SparkSpecBase {
   test("keeping the rank column refuses the rewrite") {
     val w = Window.partitionBy(col("k")).orderBy(col("v").desc, col("id").asc)
     val df = sample.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-    withRule(true) {
-      assert(!exec(df.select(col("k"), col("rn"))).contains("TopKPerKey"),
-        "rewrite fired although the caller kept the rank")
-    }
+    assert(!exec(lower(df.select(col("k"), col("rn")))).contains("TopKPerKey"),
+      "rewrite fired although the caller kept the rank")
   }
 
   test("rank() refuses the rewrite — ties may admit more than k rows") {
     val w = Window.partitionBy(col("k")).orderBy(col("v").desc)
     val df = sample.withColumn("rn", rank().over(w)).filter(col("rn") <= 3).drop("rn")
-    withRule(true) {
-      assert(!exec(df).contains("TopKPerKey"), "rewrite fired on rank()")
-    }
+    assert(!exec(lower(df)).contains("TopKPerKey"), "rewrite fired on rank()")
   }
 
   test("a second window expression refuses the rewrite") {
@@ -83,19 +72,15 @@ class RewriteRankFilterSpec extends SparkSpecBase {
       .withColumn("rn", row_number().over(w))
       .withColumn("total", count(lit(1)).over(Window.partitionBy(col("k"))))
       .filter(col("rn") <= 3).drop("rn")
-    withRule(true) {
-      assert(!exec(df).contains("TopKPerKey"),
-        "rewrite fired although the Window computes more than the rank")
-    }
+    assert(!exec(lower(df)).contains("TopKPerKey"),
+      "rewrite fired although the Window computes more than the rank")
   }
 
   test("global top-k (no partition keys) lowers too") {
     val w = Window.orderBy(col("v").desc, col("id").asc)
-    val df = sample.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5).drop("rn")
-    withRule(true) {
-      val p = exec(df)
-      assert(p.contains("TopKPerKey"), s"global form did not lower:\n${p.take(1500)}")
-      assert(df.count() == 5)
-    }
+    val df = lower(sample.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5).drop("rn"))
+    val p = exec(df)
+    assert(p.contains("TopKPerKey"), s"global form did not lower:\n${p.take(1500)}")
+    assert(df.count() == 5)
   }
 }

