@@ -48,12 +48,12 @@ object GraftSession extends org.apache.spark.internal.Logging {
     * masters the executors share the driver heap, so Runtime.maxMemory
     * is the honest input. To override it, set
     * `SPARK_GRAFT_CONF="spark.sql.autoBroadcastJoinThreshold=<bytes>"`. */
-  def broadcastMax: String = derivedBroadcastMax(executorMemoryBytes, master).toString
+  def broadcastMax: String = derivedBroadcastMax(executorMemoryBytes).toString
 
   /** The derivation, pure so GraftSessionSpec can pin it:
     * min(64 MB, executor heap / 384), floored at 1 MB so a tiny-heap
     * test config still broadcasts single-row builds. */
-  def derivedBroadcastMax(executorHeapBytes: Long, master: String): Long = {
+  def derivedBroadcastMax(executorHeapBytes: Long): Long = {
     val cap = 64L * 1024 * 1024
     math.max(1L * 1024 * 1024, math.min(cap, executorHeapBytes / 384))
   }

@@ -97,4 +97,14 @@ object Profile {
         so.fold(-1L)(_.numRowsTotal),
         so.fold(-1L)(_.customMetrics.getOrDefault("rocksdbSstFileSize", -1L)))
     }
+
+  /** One JSON object per batch of `q` that read input: batch, rows,
+    * trigger time and the first state operator's rows and RocksDB SST
+    * bytes — the stream probes' progress record. */
+  def progressJson(q: StreamingQuery): Seq[String] =
+    progress(q).filter(_.input_rows > 0).map { p =>
+      s"""{"batch":${p.batch_id},"input_rows":${p.input_rows},""" +
+        s""""trigger_ms":${p.trigger_ms},"state_rows":${p.state_rows},""" +
+        s""""rocksdb_sst_bytes":${p.rocksdb_sst_bytes}}"""
+    }
 }

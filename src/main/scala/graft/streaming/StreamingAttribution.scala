@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import EventStreamPipeline.micros
@@ -18,7 +18,11 @@ import EventStreamPipeline.micros
   * Credit arithmetic is the batch query's exactly — integer cents via
   * floor(value·100), linear split cents div n with the remainder on the
   * LAST touch — so the drained credit rows aggregate to the identical
-  * census, asserted with no tolerance.
+  * census, asserted with no tolerance. Each row carries its touch's
+  * event id `t_id` (-1 on the unattributed row), so (p_id, t_id) keys
+  * it: a replayed batch re-emits identical rows, which a distinct
+  * absorbs — without the key, two middle touches of one type give equal
+  * rows that a distinct would merge.
   *
   * Order contract: rows sort by (event-time µs, event_id) within a
   * micro-batch; in-order delivery ACROSS batches is the documented
@@ -37,7 +41,7 @@ object StreamingAttribution {
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
   case class Touch(t_us: Long, t_id: Long, touch_type: String)
-  case class CreditRow(p_id: Long, touch_type: String,
+  case class CreditRow(p_id: Long, t_id: Long, touch_type: String,
                        first_cents: Long, last_cents: Long, linear_cents: Long)
 
   class Processor extends StatefulProcessor[Long, Event, CreditRow] {
@@ -69,10 +73,10 @@ object StreamingAttribution {
             val inWin = window.filter(t => t.t_us >= eUs - HourUs && t.t_us < eUs)
             val n = inWin.length.toLong
             if (n == 0)
-              out += CreditRow(e.event_id, "unattributed", cents, cents, cents)
+              out += CreditRow(e.event_id, -1L, "unattributed", cents, cents, cents)
             else inWin.zipWithIndex.foreach { case (t, i) =>
               val rn = i + 1L
-              out += CreditRow(e.event_id, t.touch_type,
+              out += CreditRow(e.event_id, t.t_id, t.touch_type,
                 if (rn == 1L) cents else 0L,
                 if (rn == n) cents else 0L,
                 cents / n + (if (rn == n) cents % n else 0L))
@@ -85,17 +89,15 @@ object StreamingAttribution {
     }
   }
 
-  /** Streaming entry: events parquet stream → per-user touch state →
-    * per-purchase credit rows appended to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Events parquet stream → per-user touch state → per-purchase credit
+    * rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[CreditRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[CreditRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

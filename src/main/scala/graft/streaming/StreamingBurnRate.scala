@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
@@ -44,18 +44,16 @@ object StreamingBurnRate {
     }
   }
 
-  /** Streaming entry: events parquet stream → 30-min bucket key →
-    * incremental per-bucket error census → per-batch snapshot rows. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Events parquet stream → 30-min bucket key → incremental per-bucket
+    * error census → per-batch snapshot rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[BucketRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(expr("unix_micros(ts) div 1800000000").as("bucket"),
         (col("event_type") === "error").cast("long").as("is_err"))
       .as[Ev]
       .groupByKey(_.bucket)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[BucketRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
@@ -55,19 +55,17 @@ object StreamingContractGate {
     }
   }
 
-  /** Streaming entry: events parquet stream → per-row contract
-    * predicates fanned out to one row per check → incremental per-check
-    * counters → per-batch snapshot rows. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Events parquet stream → per-row contract predicates fanned out to
+    * one row per check → incremental per-check counters → per-batch
+    * snapshot rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[GateRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(explode(checkPairs).as("c"))
       .select(col("c.check").as("check"), col("c.ok").as("ok"))
       .as[CheckRow]
       .groupByKey(_.check)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[GateRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

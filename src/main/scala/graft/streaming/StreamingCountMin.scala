@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming._
   * Increments are commutative, so arrival order never matters: any
   * interleaving, restart, or replay of micro-batches yields the same
   * final counters, which must equal the batch census bit-for-bit (the
-  * StreamingCountMinSpec contract). Hash constants are the batch
+  * contract StreamOperatorSpec checks). Hash constants are the batch
   * query's — the streamed sketch and the batch certification answer
   * identical point queries.
   */
@@ -50,23 +50,21 @@ object StreamingCountMin {
     }
   }
 
-  /** Streaming entry: events parquet stream → 4 hash cells per event →
-    * incremental counter census → per-batch snapshot rows. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Events parquet stream → 4 hash cells per event → incremental
+    * counter census → per-batch snapshot rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[CellRow] = {
     import spark.implicits._
     val cells = (0 until 4).map { j =>
       struct(expr(
         s"${j}L * $W + (((user_id % 1000003L) * ${A(j)}L + ${B(j)}L) % 1000003L) % $W")
         .as("cell"))
     }
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(explode(array(cells: _*)).as("h"))
       .select(col("h.cell").as("cell"))
       .as[Cell]
       .groupByKey(_.cell)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[CellRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

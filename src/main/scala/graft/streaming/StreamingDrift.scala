@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types._
@@ -53,17 +53,15 @@ object StreamingDrift {
     }
   }
 
-  /** Streaming entry: documents parquet stream → bin key → incremental
-    * per-bin census → per-batch snapshot rows appended to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Documents parquet stream → bin key → incremental per-bin census →
+    * per-batch snapshot rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[DriftRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, docSchema, srcDir, 1)
+    Drain.parquetSource(spark, docSchema, srcDir, 1)
       .select(col("doc_id"), col("n_chars"))
       .as[Doc]
       .groupByKey(d => math.min(d.n_chars / 100L, 19L))
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[DriftRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import EventStreamPipeline.micros
@@ -50,17 +50,15 @@ object StreamingEwma {
     }
   }
 
-  /** Streaming entry: events parquet stream → typed → transformWithState
-    * → per-batch snapshot rows appended to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Events parquet stream → typed → transformWithState → per-batch
+    * snapshot rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[EwmaRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .as[Event]
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[EwmaRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import EventStreamPipeline.micros
 
 /** SURVEY.md §2.9 depth — the streaming face of `w4_funnel`: a per-user
@@ -81,18 +81,16 @@ object StreamingFunnel {
     }
   }
 
-  /** Streaming entry: events parquet stream → typed → stage machine →
-    * append snapshots (stages only advance; the max stage per user is
-    * the funnel position). */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String, idleMs: Long = 3600000L): StreamingQuery = {
+  /** Events parquet stream → typed → stage machine → snapshots (stages
+    * only advance; the max stage per user is the funnel position). */
+  def stream(spark: SparkSession, srcDir: String,
+             idleMs: Long = 3600000L): Dataset[FunnelSnapshot] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .as[Event]
       .withWatermark("ts", "1 hour")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(advance(idleMs))
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

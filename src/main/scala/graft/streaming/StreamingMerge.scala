@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming face of the `u4_merge_upsert` operator — foreachBatch
   * CDC apply into a keyed snapshot, the Delta-style MERGE loop built on
@@ -77,19 +76,19 @@ object StreamingMerge {
     versions(snapDir).filter(_._1 < beforeBatch)
       .lastOption.map { case (_, f) => spark.read.parquet(f.getAbsolutePath) }
 
-  /** Streaming entry: events stream → per-batch reduce → merge with the
-    * previous version → write version `v<batchId>`. */
-  def run(spark: SparkSession, srcDir: String, snapDir: String,
-          checkpointDir: String): StreamingQuery = {
-    val stream = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
-    Drain(stream, checkpointDir) { (batch, batchId) =>
-      val delta = reduceBatch(batch)
-      val merged = latestSnapshot(spark, snapDir, beforeBatch = batchId) match {
-        case Some(prev) => merge(prev, delta)
-        case None => delta
-      }
-      merged.write.mode("overwrite")
-        .parquet(f"$snapDir/v$batchId%05d")
+  /** The raw change stream: events, four files per micro-batch. */
+  def stream(spark: SparkSession, srcDir: String): DataFrame =
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
+
+  /** The apply sink: per-batch reduce → merge with the version before
+    * this batch → write version `v<batchId>` under `snapDir`. */
+  def sink(snapDir: String): (DataFrame, Long) => Unit = { (batch, batchId) =>
+    val delta = reduceBatch(batch)
+    val merged = latestSnapshot(batch.sparkSession, snapDir, beforeBatch = batchId) match {
+      case Some(prev) => merge(prev, delta)
+      case None => delta
     }
+    merged.write.mode("overwrite")
+      .parquet(f"$snapDir/v$batchId%05d")
   }
 }

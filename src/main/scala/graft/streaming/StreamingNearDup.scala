@@ -86,28 +86,16 @@ object StreamingNearDup {
   /** Parquet files the stream reads per micro-batch. */
   val FilesPerBatch = 2
 
-  /** Streaming entry: documents parquet stream → band rows → keyed state
-    * → distinct candidate pairs appended to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery =
-    runWithSink(spark, srcDir, checkpointDir, Drain.appendParquet(sinkDir))
-
-  /** Same pipeline with a caller-supplied foreachBatch sink — the probe
-    * surface: crash-recovery probes inject a sink that writes and then
-    * throws, so the stream dies with that batch UNCOMMITTED in the offset
-    * log and the restart must replay it (foreachBatch is at-least-once;
-    * the candidate pair set is deterministic, so replays are absorbed by
-    * a distinct on read — exactly the contract a parquet-append consumer
-    * of this stream relies on). */
-  def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
-                  sink: (Dataset[CandPair], Long) => Unit): StreamingQuery = {
+  /** Documents parquet stream → band rows → keyed state → candidate
+    * pairs. The pair set is deterministic, so a replayed batch is
+    * absorbed by a distinct on read. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[CandPair] = {
     import spark.implicits._
     val docs = Drain.parquetSource(spark, StreamingDrift.docSchema, srcDir, FilesPerBatch)
-    val pairs = bandRows(docs)
+    bandRows(docs)
       .as[BandRow]
       .groupByKey(r => s"${r.b}|${r.band_key}")
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[CandPair])
-    Drain(pairs, checkpointDir)(sink)
   }
 }

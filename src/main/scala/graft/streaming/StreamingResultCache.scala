@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types.StructType
@@ -61,23 +61,24 @@ object StreamingResultCache {
     }
   }
 
-  /** Streaming entry: request-log parquet stream → typed →
-    * transformWithState → served rows appended to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String, ttlSeconds: Long,
-          compute: (Long, Long) => Long): StreamingQuery = {
+  /** Request-log parquet stream → typed → transformWithState → served
+    * rows. */
+  def stream(spark: SparkSession, srcDir: String, ttlSeconds: Long,
+             compute: (Long, Long) => Long): Dataset[Served] = {
     import spark.implicits._
-    val served = Drain
+    Drain
       .parquetSource(spark, StructType.fromDDL("key LONG, ts TIMESTAMP"), srcDir, 1)
       .as[Req]
       .groupByKey(_.key)
       .transformWithState(new Processor(ttlSeconds, compute), TimeMode.None(),
         OutputMode.Append(), Encoders.product[Served])
-    Drain(served, checkpointDir) { (batch, batchId) =>
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(sinkDir)
-    }
   }
+
+  /** The served-log sink: each batch's rows appended under `sinkDir`
+    * with their `batch_id`, so per-batch censuses stay readable. */
+  def sink(sinkDir: String): (Dataset[Served], Long) => Unit =
+    (batch, batchId) => batch.withColumn("batch_id", lit(batchId))
+      .write.mode("append").parquet(sinkDir)
 
   /** The MEMOIZING face: the value arrives ON the row (computed by an
     * upstream stage — e.g. the routed-collect responses in

@@ -71,25 +71,16 @@ object StreamingRetention {
     }
   }
 
-  /** Streaming entry: events parquet stream → typed → transformWithState
-    * → per-batch per-user snapshots appended to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery =
-    runWithSink(spark, srcDir, checkpointDir, Drain.appendParquet(sinkDir))
-
-  /** Same pipeline with a caller-supplied foreachBatch sink — the
-    * crash-probe surface (see StreamingNearDup.runWithSink): snapshots
-    * are monotone per user (masks only gain bits), so an at-least-once
-    * replayed batch is absorbed by max(mask) per user downstream. */
-  def runWithSink(spark: SparkSession, srcDir: String, checkpointDir: String,
-                  sink: (Dataset[RetRow], Long) => Unit): StreamingQuery = {
+  /** Events parquet stream → typed → transformWithState → per-batch
+    * per-user snapshots (monotone per user: a replayed batch is absorbed
+    * by max(mask) per user downstream). */
+  def stream(spark: SparkSession, srcDir: String): Dataset[RetRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"))
       .as[Event]
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[RetRow])
-    Drain(out, checkpointDir)(sink)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming._
   * events seen (bounded-heap merge is associative/commutative over sets,
   * the same argument as the batch operator's partial pass), so the final
   * snapshot equals the batch operator's answer under any micro-batch
-  * partitioning — the property StreamingTopKSpec asserts.
+  * partitioning — the property StreamOperatorSpec asserts.
   *
   * Emission: one sequence-numbered snapshot of the full top-k per key
   * per micro-batch the key appears in; `seq` makes "the final state" a
@@ -36,6 +36,10 @@ object StreamingTopK {
   /** Keep the k largest by (value DESC, event_id ASC) — the same order
     * contract as the batch operator in o2_topk_custom. */
   val K = 3
+
+  /** The stream keeps users below this id: the key space of the batch
+    * twin it is checked against. */
+  val UserCap = 25L
 
   class Processor extends StatefulProcessor[Long, Event, TopKRow] {
     @transient private var members: MapState[Long, Double] = _
@@ -73,19 +77,15 @@ object StreamingTopK {
     }
   }
 
-  /** Streaming entry: events parquet stream → top-k snapshots appended
-    * to the sink. `userCap` bounds the key space to match the batch
-    * query under test. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String, userCap: Long = 25): StreamingQuery = {
+  /** Events parquet stream → top-k snapshots. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[TopKRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
-      .filter(col("user_id") < userCap)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
+      .filter(col("user_id") < UserCap)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.None(), OutputMode.Append(),
         Encoders.product[TopKRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

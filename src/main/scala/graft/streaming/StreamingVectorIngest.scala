@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.PqIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming ANN-index maintenance: arriving vectors are PQ-encoded
@@ -55,14 +54,13 @@ object StreamingVectorIngest {
     else Some(spark.read.parquet(dirs.map(_.getAbsolutePath): _*))
   }
 
-  /** Streaming entry: vector files → per-batch PQ encode → append-only
-    * write-once segment per micro-batch. */
-  def run(spark: SparkSession, srcDir: String, indexDir: String,
-          checkpointDir: String, codebook: DataFrame): StreamingQuery = {
-    val stream = Drain.parquetSource(spark, vectorSchema, srcDir, 1)
-    Drain(stream, checkpointDir) { (batch, batchId) =>
-      encodeBatch(batch, codebook).write.mode("overwrite")
-        .parquet(f"$indexDir/b$batchId%05d")
-    }
-  }
+  /** The raw vector stream, one file per micro-batch. */
+  def stream(spark: SparkSession, srcDir: String): DataFrame =
+    Drain.parquetSource(spark, vectorSchema, srcDir, 1)
+
+  /** The ingest sink: per-batch PQ encode → write-once segment
+    * `b<batchId>` under `indexDir`. */
+  def sink(indexDir: String, codebook: DataFrame): (DataFrame, Long) => Unit =
+    (batch, batchId) => encodeBatch(batch, codebook).write.mode("overwrite")
+      .parquet(f"$indexDir/b$batchId%05d")
 }

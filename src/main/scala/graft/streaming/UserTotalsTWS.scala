@@ -1,15 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
-/** SURVEY.md §2.9 T3/T5 depth — the same per-user accumulator as
-  * [[StatefulEventTracker]] re-expressed on `transformWithState`, Spark
-  * 4.x's arbitrary-state API (SPARK-46815): explicit typed state cells
-  * (`ValueState`) instead of one opaque state object, first-class
-  * event-time timers (`registerTimer`/`handleExpiredTimer`) instead of a
-  * single timeout slot, and TTL support per state cell.
+/** SURVEY.md §2.9 T3/T5 depth — custom keyed state on
+  * `transformWithState`, Spark 4.x's arbitrary-state API (SPARK-46815):
+  * the per-entity accumulator the reference's fire-and-forget event path
+  * never kept. Explicit typed state cells (`ValueState`) instead of
+  * flatMapGroupsWithState's one opaque state object (StreamingFunnel
+  * keeps that API), first-class event-time timers
+  * (`registerTimer`/`handleExpiredTimer`) instead of a single timeout
+  * slot, and TTL support per state cell.
   *
   * Why it matters at scale: state cells are individually addressable in
   * the RocksDB state store (no full-object rewrite per update), and
@@ -78,18 +80,16 @@ object UserTotalsTWS {
     }
   }
 
-  /** Streaming entry: events parquet stream → typed → transformWithState
-    * → append rows to the sink. */
-  def run(spark: SparkSession, srcDir: String, sinkDir: String,
-          checkpointDir: String): StreamingQuery = {
+  /** Events parquet stream → typed → transformWithState → snapshot and
+    * final rows. */
+  def stream(spark: SparkSession, srcDir: String): Dataset[UserRow] = {
     import spark.implicits._
-    val out = Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
+    Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 4)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
       .withWatermark("ts", "1 hour")
       .groupByKey(_.user_id)
       .transformWithState(new Processor, TimeMode.EventTime(), OutputMode.Append(),
         Encoders.product[UserRow])
-    Drain(out, checkpointDir)(Drain.appendParquet(sinkDir))
   }
 }

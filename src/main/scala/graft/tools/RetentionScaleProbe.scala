@@ -1,7 +1,8 @@
 package graft.tools
 
-import graft.GraftSession
-import graft.streaming.StreamingRetention
+import graft.{GraftSession, Profile}
+import graft.streaming.{Drain, StreamingRetention}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -93,8 +94,9 @@ object RetentionScaleProbe {
     val stage = s"$work/staged"; val sink = s"$work/snaps"; val ck = s"$work/ck"
     val nDays = stageByDay(spark, eventsDir, stage)
 
-    val (crashedAt, crashSurfaced, p1, p2) = StreamScaleProbe.crashThenDrain[StreamingRetention.RetRow](
-      sink, 5)(StreamingRetention.runWithSink(spark, stage, ck, _))(StreamingRetention.run(spark, stage, sink, ck))
+    val (crashedAt, crashSurfaced, q1, q2) = Drain.crashThenDrain(
+      StreamingRetention.stream(spark, stage), ck, 5)(Drain.appendParquet(sink))
+    val (p1, p2) = (Profile.progressJson(q1), Profile.progressJson(q2))
 
     // ---- correctness: streamed triangle == batch triangle ---------------
     val streamed = triangleFromSnapshots(spark.read.parquet(sink)).cache()
@@ -109,7 +111,7 @@ object RetentionScaleProbe {
       s""""n_events":$nEvents,"n_users":$nUsers,"n_day_files":$nDays,""" +
       s""""crashed_at_batch":$crashedAt,"crash_surfaced":$crashSurfaced,""" +
       s""""triangle_rows":${expected.count()},"missing":$missing,"extra":$extra,""" +
-      s""""match":$ok,"checkpoint_bytes":${StreamScaleProbe.dirBytes(ck)},""" +
+      s""""match":$ok,"checkpoint_bytes":${FileUtils.sizeOfDirectory(new java.io.File(ck))},""" +
       s""""progress_phase1":[${p1.mkString(",")}],""" +
       s""""progress_phase2":[${p2.mkString(",")}]}"""
     println(line)

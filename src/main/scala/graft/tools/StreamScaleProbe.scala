@@ -1,10 +1,9 @@
 package graft.tools
 
 import graft.{GraftSession, Profile}
-import graft.streaming.StreamingNearDup
-import org.apache.spark.sql.Dataset
+import graft.streaming.{Drain, StreamingNearDup}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming-state-at-scale probe (VERDICT r10 next #7, crash-realism
   * hardened per r11 ADVICE): runs the transformWithState near-dup
@@ -43,49 +42,6 @@ object StreamScaleProbe {
       s"(${StreamingNearDup.FilesPerBatch} per micro-batch, crash at batch $CrashBatch), found $n")
   }
 
-  /** One JSON object per progress event of `q` that read input: batch,
-    * rows, trigger time and the first state operator's rows and RocksDB
-    * SST bytes (-1 where absent). */
-  private[tools] def progressRows(q: StreamingQuery): Seq[String] =
-    Profile.progress(q).filter(_.input_rows > 0).map { p =>
-      s"""{"batch":${p.batch_id},"input_rows":${p.input_rows},""" +
-        s""""trigger_ms":${p.trigger_ms},"state_rows":${p.state_rows},""" +
-        s""""rocksdb_sst_bytes":${p.rocksdb_sst_bytes}}"""
-    }
-
-  /** The crash drill both stream probes run. The first run's sink
-    * appends each batch to `sink` and then throws on the first batch
-    * with id >= `crashFrom`: that batch's output lands but its offset
-    * commit never does, so the query dies with a genuinely UNCOMMITTED
-    * batch (not a graceful stop()'s clean commit). `restart` then runs
-    * from the same checkpoint and drains, replaying that batch against
-    * the version-restored RocksDB state. foreachBatch is at-least-once,
-    * so the replay appends the batch again; each probe's check absorbs
-    * that. Returns the crashed batch id, whether the crash surfaced as a
-    * failed query, and both runs' progress rows. */
-  private[tools] def crashThenDrain[T](sink: String, crashFrom: Long)(
-      crashing: ((Dataset[T], Long) => Unit) => StreamingQuery)(
-      restart: => StreamingQuery): (Long, Boolean, Seq[String], Seq[String]) = {
-    val crashedAt = new java.util.concurrent.atomic.AtomicLong(-1L) // set on the stream thread
-    val q1 = crashing { (batch, id) =>
-      batch.write.mode("append").parquet(sink)
-      if (id >= crashFrom && crashedAt.compareAndSet(-1L, id))
-        throw new RuntimeException(
-          s"graft injected post-write crash at batch $id (sink written, offset uncommitted)")
-    }
-    val surfaced =
-      try { q1.awaitTermination(); false }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
-    val q2 = restart
-    q2.awaitTermination() // AvailableNow: terminates when caught up
-    (crashedAt.get(), surfaced, progressRows(q1), progressRows(q2))
-  }
-
-  /** Total bytes of the regular files under `dir`. */
-  private[tools] def dirBytes(dir: String): Long =
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
-
   def main(args: Array[String]): Unit = {
     val docsDir = if (args.length > 0) args(0)
       else "/root/repo/target/scale/sf1/documents.parquet"
@@ -98,8 +54,9 @@ object StreamScaleProbe {
     val work = java.nio.file.Files.createTempDirectory("stream_probe").toString
     val sink = s"$work/pairs"; val ck = s"$work/ck"
 
-    val (crashedAt, crashSurfaced, p1, p2) = crashThenDrain[StreamingNearDup.CandPair](sink, CrashBatch)(
-      StreamingNearDup.runWithSink(spark, docsDir, ck, _))(StreamingNearDup.run(spark, docsDir, sink, ck))
+    val (crashedAt, crashSurfaced, q1, q2) = Drain.crashThenDrain(
+      StreamingNearDup.stream(spark, docsDir), ck, CrashBatch)(Drain.appendParquet(sink))
+    val (p1, p2) = (Profile.progressJson(q1), Profile.progressJson(q2))
 
     // ---- correctness: drained pairs == batch LSH candidate set ---------
     val docs = spark.read.parquet(docsDir)
@@ -129,7 +86,7 @@ object StreamScaleProbe {
       s""""crash_surfaced":$crashSurfaced,"raw_sink_rows":$nRaw,""" +
       s""""expected_pairs":$nExpected,"streamed_pairs":$nStreamed,""" +
       s""""missing":$missing,"extra":$extra,"match":$ok,""" +
-      s""""checkpoint_bytes":${dirBytes(ck)},""" +
+      s""""checkpoint_bytes":${FileUtils.sizeOfDirectory(new java.io.File(ck))},""" +
       s""""progress_phase1":[${p1.mkString(",")}],""" +
       s""""progress_phase2":[${p2.mkString(",")}]}"""
     println(line)

@@ -19,16 +19,16 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("derived ceiling reproduces the measured-good sf10 config: 3g heap -> 8 MB") {
-    val m = GraftSession.derivedBroadcastMax(3L * 1024 * 1024 * 1024, "local-cluster[2,2,4096]")
+    val m = GraftSession.derivedBroadcastMax(3L * 1024 * 1024 * 1024)
     assert(m == 8L * 1024 * 1024)
   }
 
   test("big heaps cap at 64 MB; Spark-default 1g executors get ~2.7 MB; tiny heaps floor at 1 MB") {
-    assert(GraftSession.derivedBroadcastMax(128L * 1024 * 1024 * 1024, "local[32]") == 64L * 1024 * 1024)
-    val oneG = GraftSession.derivedBroadcastMax(1L * 1024 * 1024 * 1024, "local-cluster[2,2,1024]")
+    assert(GraftSession.derivedBroadcastMax(128L * 1024 * 1024 * 1024) == 64L * 1024 * 1024)
+    val oneG = GraftSession.derivedBroadcastMax(1L * 1024 * 1024 * 1024)
     assert(oneG == (1L * 1024 * 1024 * 1024) / 384)
     assert(oneG > 2L * 1024 * 1024 && oneG < 3L * 1024 * 1024)
-    assert(GraftSession.derivedBroadcastMax(64L * 1024 * 1024, "local[2]") == 1L * 1024 * 1024)
+    assert(GraftSession.derivedBroadcastMax(64L * 1024 * 1024) == 1L * 1024 * 1024)
   }
 
   test("broadcastMax is derived; local masters read this JVM's heap") {
@@ -36,7 +36,7 @@ class GraftSessionSpec extends AnyFunSuite {
     // executor memory configured the in-process test master's executor
     // heap IS this JVM's max heap
     assert(GraftSession.broadcastMax ==
-      GraftSession.derivedBroadcastMax(GraftSession.executorMemoryBytes, GraftSession.master).toString)
+      GraftSession.derivedBroadcastMax(GraftSession.executorMemoryBytes).toString)
     if (sys.props.get("spark.executor.memory").isEmpty &&
         sys.env.get("SPARK_EXECUTOR_MEMORY").isEmpty)
       assert(GraftSession.executorMemoryBytes == Runtime.getRuntime.maxMemory)

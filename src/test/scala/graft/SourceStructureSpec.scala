@@ -7,10 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * copy-paste regrowth: the state-store provider is set once, in the
   * session builder, as are the local filesystem and the streaming
   * checkpoint file manager; the AvailableNow drain lives once, in
-  * `streaming/Drain`; no stream restates the default append output
-  * mode; and `graft.Profile` is the one listener of any kind, while no
-  * main source writes the calling thread's job group. Reads the main
-  * sources as text (run from the repo root, as sbt's forked tests are). */
+  * `streaming/Drain`, and only the two pipelines and the drill call it
+  * (each operator is an un-drained `stream` with a row in
+  * `StreamOperatorSpec`'s table); no stream restates the default append
+  * output mode; and `graft.Profile` is the one listener of any kind,
+  * while no main source writes the calling thread's job group. Reads
+  * the main sources as text (run from the repo root, as sbt's forked
+  * tests are). */
 class SourceStructureSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala/graft")
@@ -54,5 +57,22 @@ class SourceStructureSpec extends AnyFunSuite {
     for (needle <- Seq("QueryExecutionListener", "StreamingQueryListener",
         "listenerManager.register", "streams.addListener", "setJobGroup"))
       assert(filesWith(needle).isEmpty, s"$needle in ${filesWith(needle)}")
+  }
+
+  test("operators return un-drained streams: only the pipelines and the drill drain") {
+    val drainers = filesWith("Drain(").filter(_.startsWith("streaming/")).toSet
+    assert(drainers.subsetOf(Set("streaming/Drain.scala", "streaming/EventStreamPipeline.scala",
+      "streaming/ServingPipeline.scala")), s"operators that drain themselves: $drainers")
+    assert(filesWith("runWithSink").isEmpty)
+    assert(filesWith("def crashThenDrain") == Seq("streaming/Drain.scala"))
+  }
+
+  test("every operator under streaming/ has a stream entry and a row in StreamOperatorSpec") {
+    val pipelines = Set("Drain", "EventStreamPipeline", "ServingPipeline")
+    val operators = sources.collect { case (path, text) if path.startsWith("streaming/") =>
+      path.stripPrefix("streaming/").stripSuffix(".scala") -> text
+    }.filterNot(o => pipelines(o._1))
+    assert(operators.map(_._1).toSet == StreamOperatorSpec.table.keySet)
+    for ((op, text) <- operators) assert(text.contains("def stream("), s"$op has no stream entry")
   }
 }
