@@ -6,8 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Stream-stream interval join: the streamed inner join must equal the
   * batch join on the same data once the stream drains. Source files are
-  * range-partitioned by ts so micro-batches arrive in rough time order
-  * and the 2h watermark covers cross-batch disorder. */
+  * range-partitioned by ts, and their mtimes are stamped in range order,
+  * because the file source reads files in mtime order: micro-batches then
+  * arrive in time order and the 2h watermark covers the rest. Parallel
+  * writers finish in any order, and a later ts range read first moves the
+  * watermark past an earlier one, whose rows the join then drops as late. */
 class IntervalJoinSpec extends SparkSpecBase {
 
   test("streamed click->purchase interval join equals the batch join") {
@@ -15,6 +18,9 @@ class IntervalJoinSpec extends SparkSpecBase {
     val events = Tables(spark, "/root/testdata/sf0.001").events
     events.repartitionByRange(6, col("ts")).sortWithinPartitions(col("ts"))
       .write.mode("overwrite").parquet(src)
+    for ((f, i) <- new java.io.File(src).listFiles().filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).zipWithIndex)
+      f.setLastModified(1000000000000L + i * 60000L)
 
     val sink = Files.createTempDirectory("ij_sink").toString
     val q = EventStreamPipeline.runIntervalJoin(spark, src, sink,

@@ -481,7 +481,34 @@ class StreamingResultCacheSpec extends StreamOperatorSpec("StreamingResultCache"
 class StreamingRetentionSpec extends StreamOperatorSpec("StreamingRetention")
 class StreamingScd2Spec extends StreamOperatorSpec("StreamingScd2")
 class StreamingTopKSpec extends StreamOperatorSpec("StreamingTopK")
-class StreamingVectorIngestSpec extends StreamOperatorSpec("StreamingVectorIngest")
+class StreamingVectorIngestSpec extends StreamOperatorSpec("StreamingVectorIngest") {
+  test("a restarted ingest resumes from the checkpoint: old vectors are not re-encoded") {
+    val base = Tables(spark, StreamOperatorSpec.Fixture).embeddings
+    val cb = StreamingVectorIngest.trainedCodebook(base).cache()
+    val src = Files.createTempDirectory("vrs_src").toString
+    val idx = Files.createTempDirectory("vrs_idx").toString
+    val ck = Files.createTempDirectory("vrs_ck").toString
+    def ingest() = Drain(StreamingVectorIngest.stream(spark, src), ck)(StreamingVectorIngest.sink(idx, cb))
+
+    val trancheA = base.filter(col("vec_id") < 250)
+    val trancheB = base.filter(col("vec_id") >= 250)
+
+    trancheA.repartition(2).write.mode("append").parquet(src)
+    assert(ingest().awaitTermination(120000), "first ingest did not drain")
+    val afterA = StreamingVectorIngest.indexSegments(spark, idx).get.count()
+    assert(afterA == trancheA.count() * 8, s"first ingest wrote $afterA code rows")
+
+    // "restart": same checkpoint, new vectors landed in the meantime
+    trancheB.repartition(2).write.mode("append").parquet(src)
+    assert(ingest().awaitTermination(120000), "restarted ingest did not drain")
+
+    val out = StreamingVectorIngest.indexSegments(spark, idx).get
+    assert(out.count() == base.count() * 8,
+      s"restart re-encoded or dropped vectors: index=${out.count()} expected=${base.count() * 8}")
+    assert(out.select("vec_id", "m").distinct().count() == base.count() * 8,
+      "duplicate (vec_id, m) code rows after restart")
+  }
+}
 class UserTotalsTWSSpec extends StreamOperatorSpec("UserTotalsTWS")
 
 class StreamingMergeSpec extends StreamOperatorSpec("StreamingMerge") {

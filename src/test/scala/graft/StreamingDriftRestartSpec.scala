@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.streaming.StreamingDrift
+import graft.streaming.{Drain, StreamingDrift}
 import graft.queries.QueryRegistry
 import org.apache.spark.sql.functions._
 
@@ -26,11 +26,11 @@ class StreamingDriftRestartSpec extends SparkSpecBase {
     val trancheB = docs.filter(col("doc_id") >= 250)
 
     trancheA.coalesce(2).write.mode("append").parquet(src)
-    val q1 = StreamingDrift.run(spark, src, sink, ck)
+    val q1 = Drain(StreamingDrift.stream(spark, src), ck)(Drain.appendParquet(sink))
     assert(q1.awaitTermination(120000), "first run did not drain within 120s")
 
     trancheB.coalesce(2).write.mode("append").parquet(src)
-    val q2 = StreamingDrift.run(spark, src, sink, ck)
+    val q2 = Drain(StreamingDrift.stream(spark, src), ck)(Drain.appendParquet(sink))
     assert(q2.awaitTermination(120000), "restarted run did not drain within 120s")
 
     // final census per bin = snapshot row with the largest total
