@@ -56,11 +56,19 @@ object Drain {
     * genuinely uncommitted batch (not a graceful stop()'s clean
     * commit). Then drain again from the same checkpoint: the restart
     * replays that batch against the version-restored state, and the
-    * sink sees it twice. Returns the crashed batch id (-1 when the
-    * input never reached `crashFrom`), whether the crash surfaced as a
-    * failed query, and both stopped queries. */
-  private[graft] def crashThenDrain[T](stream: => Dataset[T], checkpointDir: String, crashFrom: Long)
+    * sink sees it twice. Each of the two queries must stop within
+    * `timeoutMs`, else it is stopped and the drill throws. Returns the
+    * crashed batch id (-1 when the input never reached `crashFrom`),
+    * whether the crash surfaced as a failed query, and both stopped
+    * queries. */
+  private[graft] def crashThenDrain[T](stream: => Dataset[T], checkpointDir: String, crashFrom: Long,
+                                       timeoutMs: Long)
       (sink: (Dataset[T], Long) => Unit): (Long, Boolean, StreamingQuery, StreamingQuery) = {
+    def await(q: StreamingQuery, phase: String): Unit =
+      if (!q.awaitTermination(timeoutMs)) {
+        q.stop()
+        throw new IllegalStateException(s"the $phase query did not stop within $timeoutMs ms")
+      }
     val crashedAt = new java.util.concurrent.atomic.AtomicLong(-1L) // set on the stream thread
     val crashed = apply(stream, checkpointDir) { (batch, id) =>
       sink(batch, id)
@@ -69,10 +77,10 @@ object Drain {
           s"graft injected post-write crash at batch $id (sink written, offset uncommitted)")
     }
     val surfaced =
-      try { crashed.awaitTermination(); false }
+      try { await(crashed, "crashing"); false }
       catch { case _: StreamingQueryException => true }
     val restarted = apply(stream, checkpointDir)(sink)
-    restarted.awaitTermination() // AvailableNow: terminates when caught up
+    await(restarted, "restarted") // AvailableNow: terminates when caught up
     (crashedAt.get(), surfaced, crashed, restarted)
   }
 }

@@ -82,9 +82,10 @@ object StreamingFunnel {
   }
 
   /** Events parquet stream → typed → stage machine → snapshots (stages
-    * only advance; the max stage per user is the funnel position). */
-  def stream(spark: SparkSession, srcDir: String,
-             idleMs: Long = 3600000L): Dataset[FunnelSnapshot] = {
+    * only advance; the max stage per user is the funnel position). A
+    * user's state is evicted `idleMs` of event time after their last
+    * event. */
+  def stream(spark: SparkSession, srcDir: String, idleMs: Long): Dataset[FunnelSnapshot] = {
     import spark.implicits._
     Drain.parquetSource(spark, EventStreamPipeline.eventSchema, srcDir, 1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))

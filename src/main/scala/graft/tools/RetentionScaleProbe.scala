@@ -27,6 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object RetentionScaleProbe {
 
+  /** How long each of the drill's two queries may run: an hour, where
+    * each drained in under 50 s at sf1. */
+  val DrainTimeoutMs = 3600000L
+
   /** Stage the estate as one single-file parquet per activity day, file
     * names and mtimes ascending in day order so the file stream source
     * delivers days in order. */
@@ -95,7 +99,7 @@ object RetentionScaleProbe {
     val nDays = stageByDay(spark, eventsDir, stage)
 
     val (crashedAt, crashSurfaced, q1, q2) = Drain.crashThenDrain(
-      StreamingRetention.stream(spark, stage), ck, 5)(Drain.appendParquet(sink))
+      StreamingRetention.stream(spark, stage), ck, 5, DrainTimeoutMs)(Drain.appendParquet(sink))
     val (p1, p2) = (Profile.progressJson(q1), Profile.progressJson(q2))
 
     // ---- correctness: streamed triangle == batch triangle ---------------

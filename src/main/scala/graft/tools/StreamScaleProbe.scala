@@ -32,6 +32,10 @@ object StreamScaleProbe {
   val CrashBatch = 3
   val MinFiles: Int = StreamingNearDup.FilesPerBatch * CrashBatch + 1
 
+  /** How long each of the drill's two queries may run: an hour, where
+    * each drained in under 25 s at sf1. */
+  val DrainTimeoutMs = 3600000L
+
   /** Fails unless `dir` is a directory holding at least [[MinFiles]]
     * parquet files (hidden and `_` files skipped, as the source does). */
   def requireInput(dir: String): Unit = {
@@ -55,7 +59,7 @@ object StreamScaleProbe {
     val sink = s"$work/pairs"; val ck = s"$work/ck"
 
     val (crashedAt, crashSurfaced, q1, q2) = Drain.crashThenDrain(
-      StreamingNearDup.stream(spark, docsDir), ck, CrashBatch)(Drain.appendParquet(sink))
+      StreamingNearDup.stream(spark, docsDir), ck, CrashBatch, DrainTimeoutMs)(Drain.appendParquet(sink))
     val (p1, p2) = (Profile.progressJson(q1), Profile.progressJson(q2))
 
     // ---- correctness: drained pairs == batch LSH candidate set ---------

@@ -17,8 +17,9 @@ import org.scalatest.Assertions._
   * crashes right after batch [[CrashBatch]]'s sink ran and restarts from
   * the checkpoint, replaying that batch. Both times the operator's final
   * state — a query over its sink that absorbs replays (a max per key, or
-  * a distinct) — must equal its batch twin exactly: the registered,
-  * oracle-checked query where one exists, batch code here otherwise.
+  * [[Drained.rows]], distinct only after a replay) — must equal its batch
+  * twin exactly: the registered, oracle-checked query where one exists,
+  * batch code here otherwise.
   *
   * A row's input is a list of tranches; each partition of a tranche
   * lands as one file, in partition order. The clean drain lands and
@@ -32,10 +33,15 @@ import org.scalatest.Assertions._
 object StreamOperatorSpec {
   val Fixture = "/root/testdata/sf0.001"
   val CrashBatch = 1L
+  /** How long each drain, and each of the drill's two queries, may run. */
+  val DrainTimeoutMs = 300000L
 
   /** What a row's final-state query and extra checks see. */
   final case class Drained(t: Tables, sink: String, replayed: Boolean) {
     def read: DataFrame = t.spark.read.parquet(sink)
+    /** The sink's rows, a replayed batch's second copy absorbed: the raw
+      * multiset on a clean drain, so a duplicated row there still fails. */
+    def rows: DataFrame = if (replayed) read.distinct() else read
   }
 
   final case class Op[T](
@@ -167,7 +173,7 @@ object StreamOperatorSpec {
       "time-split streamed attribution equals the batch range-join census exactly",
       t => Seq(timeSplit(t.events, 4)),
       StreamingAttribution.stream,
-      d => d.read.distinct().groupBy(col("touch_type"))
+      d => d.rows.groupBy(col("touch_type"))
         .agg(count(lit(1)).as("n_touches"), countDistinct(col("p_id")).as("n_purchases"),
           sum(col("first_cents")).as("first_cents"), sum(col("last_cents")).as("last_cents"),
           sum(col("linear_cents")).as("linear_cents")),
@@ -185,7 +191,7 @@ object StreamOperatorSpec {
       "time-split streamed change detection equals the batch census exactly",
       t => Seq(timeSplit(t.events, 4)),
       StreamingChangeDetect.stream,
-      d => d.read.distinct().groupBy(col("event_type"))
+      d => d.rows.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"), count(when(col("changed"), 1)).as("n_changes"),
           count(when(!col("changed"), 1)).as("n_repeats")),
       t => registered(t, "w8_change_detect").select("event_type", "n_events", "n_changes", "n_repeats"),
@@ -307,7 +313,7 @@ object StreamOperatorSpec {
       t => cacheFold(t)._2,
       sink = (_, dir) => StreamingResultCache.sink(dir),
       extra = d => assertSame(
-        d.read.distinct().groupBy(col("batch_id"), col("outcome"))
+        d.rows.groupBy(col("batch_id"), col("outcome"))
           .agg(count(lit(1)).as("n"), sum(col("v")).as("sv")),
         cacheFold(d.t)._1)),
 
@@ -332,7 +338,7 @@ object StreamOperatorSpec {
       "time-split streamed SCD2 intervals equal the batch history's closed rows",
       t => Seq(timeSplit(t.events, 4)),
       StreamingScd2.stream,
-      d => d.read.distinct(),
+      d => d.rows,
       t => registered(t, "u5_scd2_history").filter(col("valid_to_us") =!= -1L)
         .select("user_id", "version", "event_type", "valid_from_us", "valid_to_us"),
       extra = d => {
@@ -347,7 +353,7 @@ object StreamOperatorSpec {
       "streamed MapState top-k converges to the batch top-k operator",
       t => Seq(t.events.repartitionByRange(6, col("ts")).sortWithinPartitions(col("ts"))),
       StreamingTopK.stream,
-      d => d.read.distinct().join(d.read.groupBy("user_id").agg(max("seq").as("seq")), Seq("user_id", "seq"))
+      d => d.rows.join(d.read.groupBy("user_id").agg(max("seq").as("seq")), Seq("user_id", "seq"))
         .select("user_id", "event_id", "value"),
       t => TopK.perKey(t.events.filter(col("user_id") < 25),
           Seq("user_id"), Seq(col("value").desc, col("event_id").asc), StreamingTopK.K)
@@ -357,7 +363,7 @@ object StreamOperatorSpec {
         assert(d.read.agg(max("seq")).head().getLong(0) >= 2, "expected multi-batch incremental updates")
         // ranks within a snapshot follow (value DESC, event_id ASC)
         val w = Window.partitionBy(col("user_id"), col("seq")).orderBy(col("value").desc, col("event_id").asc)
-        assert(d.read.distinct().withColumn("expect", row_number().over(w))
+        assert(d.rows.withColumn("expect", row_number().over(w))
           .filter(col("rank") =!= col("expect")).isEmpty, "snapshot rows have inconsistent ranks")
       }),
 
@@ -442,13 +448,13 @@ object StreamOperatorSpec {
       if (crash) {
         row.input(t).foreach(land(src, _))
         val (crashedAt, surfaced, _, _) =
-          Drain.crashThenDrain(row.stream(spark, src), ck, CrashBatch)(row.sink(t, sink))
+          Drain.crashThenDrain(row.stream(spark, src), ck, CrashBatch, DrainTimeoutMs)(row.sink(t, sink))
         assert(crashedAt == CrashBatch && surfaced,
           s"no crash at batch $CrashBatch: crashed at $crashedAt, failed query: $surfaced")
       } else row.input(t).foreach { tranche =>
         land(src, tranche)
-        assert(Drain(row.stream(spark, src), ck)(row.sink(t, sink)).awaitTermination(300000),
-          "the drain did not finish within 300 s")
+        assert(Drain(row.stream(spark, src), ck)(row.sink(t, sink)).awaitTermination(DrainTimeoutMs),
+          s"the drain did not finish within $DrainTimeoutMs ms")
       }
       val d = Drained(t, sink, replayed = crash)
       assertSame(row.state(d), row.twin(t))
@@ -468,7 +474,30 @@ abstract class StreamOperatorSpec(op: String) extends SparkSpecBase {
     drive(spark, row, crash = true))
 }
 
-class StreamingAttributionSpec extends StreamOperatorSpec("StreamingAttribution")
+class StreamingAttributionSpec extends StreamOperatorSpec("StreamingAttribution") {
+  test("after a replay, two same-type middle touches of one purchase stay two credit rows") {
+    import StreamOperatorSpec._
+    import spark.implicits._
+    def ev(id: Long, hhmm: String, user: Long, typ: String, value: Double) =
+      (id, java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00"), user, typ, value, Option.empty[String])
+    def file(evs: (Long, java.sql.Timestamp, Long, String, Double, Option[String])*) =
+      evs.toDF("event_id", "ts", "user_id", "event_type", "value", "props").coalesce(1)
+    // batch 0: four touches then a 10.25 purchase, so the clicks (touches 2
+    // and 3) each get linear credit 1025 div 4 = 256 and no first/last
+    // credit; batch 1, the replayed one: an unattributed 3.00 purchase
+    val row = table("StreamingAttribution").asInstanceOf[Op[StreamingAttribution.CreditRow]]
+    val handBuilt = row.copy(
+      input = _ => Seq(
+        file(ev(1, "10:00", 1, "view", 0), ev(2, "10:10", 1, "click", 0), ev(3, "10:20", 1, "click", 0),
+          ev(4, "10:30", 1, "view", 0), ev(5, "10:40", 1, "purchase", 10.25)),
+        file(ev(6, "11:00", 2, "purchase", 3.0))),
+      twin = _ => Seq(("click", 2L, 1L, 0L, 0L, 512L), ("view", 2L, 1L, 1025L, 1025L, 513L),
+          ("unattributed", 1L, 1L, 300L, 300L, 300L))
+        .toDF("touch_type", "n_touches", "n_purchases", "first_cents", "last_cents", "linear_cents"))
+    drive(spark, handBuilt, crash = false)
+    drive(spark, handBuilt, crash = true)
+  }
+}
 class StreamingBurnRateSpec extends StreamOperatorSpec("StreamingBurnRate")
 class StreamingChangeDetectSpec extends StreamOperatorSpec("StreamingChangeDetect")
 class StreamingContractGateSpec extends StreamOperatorSpec("StreamingContractGate")
