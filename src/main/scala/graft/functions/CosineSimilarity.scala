@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 /** SURVEY.md §2.10 D5 — native Catalyst expression for cosine similarity
   * over two `array<float>` columns.
   *
-  * The composed form (`aggregate(zip_with(...))`, SimilarityQueries.dot)
-  * is correct but allocates an intermediate product array per row and
-  * evaluates two higher-order lambdas; this expression is one fused loop
+  * The composed form (`aggregate(zip_with(...))` dot products over two
+  * norms) is correct but allocates an intermediate product array per
+  * row and evaluates two higher-order lambdas; this expression is one
+  * fused loop
   * with zero allocation, participates in whole-stage codegen via
   * `doGenCode`, and accumulates dot and both norms in a single pass —
   * the kernel shape that matters when ranking millions of candidate

@@ -7,16 +7,16 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** SURVEY.md §2.10 D5 — native Σ aᵢ·bᵢ over two `array<float>` columns:
-  * one fused zero-allocation codegen loop, the kernel the composed
-  * `aggregate(zip_with(...))` form evaluates through two interpreted
-  * higher-order lambdas plus an intermediate product array.
+  * one fused zero-allocation codegen loop, where the composed
+  * `aggregate(zip_with(...))` form evaluates two interpreted
+  * higher-order lambdas plus an intermediate product array. Every
+  * engine dot product calls it by name (`SimilarityQueries.dot`).
   *
   * Semantics mirror the composed form exactly: elements widen
   * float→double before multiply, accumulation is sequential
   * left-to-right, and a null element — or a length mismatch, which
-  * zip_with pads with nulls — poisons the result to null. That exact
-  * equivalence is what licenses [[FuseDotProduct]] to rewrite the
-  * composed pattern into this expression.
+  * zip_with pads with nulls — poisons the result to null.
+  * FuseDotProductSpec checks the two forms agree bit-for-bit.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

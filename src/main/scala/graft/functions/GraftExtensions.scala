@@ -7,11 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** Engine extension point (registered via `spark.sql.extensions`,
   * GraftSession): injects the native SQL functions so `cosine_sim(a, b)`
   * / `dot_product(a, b)` / `validation_mask(lat, lon, buffer_m,
-  * event_id)` are available to `expr()`/`spark.sql` everywhere, and
-  * the [[FuseDotProduct]] optimizer rule so the composed
-  * `aggregate(zip_with(...))` dot idiom is rewritten to the fused native
-  * kernel — the idiomatic way to ship custom Catalyst expressions and
-  * rewrites with a library. */
+  * event_id)` are available to `expr()`/`spark.sql` everywhere (engine
+  * code reaches them with `call_function`), plus the planner strategy
+  * for [[graft.plans.TopKPerKeyPlan]] — the idiomatic way to ship custom
+  * Catalyst expressions with a library. It injects no optimizer rule:
+  * a caller that wants a kernel calls it by name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -91,7 +91,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .BloomFilterMightContain(children(0), children(1))
       }
     ))
-    ext.injectOptimizerRule(_ => FuseDotProduct)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
 }

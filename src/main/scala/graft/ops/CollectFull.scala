@@ -37,6 +37,8 @@ import org.apache.spark.sql.functions._
   * shuffles are the per-site aggregates, keyed by the request id.
   */
 object CollectFull {
+  import CollectPipeline.{fireWeatherRisk, fireWeatherScore, landfireRisk, rangeBands, terrainClass,
+    vegetationHealth, vegetationRisk}
   import Fixtures._
 
   val RetrievedAt = "2024-06-01T12:00:00"
@@ -159,17 +161,8 @@ object CollectFull {
       .join(attrs,
         col("a_product") === col("product") && col("value") === col("pixel_int"), "left")
       .withColumn("range_label",
-        when(col("product") === "vegetation_type",
-          when(col("pixel_int") >= 7000 && col("pixel_int") < 8000, "Urban/Developed")
-            .when(col("pixel_int") >= 6000 && col("pixel_int") < 7000, "Agriculture/Cropland")
-            .when(col("pixel_int") >= 3000 && col("pixel_int") < 4000, "Forest")
-            .when(col("pixel_int") >= 2000 && col("pixel_int") < 3000, "Grassland")
-            .when(col("pixel_int") >= 4000 && col("pixel_int") < 5000, "Shrubland"))
-          .otherwise(
-            when(col("pixel_int") >= 90 && col("pixel_int") < 100, "Non-burnable")
-              .when(col("pixel_int") >= 100 && col("pixel_int") < 110, "Grass")
-              .when(col("pixel_int") >= 110 && col("pixel_int") < 130, "Timber")
-              .when(col("pixel_int") >= 140 && col("pixel_int") < 150, "Shrub")))
+        when(col("product") === "vegetation_type", rangeLabel("vegetation_type"))
+          .otherwise(rangeLabel("fuel_model")))
       .withColumn("interpreted",
         when(col("pixel_int").isNotNull,
           coalesce(col("classname"), col("range_label"),
@@ -183,12 +176,16 @@ object CollectFull {
         first(when(col("product") === "fuel_model", col("pixel_int")), ignoreNulls = true).as("fuel_model_pixel_value"),
         first(col("px_row")).as("px_row"),
         first(col("px_col")).as("px_col"))
-      .withColumn("lf_risk",
-        // the reference's rule needs BOTH classes (landfire_container.py:455-465)
-        when(col("vegetation_class").isNull || col("fuel_model_class").isNull, "UNKNOWN")
-          .when(lower(col("vegetation_class")).rlike("developed|urban|water"), "LOW")
-          .when(lower(col("fuel_model_class")).rlike("chaparral|timber|grass"), "MODERATE_TO_HIGH")
-          .otherwise("MODERATE"))
+      .withColumn("lf_risk", landfireRisk(col("vegetation_class"), col("fuel_model_class")))
+  }
+
+  /** X14 — the [[CollectPipeline.rangeBands]] of one product as a
+    * when-chain over `pixel_int`, in table order. */
+  private def rangeLabel(product: String): Column = {
+    val bands = rangeBands.collect { case (p, lo, hi, l) if p == product =>
+      (col("pixel_int") >= lo && col("pixel_int") < hi, l)
+    }
+    bands.tail.foldLeft(when(bands.head._1, bands.head._2)) { case (c, (in, l)) => c.when(in, l) }
   }
 
   /** MODIS: last-valid NDVI (modis_container.py:249-258) + first-valid
@@ -223,28 +220,10 @@ object CollectFull {
     ndvi
       .join(lst, Seq("site"), "left")
       .join(counts, Seq("site"), "left")
-      .withColumn("vegetation_health",
-        when(col("ndvi_latest") > 0.6, "HEALTHY")
-          .when(col("ndvi_latest") > 0.3, "MODERATE")
-          .when(col("ndvi_latest") > 0.1, "STRESSED")
-          .otherwise("SEVERELY_STRESSED"))
-      .withColumn("fire_risk_vegetation",
-        when(col("ndvi_latest") > 0.6, "LOW")
-          .when(col("ndvi_latest") > 0.3, "MODERATE")
-          .when(col("ndvi_latest") > 0.1, "HIGH")
-          .otherwise("EXTREME"))
+      .withColumn("vegetation_health", vegetationHealth(col("ndvi_latest")))
+      .withColumn("fire_risk_vegetation", vegetationRisk(col("ndvi_latest"), lit))
       .withColumn("modis_ok", lit(true))
   }
-
-  /** X9 fire-weather risk score (weather_container.py:187-233). */
-  private def riskScore(temp: Column, hum: Column, wind: Column): Column =
-    when(temp > 30, 3).when(temp > 25, 2).when(temp > 20, 1).otherwise(0) +
-      when(hum < 20, 3).when(hum < 40, 2).when(hum < 60, 1).otherwise(0) +
-      when(wind > 15, 3).when(wind > 10, 2).when(wind > 5, 1).otherwise(0)
-
-  private def riskClass(score: Column): Column =
-    when(score >= 7, "EXTREME").when(score >= 5, "HIGH")
-      .when(score >= 3, "MODERATE").otherwise("LOW")
 
   /** Weather: current decode + risk + forecast roll-up. */
   def weather(s: SparkSession, t: Transport = Files): DataFrame = {
@@ -267,12 +246,13 @@ object CollectFull {
       col("wind.deg").as("wind_direction_deg"),
       element_at(col("weather"), 1).getField("main").as("weather_main"),
       element_at(col("weather"), 1).getField("description").as("weather_description"),
-      riskClass(riskScore(col("main.temp"), col("main.humidity"), col("wind.speed"))).as("fire_weather_risk"),
+      fireWeatherRisk(fireWeatherScore(col("main.temp"), col("main.humidity"), col("wind.speed")), lit)
+        .as("fire_weather_risk"),
       size(col("forecast")).as("forecast_total_points"),
       array_max(transform(col("forecast"), f => f.getField("main").getField("temp"))).as("forecast_max_temperature"),
       array_min(transform(col("forecast"), f => f.getField("main").getField("temp"))).as("forecast_min_temperature"),
       size(filter(col("forecast"), f =>
-        riskScore(f.getField("main").getField("temp"), f.getField("main").getField("humidity"),
+        fireWeatherScore(f.getField("main").getField("temp"), f.getField("main").getField("humidity"),
           f.getField("wind").getField("speed")) >= 5)).as("n_fire_risk_periods"))
   }
 
@@ -303,10 +283,7 @@ object CollectFull {
       .withColumn("std_elevation_m",
         sqrt(col("ssq_elev") / col("pixel_count") - col("mean_elevation_m") * col("mean_elevation_m")))
       .withColumn("elevation_range_m", col("max_elevation_m") - col("min_elevation_m"))
-      .withColumn("terrain_roughness",
-        when(col("elevation_range_m") > 100, "HIGH")
-          .when(col("elevation_range_m") > 50, "MODERATE")
-          .otherwise("LOW"))
+      .withColumn("terrain_roughness", terrainClass(col("elevation_range_m"), lit))
       .drop("sum_elev", "ssq_elev")
 
   private def locationStruct: Column = struct(

@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions._
   * standing in for the WAN fetches (the fetch itself is a source concern
   * — S1-S6 — outside the engine's semantics). Classification logic is
   * the reference's, transcribed: X9 fire-weather, X10 vegetation health,
-  * X12 terrain, X14 range interpretation.
+  * X12 terrain, X14 range interpretation. Those rules, and X11, are
+  * defined once here; [[CollectFull]] and the scalar and raster queries
+  * call the same functions.
   *
   * Each input row gets its own response. Two requests sharing a
   * `request_id` are two responses (each with `sources_successful` = 4),
@@ -84,6 +86,67 @@ object CollectPipeline {
       when(code === (i + 1), l).otherwise(acc)
     }
 
+  // The reference's classification rules, each written once. The risk
+  // rules take `out`, which turns a label into the output column:
+  // [[classify]] passes `labelCode` for integer codes, every other
+  // caller passes `lit` for the label itself.
+
+  /** X9 fire-weather score (weather_container.py:187-233): 0-3 points
+    * each for temperature, humidity and wind, strict at every edge. */
+  def fireWeatherScore(temp: Column, hum: Column, wind: Column): Column =
+    when(temp > 30, 3).when(temp > 25, 2).when(temp > 20, 1).otherwise(0) +
+      when(hum < 20, 3).when(hum < 40, 2).when(hum < 60, 1).otherwise(0) +
+      when(wind > 15, 3).when(wind > 10, 2).when(wind > 5, 1).otherwise(0)
+
+  /** X9 risk class of a [[fireWeatherScore]]: ≥7 / ≥5 / ≥3 / else. */
+  def fireWeatherRisk(score: Column, out: String => Column): Column =
+    when(score >= 7, out("EXTREME")).when(score >= 5, out("HIGH"))
+      .when(score >= 3, out("MODERATE")).otherwise(out("LOW"))
+
+  /** X10 vegetation health of an NDVI value (modis_container.py:261-272). */
+  def vegetationHealth(ndvi: Column): Column =
+    when(ndvi > 0.6, "HEALTHY")
+      .when(ndvi > 0.3, "MODERATE")
+      .when(ndvi > 0.1, "STRESSED")
+      .otherwise("SEVERELY_STRESSED")
+
+  /** X10 vegetation fire risk of an NDVI value, same edges as
+    * [[vegetationHealth]]. */
+  def vegetationRisk(ndvi: Column, out: String => Column): Column =
+    when(ndvi > 0.6, out("LOW"))
+      .when(ndvi > 0.3, out("MODERATE"))
+      .when(ndvi > 0.1, out("HIGH"))
+      .otherwise(out("EXTREME"))
+
+  /** X11 LANDFIRE fire risk from the vegetation and fuel-model class
+    * names (landfire_container.py:451-465): needs both, then term
+    * matches over the lower-cased names. */
+  def landfireRisk(veg: Column, fuel: Column): Column =
+    when(veg.isNull || fuel.isNull, "UNKNOWN")
+      .when(lower(veg).rlike("developed|urban|water"), "LOW")
+      .when(lower(fuel).rlike("chaparral|timber|grass"), "MODERATE_TO_HIGH")
+      .otherwise("MODERATE")
+
+  /** X12 terrain class of an elevation range in metres
+    * (topography_container.py:263-274): >100 / >50 / else. */
+  def terrainClass(range: Column, out: String => Column): Column =
+    when(range > 100, out("HIGH")).when(range > 50, out("MODERATE"))
+      .otherwise(out("LOW"))
+
+  /** X14 range bands (landfire_container.py:118-132): (product, lo, hi,
+    * label), a pixel value v in [lo, hi) taking the label; the first
+    * matching band of its product wins. */
+  val rangeBands: Seq[(String, Int, Int, String)] = Seq(
+    ("vegetation_type", 7000, 8000, "Urban/Developed"),
+    ("vegetation_type", 6000, 7000, "Agriculture/Cropland"),
+    ("vegetation_type", 3000, 4000, "Forest"),
+    ("vegetation_type", 2000, 3000, "Grassland"),
+    ("vegetation_type", 4000, 5000, "Shrubland"),
+    ("fuel_model", 90, 100, "Non-burnable"),
+    ("fuel_model", 100, 110, "Grass"),
+    ("fuel_model", 110, 130, "Timber"),
+    ("fuel_model", 140, 150, "Shrub"))
+
   /** The four sources, in response column order; [[classify]] names
     * each one's risk code `<source>_c`. */
   val sources: Seq[String] = Seq("landfire", "modis", "weather", "topography")
@@ -114,27 +177,18 @@ object CollectPipeline {
   private[graft] def riskCodes(kernels: DataFrame, carry: Seq[String]): DataFrame = {
     val keep = (Seq("request_id") ++ carry).map(col)
     val scored = kernels.withColumn("w_score",
-      when(col("w_temp") > 30, 3).when(col("w_temp") > 25, 2).when(col("w_temp") > 20, 1).otherwise(0) +
-        when(col("w_hum") < 20, 3).when(col("w_hum") < 40, 2).when(col("w_hum") < 60, 1).otherwise(0) +
-        when(col("w_wind") > 15, 3).when(col("w_wind") > 10, 2).when(col("w_wind") > 5, 1).otherwise(0))
-    val weatherRisk =
-      when(col("w_score") >= 7, labelCode("EXTREME")).when(col("w_score") >= 5, labelCode("HIGH"))
-        .when(col("w_score") >= 3, labelCode("MODERATE")).otherwise(labelCode("LOW"))
-    val modisRisk =
-      when(col("ndvi") > 0.6, labelCode("LOW"))
-        .when(col("ndvi") > 0.3, labelCode("MODERATE"))
-        .when(col("ndvi") > 0.1, labelCode("HIGH"))
-        .otherwise(labelCode("EXTREME"))
-    val landfireRisk =
+      fireWeatherScore(col("w_temp"), col("w_hum"), col("w_wind")))
+    // the coordinate kernel has a pixel band but no fuel model, so its
+    // landfire risk is a band rule of its own, not X11
+    val pixelRisk =
       when(col("pixel") >= 7000 && col("pixel") < 8000, labelCode("LOW")) // Urban/Developed
         .when(col("pixel") >= 3000 && col("pixel") < 4000, labelCode("MODERATE_TO_HIGH")) // Forest fuels
         .when(col("pixel") >= 2000 && col("pixel") < 3000, labelCode("MODERATE_TO_HIGH")) // Grassland
         .otherwise(labelCode("MODERATE"))
-    val topoRisk =
-      when(col("elev") > 100, labelCode("HIGH")).when(col("elev") > 50, labelCode("MODERATE"))
-        .otherwise(labelCode("LOW"))
-    scored.select(keep ++ Seq(landfireRisk.as("landfire_c"), modisRisk.as("modis_c"),
-      weatherRisk.as("weather_c"), topoRisk.as("topography_c")): _*)
+    scored.select(keep ++ Seq(pixelRisk.as("landfire_c"),
+      vegetationRisk(col("ndvi"), labelCode).as("modis_c"),
+      fireWeatherRisk(col("w_score"), labelCode).as("weather_c"),
+      terrainClass(col("elev"), labelCode).as("topography_c")): _*)
   }
 
   /** J1 + A6 — the response columns over per-source risk codes, a null

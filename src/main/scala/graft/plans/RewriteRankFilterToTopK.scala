@@ -23,8 +23,8 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * REPLACES the sort. The map-side partial heap also prunes before the
   * exchange, which WindowExec structurally cannot.
   *
-  * Soundness gates (each is load-bearing, matching FuseDotProduct's
-  * strictness discipline):
+  * Soundness gates (each is load-bearing: a rewrite that fires on
+  * anything semantically different is a correctness bug):
   *  - ONLY `row_number` — rank/dense_rank admit >k rows on ties, which
   *    the heap does not reproduce;
   *  - the Window computes NOTHING but the rank (a second window

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.queries.SimilarityQueries.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -341,9 +342,6 @@ object DedupQueries {
     "Embedding-cosine near-dup pairs: 2x8-bit sign-LSH bucket equi-join for candidates, exact cosine >= threshold verification.",
     (s, dir) => {
       val t = Tables(s, dir)
-      val dot = (a: Column, b: Column) =>
-        aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, x) => acc + x)
       val base = t.embeddings.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       val bandStructs: Seq[Column] = (0 until 2).map { b =>
         val key = (1 to 8).map(i =>
@@ -473,9 +471,6 @@ object DedupQueries {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val t = Tables(s, dir)
-      val dot = (a: Column, b: Column) =>
-        aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, x) => acc + x)
       val base = t.embeddings
         .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       val cents = broadcast(base.filter(col("vec_id") < 16)

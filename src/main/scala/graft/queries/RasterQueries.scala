@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.CollectPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,8 +10,9 @@ import org.apache.spark.sql.functions._
   * topography_container.py:233-296, containers/landfire/
   * landfire_container.py:86-132); here the raster is a relational pixel
   * grid (product, row, col, value) — the decode step is a source concern
-  * (see graft.ops.RasterGrid for the binary-decode stub) and everything
-  * after it is plain Catalyst: masked aggregates, affine index math,
+  * ([[graft.ops.TiffCodec]] decodes the bytes, and
+  * [[graft.ops.CollectFull.elevationPixels]] explodes a decoded raster
+  * into pixel rows) and everything after it is plain Catalyst: masked aggregates, affine index math,
   * equi-join point lookup, broadcast range-classification join.
   *
   * Scale notes: a 100 TB raster estate is billions of (tile, row, col)
@@ -52,10 +54,7 @@ object RasterQueries {
           round(stddev_pop(col("elev")), 6).as("std_elevation_m"),
           count(lit(1)).as("pixel_count"))
         .withColumn("elevation_range_m", col("max_elevation_m") - col("min_elevation_m"))
-        .withColumn("terrain_roughness",
-          when(col("elevation_range_m") > 100, "HIGH")
-            .when(col("elevation_range_m") > 50, "MODERATE")
-            .otherwise("LOW"))
+        .withColumn("terrain_roughness", CollectPipeline.terrainClass(col("elevation_range_m"), lit))
     },
     Some(s"""WITH g AS ($gridSql)
             SELECT round(min(elev), 6) AS min_elevation_m,
@@ -111,8 +110,9 @@ object RasterQueries {
     * "Unknown (v)" default (landfire_container.py:68-84, 118-132). The
     * exact table is a REAL broadcast CSV read, cached like the
     * reference's downloaded-and-cached attribute table
-    * (landfire_container.py:46-65); the range fallback mirrors the
-    * reference's in-code map. Both joins broadcast; precedence via
+    * (landfire_container.py:46-65); the range fallback is the
+    * vegetation rows of [[CollectPipeline.rangeBands]], the reference's
+    * in-code map. Both joins broadcast; precedence via
     * coalesce. The attribute CSV includes codes that also fall inside a
     * fallback band (3232 in Forest, 7272 in Urban), which this query's
     * pixel stream hits — pinning exact-over-range precedence. */
@@ -125,10 +125,9 @@ object RasterQueries {
       val exact = broadcast(graft.ops.CollectFull.attributeTable(s)
         .filter(col("product") === "vegetation_type")
         .select(col("value").as("code"), col("classname").as("exact_label")))
-      val ranges = broadcast(Seq(
-        (7000, 8000, "Urban/Developed"), (6000, 7000, "Agriculture/Cropland"),
-        (3000, 4000, "Forest"), (2000, 3000, "Grassland"), (4000, 5000, "Shrubland")
-      ).toDF("lo", "hi", "range_label"))
+      val ranges = broadcast(CollectPipeline.rangeBands.collect {
+        case ("vegetation_type", lo, hi, l) => (lo, hi, l)
+      }.toDF("lo", "hi", "range_label"))
       pixels
         .join(exact, col("pixel_value") === col("code"), "left")
         .join(ranges, col("pixel_value") >= col("lo") && col("pixel_value") < col("hi"), "left")

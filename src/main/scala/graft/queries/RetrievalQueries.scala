@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.queries.SimilarityQueries.dot
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.8 X28 ⊕ depth — lexical retrieval over the `documents`
@@ -198,9 +199,6 @@ object RetrievalQueries {
         .withColumn("r_bm25",
           row_number().over(Window.orderBy(col("total").desc, col("doc_id").asc)))
         .select(col("doc_id"), col("r_bm25"))
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, x) => acc + x)
       val base = t.embeddings.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       val qv = broadcast(base.filter(col("vec_id") === 450)
         .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm")))
@@ -308,9 +306,6 @@ object RetrievalQueries {
         .withColumn("r_bm25",
           row_number().over(Window.orderBy(col("total").desc, col("doc_id").asc)))
         .select(col("doc_id"), col("r_bm25"))
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, x) => acc + x)
       val base = t.embeddings.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       val qv = broadcast(base.filter(col("vec_id") === 450)
         .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm")))

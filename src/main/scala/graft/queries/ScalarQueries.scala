@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.CollectPipeline.{fireWeatherRisk, fireWeatherScore, landfireRisk, terrainClass,
+  vegetationHealth, vegetationRisk}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.8 — the scalar-function surface (X1–X27), grouped into
@@ -26,15 +28,8 @@ object ScalarQueries {
         (6, 20.0, 60, 5.0),  // all just below: 0 LOW
         (7, 31.0, 19, 16.0)  // all just above top bucket: 9 EXTREME
       ).toDF("id", "temp_c", "humidity", "wind_mps")
-      val tempPts = when(col("temp_c") > 30, 3).when(col("temp_c") > 25, 2).when(col("temp_c") > 20, 1).otherwise(0)
-      val humPts  = when(col("humidity") < 20, 3).when(col("humidity") < 40, 2).when(col("humidity") < 60, 1).otherwise(0)
-      val windPts = when(col("wind_mps") > 15, 3).when(col("wind_mps") > 10, 2).when(col("wind_mps") > 5, 1).otherwise(0)
-      df.withColumn("risk_score", tempPts + humPts + windPts)
-        .withColumn("risk_category",
-          when(col("risk_score") >= 7, "EXTREME")
-            .when(col("risk_score") >= 5, "HIGH")
-            .when(col("risk_score") >= 3, "MODERATE")
-            .otherwise("LOW"))
+      df.withColumn("risk_score", fireWeatherScore(col("temp_c"), col("humidity"), col("wind_mps")))
+        .withColumn("risk_category", fireWeatherRisk(col("risk_score"), lit))
         .select("id", "risk_score", "risk_category")
     },
     Some("""WITH v(id, temp_c, humidity, wind_mps) AS (VALUES
@@ -84,17 +79,9 @@ object ScalarQueries {
           when(col("band") === "LST_Day_1km" &&
             (col("center_raw") * 0.02 - 273.15).between(-50.0, 60.0), round(col("center_raw") * 0.02 - 273.15, 4)))
         .withColumn("veg_health",
-          when(col("ndvi").isNull, "UNKNOWN")
-            .when(col("ndvi") > 0.6, "HEALTHY")
-            .when(col("ndvi") > 0.3, "MODERATE")
-            .when(col("ndvi") > 0.1, "STRESSED")
-            .otherwise("SEVERELY_STRESSED"))
+          when(col("ndvi").isNull, "UNKNOWN").otherwise(vegetationHealth(col("ndvi"))))
         .withColumn("fire_risk_veg",
-          when(col("ndvi").isNull, "UNKNOWN")
-            .when(col("ndvi") > 0.6, "LOW")
-            .when(col("ndvi") > 0.3, "MODERATE")
-            .when(col("ndvi") > 0.1, "HIGH")
-            .otherwise("EXTREME"))
+          when(col("ndvi").isNull, "UNKNOWN").otherwise(vegetationRisk(col("ndvi"), lit)))
         .select("id", "center_raw", "ndvi", "lst_c", "veg_health", "fire_risk_veg")
     },
     Some("""WITH v(id, band, data) AS (VALUES
@@ -134,14 +121,8 @@ object ScalarQueries {
       import s.implicits._
       Seq((1, 250.0, 4), (2, 100.0, 11), (3, 75.5, 15), (4, 50.0, 10), (5, 12.0, 0))
         .toDF("id", "elev_range_m", "n_obs")
-        .withColumn("terrain",
-          when(col("elev_range_m") > 100, "HIGH")
-            .when(col("elev_range_m") > 50, "MODERATE")
-            .otherwise("LOW"))
-        .withColumn("fire_risk_terrain",
-          when(col("elev_range_m") > 100, "HIGH")
-            .when(col("elev_range_m") > 50, "MODERATE")
-            .otherwise("LOW"))
+        .withColumn("terrain", terrainClass(col("elev_range_m"), lit))
+        .withColumn("fire_risk_terrain", terrainClass(col("elev_range_m"), lit))
         .withColumn("data_quality", when(col("n_obs") > 10, "GOOD").otherwise("LIMITED"))
         .select("id", "terrain", "fire_risk_terrain", "data_quality")
     },
@@ -157,7 +138,7 @@ object ScalarQueries {
     * terms-in-string logic over vegetation/fuel descriptions. */
   val x11 = Q(
     "x11_landfire_risk",
-    "Substring-set classification: lower + exists(array, term -> contains) over veg/fuel names, UNKNOWN on missing input.",
+    "Substring-set classification: lower + one rlike alternation per term set over veg/fuel names, UNKNOWN on missing input.",
     (s, _) => {
       import s.implicits._
       Seq(
@@ -168,15 +149,7 @@ object ScalarQueries {
         (5, None, Some("Timber Litter")),
         (6, Some("Mixed Conifer Forest"), Some("Brush"))
       ).toDF("id", "veg", "fuel")
-        .withColumn("veg_low", lower(col("veg")))
-        .withColumn("fuel_low", lower(col("fuel")))
-        .withColumn("fire_risk",
-          when(col("veg").isNull || col("fuel").isNull, "UNKNOWN")
-            .when(exists(array(lit("developed"), lit("urban"), lit("water")),
-              t => contains(col("veg_low"), t)), "LOW")
-            .when(exists(array(lit("chaparral"), lit("timber"), lit("grass")),
-              t => contains(col("fuel_low"), t)), "MODERATE_TO_HIGH")
-            .otherwise("MODERATE"))
+        .withColumn("fire_risk", landfireRisk(col("veg"), col("fuel")))
         .select("id", "fire_risk")
     },
     Some("""SELECT id,

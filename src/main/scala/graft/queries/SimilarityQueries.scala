@@ -7,10 +7,12 @@ import org.apache.spark.sql.functions._
 /** SURVEY.md §2.3 J5 / §2.8 X29 ⊕ — similarity search over the
   * `embeddings` fixture (`Array[Float]`, 64 dims).
   *
-  * Vector math is pure higher-order built-ins (`zip_with` + `aggregate`),
-  * i.e. codegen'd Catalyst expressions — no UDF. Elements are cast to
-  * double BEFORE multiply so both engines accumulate the identical double
-  * sequence left-to-right and results are bit-equal.
+  * Vector math is native Catalyst kernels called by name: every dot
+  * product and norm goes through `dot_product`
+  * ([[graft.functions.DotProduct]]) and `j5_topk_native` through
+  * `cosine_sim` — codegen'd expressions, no UDF. Elements are cast to
+  * double BEFORE multiply so both engines accumulate the identical
+  * double sequence left-to-right and results are bit-equal.
   *
   * Scale notes: brute-force top-k broadcasts the (tiny) query side — a
   * BroadcastNestedLoopJoin over the corpus, which is a single corpus scan
@@ -24,19 +26,17 @@ object SimilarityQueries {
 
   private val Dims = 64
 
-  /** Σ aᵢ·bᵢ with per-element double casts (deterministic accumulation). */
-  private def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
+  /** Σ aᵢ·bᵢ through the native `dot_product` kernel
+    * ([[graft.functions.DotProduct]]): float elements widen to double
+    * before multiply, accumulation runs left to right. */
+  private[queries] def dot(a: Column, b: Column): Column = call_function("dot_product", a, b)
 
   private def norm(v: Column): Column = sqrt(dot(v, v))
 
   /** X29 — vector math surface: norms and per-label aggregates. */
   val x29 = Q(
     "x29_vector_norms",
-    "Embedding L2 norms via zip_with+aggregate fold; per-label count/mean-norm roll-up.",
+    "Embedding L2 norms via the native dot_product kernel; per-label count/mean-norm roll-up.",
     (s, dir) => {
       val t = Tables(s, dir)
       t.embeddings
@@ -146,9 +146,10 @@ object SimilarityQueries {
   )
 
   /** J5 via the native Catalyst expression (§2.10 D5,
-    * [[graft.functions.CosineSimilarity]]): one fused zero-allocation
-    * codegen loop instead of zip_with+aggregate lambdas. Bit-identical
-    * semantics (same oracle as the composed form proves it). */
+    * [[graft.functions.CosineSimilarity]]): dot and both norms in one
+    * fused zero-allocation codegen loop, where [[topk]] computes the
+    * norms and the dot with separate `dot_product` calls. Bit-identical
+    * semantics (the same oracle as [[topk]] proves it). */
   val topkNative = Q(
     "j5_topk_native",
     "Brute-force top-k cosine through the native cosine_sim Expression (doGenCode fused loop, whole-stage codegen).",

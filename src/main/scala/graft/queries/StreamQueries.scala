@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.streaming.EventStreamPipeline
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.9 T1–T5 — batch-verifiable projections of the streaming
@@ -14,25 +15,20 @@ import org.apache.spark.sql.functions._
   */
 object StreamQueries {
 
-  /** T2 — priority routing (orchestrator.py:924-935): emergency → all 4
-    * sources / 60 s budget; created → all 4 / 120 s; anything else →
-    * weather only / 30 s. */
+  /** T2 — priority routing (orchestrator.py:924-935), the stream's
+    * [[EventStreamPipeline.routing]] with `created` events as the
+    * trigger: emergency → all 4 sources / 60 s budget; created → all 4 /
+    * 120 s; anything else → weather only / 30 s. */
   val t2 = Q(
     "t2_priority_route",
     "Priority-based routing when-chain producing the sources set + timeout budget per event.",
     (s, _) => {
       import s.implicits._
-      Seq(
+      val events = Seq(
         (1, "emergency", "updated"), (2, "normal", "created"), (3, "low", "updated"),
         (4, "high", "location_changed"), (5, "emergency", "created"), (6, "normal", "updated")
       ).toDF("id", "priority", "event_type")
-        .withColumn("sources",
-          when(col("priority") === "emergency" || col("event_type") === "created",
-            lit("landfire,modis,weather,topography")).otherwise(lit("weather")))
-        .withColumn("timeout_s",
-          when(col("priority") === "emergency", 60)
-            .when(col("event_type") === "created", 120)
-            .otherwise(30))
+      EventStreamPipeline.routing(events, col("priority"), col("event_type") === "created")
     },
     Some("""SELECT id, priority, event_type,
             CASE WHEN priority = 'emergency' OR event_type = 'created'

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -46,22 +46,33 @@ object EventStreamPipeline {
   private def eventSource(spark: SparkSession, srcDir: String, filesPerBatch: Int): DataFrame =
     Drain.parquetSource(spark, eventSchema, srcDir, filesPerBatch)
 
-  /** T2 — the routing transform, shared verbatim between the batch
-    * query (`t2_priority_route`) and the stream. Pure column logic:
-    * works identically on static and streaming DataFrames. */
-  def route(events: DataFrame): DataFrame =
-    events
-      .withColumn("priority",
-        when(col("event_type") === "error", "emergency")
-          .when(col("event_type") === "signup", "normal")
-          .otherwise("low"))
+  /** T2 — priority routing (orchestrator.py:924-935), adding `sources`
+    * and `timeout_s`: an emergency asks all four sources within 60 s, a
+    * `trigger` event all four within 120 s, anything else weather only
+    * within 30 s. The one definition of the rule: the batch query
+    * `t2_priority_route` triggers on `created` events, [[route]] on
+    * `signup`s. Pure column logic: works identically on static and
+    * streaming DataFrames. */
+  def routing(df: DataFrame, priority: Column, trigger: Column): DataFrame =
+    df
       .withColumn("sources",
-        when(col("priority") === "emergency" || col("event_type") === "signup",
+        when(priority === "emergency" || trigger,
           lit("landfire,modis,weather,topography")).otherwise(lit("weather")))
       .withColumn("timeout_s",
-        when(col("priority") === "emergency", 60)
-          .when(col("event_type") === "signup", 120)
+        when(priority === "emergency", 60)
+          .when(trigger, 120)
           .otherwise(30))
+
+  /** T2 over the events stream: `priority` from the event type (an
+    * `error` is an emergency), then [[routing]] with `signup` as the
+    * trigger. */
+  def route(events: DataFrame): DataFrame =
+    routing(
+      events.withColumn("priority",
+        when(col("event_type") === "error", "emergency")
+          .when(col("event_type") === "signup", "normal")
+          .otherwise("low")),
+      col("priority"), col("event_type") === "signup")
 
   /** T5/W3 — watermarked tumbling-window aggregation; identical logic to
     * the batch `w3_tumbling` query, which is how the spec verifies it. */

@@ -2,55 +2,49 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** FuseDotProduct rewrite: the composed aggregate(zip_with(...)) dot
-  * idiom must optimize to the native dot_product expression, near-miss
-  * patterns must NOT be touched, and values must match bit-for-bit. */
+/** The native `dot_product` kernel against the composed
+  * `aggregate(zip_with(...))` form it replaces. No optimizer rule turns
+  * one into the other, so the composed form here really evaluates
+  * through its lambdas: the two must agree bit-for-bit on values and
+  * give null together on a null element or a length mismatch. */
 class FuseDotProductSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private val df = Seq(
-    (Seq(1.5f, -2.0f, 3.25f), Seq(0.5f, 4.0f, -1.25f)),
-    (Seq(0.0f, 0.0f, 0.0f), Seq(1.0f, 2.0f, 3.0f))
-  ).toDF("a", "b")
 
   private def composedDot = aggregate(
     zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
     lit(0.0), (acc, x) => acc + x)
 
-  // parquet-backed source: a LocalRelation would be constant-folded away
-  // before the optimized plan can be inspected
-  private def emb = Tables(spark, "/root/testdata/sf0.001").embeddings
-    .select(col("embedding").as("a"), col("embedding").as("b"))
-
-  test("the composed dot idiom is rewritten to the native dot_product") {
-    val optimized = emb.select(composedDot.as("d")).queryExecution.optimizedPlan.toString
-    assert(optimized.contains("dot_product"), s"rewrite did not fire:\n$optimized")
-    assert(!optimized.contains("aggregate(zip_with"), s"composed form survived:\n$optimized")
-  }
-
-  test("near-miss patterns are left alone") {
-    // different seed (1.0): NOT a dot product — must not rewrite
-    val otherSeed = emb.select(aggregate(
-      zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
-      lit(1.0), (acc, x) => acc + x).as("d")).queryExecution.optimizedPlan.toString
-    assert(!otherSeed.contains("dot_product"), "rewrote a non-zero-seed aggregate")
-
-    // addition instead of multiply inside zip_with — must not rewrite
-    val sums = emb.select(aggregate(
-      zip_with(col("a"), col("b"), (x, y) => x.cast("double") + y.cast("double")),
-      lit(0.0), (acc, x) => acc + x).as("d")).queryExecution.optimizedPlan.toString
-    assert(!sums.contains("dot_product"), "rewrote a zip_with sum")
-  }
+  private def nativeDot = call_function("dot_product", col("a"), col("b"))
 
   test("rewritten values are bit-identical to the composed semantics") {
-    val viaRule = df.select(composedDot.as("d")).as[Double].collect()
-    val expected = Array(1.5 * 0.5 + -2.0 * 4.0 + 3.25 * -1.25, 0.0)
-    assert(viaRule.toSeq == expected.toSeq)
+    val small = Seq(
+      (Seq(1.5f, -2.0f, 3.25f), Seq(0.5f, 4.0f, -1.25f)),
+      (Seq(0.0f, 0.0f, 0.0f), Seq(1.0f, 2.0f, 3.0f))
+    ).toDF("a", "b")
+    val expected = Seq(1.5 * 0.5 + -2.0 * 4.0 + 3.25 * -1.25, 0.0)
+    assert(small.select(nativeDot).as[Double].collect().toSeq == expected)
+    assert(small.select(composedDot).as[Double].collect().toSeq == expected)
 
-    // null element poisons to null, exactly like the composed form
-    val withNull = Seq((Seq(Some(1.0f), None), Seq(Some(2.0f), Some(3.0f))))
-      .toDF("a", "b")
-    val r = withNull.select(composedDot.as("d")).collect()(0)
-    assert(r.isNullAt(0), "null element must poison the dot product")
+    // every embedding row, with itself and with its reversal: exact ==
+    val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
+    val n = emb.count()
+    assert(n > 0)
+    for (b <- Seq(col("embedding"), reverse(col("embedding")))) {
+      val pairs = emb.select(col("vec_id"), col("embedding").as("a"), b.as("b"))
+        .select(col("vec_id"), nativeDot.as("native"), composedDot.as("composed"))
+        .as[(Long, Double, Double)].collect()
+      assert(pairs.length == n)
+      val off = pairs.filterNot { case (_, x, y) => x == y }
+      assert(off.isEmpty, s"native and composed differ on ${off.take(5).toSeq}")
+    }
+
+    // a null element, and a length mismatch (zip_with pads with nulls),
+    // each give null on both sides
+    val poisoned = Seq(
+      (Seq(Some(1.0f), None), Seq(Some(2.0f), Some(3.0f))),
+      (Seq(Some(1.0f), Some(2.0f), Some(3.0f)), Seq(Some(1.0f), Some(2.0f)))
+    ).toDF("a", "b")
+    for (r <- poisoned.select(nativeDot, composedDot).collect())
+      assert(r.isNullAt(0) && r.isNullAt(1), s"expected null on both sides, got $r")
   }
 }

@@ -11,9 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (each operator is an un-drained `stream` with a row in
   * `StreamOperatorSpec`'s table); no stream restates the default append
   * output mode; and `graft.Profile` is the one listener of any kind,
-  * while no main source writes the calling thread's job group. Reads
-  * the main sources as text (run from the repo root, as sbt's forked
-  * tests are). */
+  * while no main source writes the calling thread's job group. Also
+  * guards the rule layer: the reference's classification rules are
+  * written once (in `ops/CollectPipeline`), and every dot product calls
+  * the `dot_product` kernel by name, with no optimizer rule injected to
+  * find hand-written copies. Reads the main sources as text (run from
+  * the repo root, as sbt's forked tests are). */
 class SourceStructureSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala/graft")
@@ -74,5 +77,19 @@ class SourceStructureSpec extends AnyFunSuite {
     }.filterNot(o => pipelines(o._1))
     assert(operators.map(_._1).toSet == StreamOperatorSpec.table.keySet)
     for ((op, text) <- operators) assert(text.contains("def stream("), s"$op has no stream entry")
+  }
+
+  test("no main source injects an optimizer rule") {
+    assert(filesWith("injectOptimizerRule").isEmpty)
+  }
+
+  test("no main source hand-writes the double-cast dot product lambda") {
+    assert(filesWith("""x.cast("double") * y.cast("double")""").isEmpty)
+  }
+
+  test("each reference classification label is a Scala literal in one main file") {
+    // the oracle SQL's single-quoted copies are independent references
+    for (label <- Seq("\"SEVERELY_STRESSED\"", "\"Urban/Developed\""))
+      assert(filesWith(label) == Seq("ops/CollectPipeline.scala"), s"$label in ${filesWith(label)}")
   }
 }
