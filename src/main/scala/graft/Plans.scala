@@ -26,7 +26,7 @@ object Plans {
     "w2_range_frame"    -> "value-RANGE window frame",
     "x24_variant_access" -> "VariantType parse-once JSON",
     "e2e_collect"       -> "row-local classify + summary: one projection, no exchange",
-    "e2e_collect_full"  -> "binaryFile TIFF scans + broadcast CSV attrs + nested envelope assembly",
+    "e2e_collect_full"  -> "one TIFF scan and decode, broadcast CSV attrs, one site-keyed aggregate broadcast to the requests",
     "q2_min_cost_supplier" -> "struct-argmin, one aggregate, no window sort",
     "q10_returned_top"  -> "integer-cents revenue, TakeOrderedAndProject top-20",
     "j6_asof"           -> "as-of join with NO join operator: union + carry-forward window",
@@ -71,7 +71,7 @@ object Plans {
     "t2_budget_enforce" -> "budgeted per-source jobs under watchdog-cancelled job groups",
     "s1_rest_fetch"     -> "live HTTP V2 scan: url-partitioned fetch, in-plan JSON + TIFF decode",
     "s1_request_urls"   -> "request construction: four URL families as codegen'd string exprs, one projection",
-    "e2e_collect_rest"  -> "full /collect with all inputs over HTTP: same plan as collect_full behind the fetch",
+    "e2e_collect_rest"  -> "full /collect with all inputs over HTTP: same plan as collect_full behind RestSource/RestFetch",
     "a13_drift_tvd"     -> "drift census: <=20-bin partial agg + broadcast one-row totals — scan + tiny shuffle at any scale",
     "j5_hamming_topk"   -> "1-bit ANN: sign-pack aggregate, broadcast probe row, TakeOrdered xor/popcount scan",
     "w10_attribution"   -> "1h-lookback range join as (user, hour-bin) hash equi-join; per-purchase rank windows, no nested loop",
@@ -135,7 +135,7 @@ object Plans {
     * under its first scan only: a chain of caches that each read the one
     * before (`e2e_result_cache`) otherwise prints its plans exponentially
     * often, 4.8 MB for that one query at sf0.001. */
-  private def tree(root: SparkPlan): String = {
+  private[graft] def tree(root: SparkPlan): String = {
     val shown = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
     val sb = new StringBuilder
     def go(node: QueryPlan[_], star: String, lead: String, indent: String): Unit = node match {

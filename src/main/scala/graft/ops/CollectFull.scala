@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Full-fidelity `/collect` (SURVEY §3.1 depth): the reference's four
@@ -9,18 +9,21 @@ import org.apache.spark.sql.functions._
   * (shared_schema.py:97-132) pivoted into one `AggregatedResponse`-shaped
   * row per request (shared_schema.py:135-191, orchestrator.py:760-808).
   *
-  * Per-source operator chains (all real, no synthetic kernels):
-  *  - landfire: binaryFile TIFF scan → [[TiffCodec]] decode (D1) →
-  *    inverse-affine point lookup (J3) → broadcast CSV attribute table
-  *    with range fallback (S7+J2, landfire_container.py:46-132) →
-  *    veg/fuel fire-risk rule (:455-465).
-  *  - modis: JSON subset scan → center-pixel extraction → last-valid
-  *    NDVI argmax / first-valid LST argmin by calendar_date (A7,
-  *    modis_container.py:240-301) → vegetation-health classify.
-  *  - weather: JSON decode (S3) → X9 fire-weather risk score
-  *    (weather_container.py:187-233) → forecast roll-up (:365-373).
-  *  - topography: binaryFile TIFF scan → decode → masked elevation
-  *    stats (A1) → terrain classes (topography_container.py:233-296).
+  * One pass per source, all real operators (no synthetic kernels): one
+  * binaryFile TIFF scan (or REST fetch) → broadcast raster index →
+  * [[TiffCodec]] decode (D1), once per raster → broadcast requests →
+  * inverse-affine point lookup (J3) → broadcast CSV attribute table with
+  * range fallback (S7+J2, landfire_container.py:46-132), with the masked
+  * elevation stats (A1, topography_container.py:233-296) folded from
+  * the same decoded row; the MODIS subset JSON as valid-NDVI/LST columns
+  * (modis_container.py:240-301); the weather JSON (S3) with its X9 risk
+  * score and forecast roll-up (weather_container.py:187-233, :365-373).
+  * The three row sets are aggregated once by site (A7's last-valid NDVI
+  * and first-valid LST are `max_by`/`min_by` over valid rows only), the
+  * classify rules run per site, and one left join takes the result to
+  * the requests. A duplicated request gets its own row; the raster rows
+  * it duplicates are absorbed by `first`, so a site's request rows must
+  * share one coordinate.
   *
   * Envelope fidelity notes (documented deviations, all compare-driven):
   * `raw_data` (the original bytes) is omitted from the aggregated row —
@@ -31,10 +34,11 @@ import org.apache.spark.sql.functions._
   * clocks (`processing_time_ms`, `retrieved_at`) are parameters, fixed
   * to 0 / [[RetrievedAt]] — the engine takes nondeterminism as inputs.
   *
-  * Scale: every per-request operator is row-local after a broadcast of
-  * the (constant-size) attribute/index tables; the raster decode is one
-  * UDF pass over a binary column (embarrassingly parallel); the only
-  * shuffles are the per-site aggregates, keyed by the request id.
+  * Scale: every per-request operator is row-local after broadcasts of
+  * the constant-size attribute/index tables and of the request batch;
+  * the raster decode is one UDF pass over a binary column (embarrassingly
+  * parallel); the one shuffle is the site-keyed aggregate, broadcast back
+  * to the requests. Nothing is cached: no input is read twice.
   */
 object CollectFull {
   import CollectPipeline.{fireWeatherRisk, fireWeatherScore, landfireRisk, rangeBands, terrainClass,
@@ -45,13 +49,14 @@ object CollectFull {
   val LandfireCurrency = "2024-01-01T00:00:00Z"
 
   /** Input transport: the SAME pipeline runs over local staged files
-    * (`Files`, the default) or over live HTTP (`Rest`) — every byte then
-    * arrives through [[graft.sources.RestSource]] from the loopback
-    * [[StagedRestEndpoint]], the shape of the reference's actual WAN
-    * deployment (four REST containers). Only the acquisition differs;
-    * parse, decode, classify, and envelope assembly are shared code, so
-    * `e2e_collect_rest` hash-matching `e2e_collect_full`'s oracle proves
-    * the HTTP path end-to-end. */
+    * (`Files`, the default) or over live HTTP (`Rest`): the CSV and JSON
+    * feeds then arrive through [[graft.sources.RestSource]] and the
+    * requested sites' rasters through [[RestFetch]], all from the
+    * loopback [[StagedRestEndpoint]] — the shape of the reference's
+    * actual WAN deployment (four REST containers). Only the acquisition
+    * differs; parse, decode, classify, and envelope assembly are shared
+    * code, so `e2e_collect_rest` hash-matching `e2e_collect_full`'s
+    * oracle proves the HTTP path end-to-end. */
   sealed trait Transport
   object Transport {
     case object Files extends Transport
@@ -65,118 +70,81 @@ object CollectFull {
     TiffCodec.decode(bytes).map(r => RasterPx(r.width, r.height, r.pixels.toSeq))
   }
 
-  /** Fetch fixture-estate files over the loopback REST endpoint:
-    * (file_name, content) — the REST analogue of a binaryFile scan. */
-  private def restFiles(s: SparkSession, relPaths: Seq[String]): DataFrame = {
-    val base = StagedRestEndpoint.baseUrl
+  /** One staged text file fetched over the loopback REST endpoint, as a
+    * line Dataset — fed to the SAME DataFrameReader.csv/json parsers the
+    * file path uses. */
+  private def restLines(s: SparkSession, path: String): Dataset[String] = {
+    import s.implicits._
     s.read.format("graft.sources.RestSource")
-      .option("urls", relPaths.map(p => s"$base/files/$p").mkString("\n"))
-      .option("urlsPerPartition", "4")
+      .option("urls", s"${StagedRestEndpoint.baseUrl}/files/${path.stripPrefix(Root + "/")}")
       .option("retries", "2").option("retryBackoffMs", "25")
       .load()
       .filter(col("status") === 200)
-      .select(element_at(split(col("url"), "/"), -1).as("file_name"),
-        col("body").as("content"))
-  }
-
-  /** One fetched text file as a line Dataset — feeds the SAME
-    * DataFrameReader.csv/json parsers the file path uses. */
-  private def restLines(s: SparkSession, relPath: String): org.apache.spark.sql.Dataset[String] = {
-    import s.implicits._
-    restFiles(s, Seq(relPath))
-      .select(col("content").cast("string"))
+      .select(col("body").cast("string"))
       .as[String]
       .flatMap(_.split("\n"))
       .filter(length(trim(col("value"))) > 0)
   }
 
-  /** The four golden-coordinate requests (README.md:262-266). */
+  private def csvFile(s: SparkSession, t: Transport, path: String, schema: String): DataFrame = {
+    Fixtures.stage()
+    val reader = s.read.option("header", "true").schema(schema)
+    t match {
+      case Files => reader.csv(path)
+      case Rest  => reader.csv(restLines(s, path))
+    }
+  }
+
+  private def jsonFile(s: SparkSession, t: Transport, path: String, schema: String): DataFrame = {
+    Fixtures.stage()
+    val reader = s.read.schema(schema)
+    t match {
+      case Files => reader.json(path)
+      case Rest  => reader.json(restLines(s, path))
+    }
+  }
+
+  /** The fixture's requests: four golden coordinates (README.md:262-266)
+    * and an off-grid site. */
   def requests(s: SparkSession): DataFrame = {
     import s.implicits._
     sites.map(t => (t.id, t.lat, t.lon, t.bufferM, t.eventId.orNull, t.name))
       .toDF("site", "lat", "lon", "buffer_m", "event_id", "site_name")
   }
 
-  /** S7 — the attribute table as a genuine broadcast CSV read, cached
-    * like the reference's `_attribute_cache` (landfire_container.py:65). */
-  def attributeTable(s: SparkSession, t: Transport = Files): DataFrame = {
-    Fixtures.stage()
-    val reader = s.read.option("header", "true")
-      .schema("product STRING, value INT, classname STRING")
-    (t match {
-      case Files => reader.csv(AttributeCsv)
-      case Rest  => reader.csv(restLines(s, "text/landfire_attributes.csv"))
-    }).cache()
-  }
+  /** S7 — the attribute table as a genuine CSV read, broadcast where it
+    * is joined (the reference's `_attribute_cache`,
+    * landfire_container.py:65, is the broadcast relation). */
+  def attributeTable(s: SparkSession, t: Transport = Files): DataFrame =
+    csvFile(s, t, AttributeCsv, "product STRING, value INT, classname STRING")
 
-  def rasterIndex(s: SparkSession, t: Transport = Files): DataFrame = {
-    Fixtures.stage()
-    val reader = s.read.option("header", "true")
-      .schema("file_name STRING, site STRING, product STRING, x0 DOUBLE, dx DOUBLE, y0 DOUBLE, dy DOUBLE")
-    t match {
-      case Files => reader.csv(RasterIndexCsv)
-      case Rest  => reader.csv(restLines(s, "text/rasters_index.csv"))
-    }
-  }
+  def rasterIndex(s: SparkSession, t: Transport = Files): DataFrame =
+    csvFile(s, t, RasterIndexCsv,
+      "file_name STRING, site STRING, product STRING, x0 DOUBLE, dx DOUBLE, y0 DOUBLE, dy DOUBLE")
 
-  private def rasterFiles(s: SparkSession, t: Transport = Files): DataFrame = {
+  /** Each raster of the estate decoded once, next to its index row
+    * (site, product and affine transform). `Files` scans the raster
+    * directory once; `Rest` fetches the three rasters of each requested
+    * site on the executors with [[RestFetch]], the url list a column of
+    * the request frame. */
+  private def rasters(s: SparkSession, t: Transport, requests: DataFrame): DataFrame = {
     Fixtures.stage()
-    t match {
+    val files = t match {
       case Files =>
-        s.read.format("binaryFile").load(s"$RasterDir/*.tif")
+        s.read.format("binaryFile").option("pathGlobFilter", "*.tif").load(RasterDir)
           .select(element_at(split(col("path"), "/"), -1).as("file_name"), col("content"))
       case Rest =>
-        // the raster estate is enumerable from the site table — at
-        // production scale this url list is itself a DataFrame column.
-        // Cached: landfire and topography both consume this sweep, and
-        // a remote byte should cross the wire once, not once per
-        // consumer (the reference fetches each product exactly once
-        // per /collect too).
-        val names = for (st <- sites; p <- Seq("veg", "fuel", "elev"))
-          yield s"rasters/${p}_${st.id}.tif"
-        restFiles(s, names).cache()
+        val urls = requests
+          .select(col("site"), explode(array(lit("veg"), lit("fuel"), lit("elev"))).as("prefix"))
+          .select(concat(lit(s"${StagedRestEndpoint.baseUrl}/files/rasters/"),
+            col("prefix"), lit("_"), col("site"), lit(".tif")).as("url"))
+        RestFetch.fetchRows(urls, "url", retries = 2, retryBackoffMs = 25L)
+          .filter(col("status") === 200)
+          .select(element_at(split(col("url"), "/"), -1).as("file_name"), col("body").as("content"))
     }
-  }
-
-  /** Decoded raster joined to its transform + request, with the
-    * inverse-affine point location (landfire_container.py:89-96) and the
-    * bounds check (:96-113) — an out-of-bounds coordinate yields a null
-    * pixel, which downstream becomes the reference's
-    * "Coordinates outside raster bounds" interpretation error. */
-  private def pixelLookup(s: SparkSession, products: Seq[String], t: Transport = Files): DataFrame =
-    rasterFiles(s, t)
-      .join(broadcast(rasterIndex(s, t).filter(col("product").isin(products: _*))), "file_name")
-      .join(broadcast(requests(s)), "site")
+    files
+      .join(broadcast(rasterIndex(s, t)), "file_name")
       .withColumn("ras", decodeRaster(col("content")))
-      .withColumn("px_row", floor((col("lat") - col("y0")) / col("dy")).cast("int"))
-      .withColumn("px_col", floor((col("lon") - col("x0")) / col("dx")).cast("int"))
-      .withColumn("pixel_int",
-        when(col("px_row").between(0, col("ras.h") - 1) && col("px_col").between(0, col("ras.w") - 1),
-          element_at(col("ras.px"), col("px_row") * col("ras.w") + col("px_col") + 1).cast("int")))
-
-  /** LANDFIRE: veg + fuel point classification over the real TIFFs. */
-  def landfire(s: SparkSession, t: Transport = Files): DataFrame = {
-    val attrs = broadcast(attributeTable(s, t)).withColumnRenamed("product", "a_product")
-    val classified = pixelLookup(s, Seq("vegetation_type", "fuel_model"), t)
-      .join(attrs,
-        col("a_product") === col("product") && col("value") === col("pixel_int"), "left")
-      .withColumn("range_label",
-        when(col("product") === "vegetation_type", rangeLabel("vegetation_type"))
-          .otherwise(rangeLabel("fuel_model")))
-      .withColumn("interpreted",
-        when(col("pixel_int").isNotNull,
-          coalesce(col("classname"), col("range_label"),
-            concat(lit("Unknown ("), col("pixel_int"), lit(")")))))
-    classified
-      .groupBy(col("site"))
-      .agg(
-        first(when(col("product") === "vegetation_type", col("interpreted")), ignoreNulls = true).as("vegetation_class"),
-        first(when(col("product") === "vegetation_type", col("pixel_int")), ignoreNulls = true).as("vegetation_pixel_value"),
-        first(when(col("product") === "fuel_model", col("interpreted")), ignoreNulls = true).as("fuel_model_class"),
-        first(when(col("product") === "fuel_model", col("pixel_int")), ignoreNulls = true).as("fuel_model_pixel_value"),
-        first(col("px_row")).as("px_row"),
-        first(col("px_col")).as("px_col"))
-      .withColumn("lf_risk", landfireRisk(col("vegetation_class"), col("fuel_model_class")))
   }
 
   /** X14 — the [[CollectPipeline.rangeBands]] of one product as a
@@ -188,57 +156,78 @@ object CollectFull {
     bands.tail.foldLeft(when(bands.head._1, bands.head._2)) { case (c, (in, l)) => c.when(in, l) }
   }
 
-  /** MODIS: last-valid NDVI (modis_container.py:249-258) + first-valid
-    * LST (:289-301) + health/risk chains (:261-272). */
-  def modis(s: SparkSession, t: Transport = Files): DataFrame = {
-    Fixtures.stage()
-    val reader = s.read
-      .schema("site STRING, product STRING, band STRING, calendar_date STRING, data ARRAY<INT>")
-    val subset = (t match {
-      case Files => reader.json(ModisJsonl)
-      case Rest  => reader.json(restLines(s, "text/modis_subset.jsonl"))
-    })
-      .withColumn("n_px", size(col("data")))
-      .withColumn("center",
-        when(col("n_px") > 0,
-          element_at(col("data"), (col("n_px") / lit(2)).cast("int") + 1)))
-    val ndvi = subset
-      .filter(col("band") === "250m_16_days_NDVI" && col("n_px") > 0)
-      .withColumn("scaled", col("center").cast("double") * lit(0.0001))
-      .filter(col("scaled").between(-1.0, 1.0))
-      .groupBy("site")
-      .agg(
-        max_by(col("scaled"), col("calendar_date")).as("ndvi_latest"),
-        max(col("calendar_date")).as("last_observation_date"))
-    val lst = subset
-      .filter(col("band") === "LST_Day_1km" && col("n_px") > 0)
-      .withColumn("temp_c", col("center").cast("double") * lit(0.02) - lit(273.15))
-      .filter(col("temp_c").between(-50.0, 60.0))
-      .groupBy("site")
-      .agg(min_by(col("temp_c"), col("calendar_date")).as("land_surface_temperature_c"))
-    val counts = subset.groupBy("site").agg(count(lit(1)).as("n_subset_entries"))
-    ndvi
-      .join(lst, Seq("site"), "left")
-      .join(counts, Seq("site"), "left")
-      .withColumn("vegetation_health", vegetationHealth(col("ndvi_latest")))
-      .withColumn("fire_risk_vegetation", vegetationRisk(col("ndvi_latest"), lit))
-      .withColumn("modis_ok", lit(true))
+  /** Topography: masked elevation stats as folds over one decoded
+    * raster's non-nodata pixels (topography_container.py:233-296), null
+    * when every pixel is nodata. Sums stay exact because the fixture
+    * elevations are integral doubles, so mean/std (single divisions and
+    * a sqrt over those sums, mirrored verbatim in the oracle) are
+    * bit-identical across engines. */
+  private def elevationStats(px: Column): Column = {
+    val valid = filter(px, _ =!= NoData)
+    when(size(valid) > 0, struct(
+      size(valid).cast("long").as("pixel_count"),
+      array_min(valid).as("min_elevation_m"),
+      array_max(valid).as("max_elevation_m"),
+      aggregate(valid, lit(0.0), _ + _).as("sum_elev"),
+      aggregate(valid, lit(0.0), (acc, e) => acc + e * e).as("ssq_elev")))
   }
 
-  /** Weather: current decode + risk + forecast roll-up. */
-  def weather(s: SparkSession, t: Transport = Files): DataFrame = {
-    Fixtures.stage()
-    val reader = s.read
-      .schema("site STRING, dt BIGINT, main STRUCT<temp: DOUBLE, humidity: INT, pressure: INT>, " +
+  /** LANDFIRE and topography rows: each decoded raster joined to its
+    * site's requests, with the inverse-affine point location
+    * (landfire_container.py:89-96) and the bounds check (:96-113) — an
+    * out-of-bounds coordinate yields a null pixel, which becomes the
+    * reference's "Coordinates outside raster bounds" interpretation
+    * error — then the veg/fuel classification and the elevation stats. */
+  private def rasterRows(s: SparkSession, t: Transport, requests: DataFrame): DataFrame = {
+    val attrs = broadcast(attributeTable(s, t)).withColumnRenamed("product", "a_product")
+    rasters(s, t, requests)
+      .join(broadcast(requests.select("site", "lat", "lon")), "site")
+      .withColumn("px_row", floor((col("lat") - col("y0")) / col("dy")).cast("int"))
+      .withColumn("px_col", floor((col("lon") - col("x0")) / col("dx")).cast("int"))
+      .withColumn("pixel_int",
+        when(col("px_row").between(0, col("ras.h") - 1) && col("px_col").between(0, col("ras.w") - 1),
+          element_at(col("ras.px"), col("px_row") * col("ras.w") + col("px_col") + 1).cast("int")))
+      .join(attrs,
+        col("a_product") === col("product") && col("value") === col("pixel_int"), "left")
+      .select(
+        col("site"), col("product"), col("pixel_int"), col("px_row"), col("px_col"),
+        when(col("pixel_int").isNotNull,
+          coalesce(col("classname"),
+            when(col("product") === "vegetation_type", rangeLabel("vegetation_type"))
+              .otherwise(rangeLabel("fuel_model")),
+            concat(lit("Unknown ("), col("pixel_int"), lit(")")))).as("interpreted"),
+        when(col("product") === "elevation", elevationStats(col("ras.px"))).as("topo"))
+  }
+
+  /** MODIS subset rows: the center pixel of each entry as a valid NDVI
+    * (×1e-4 in [-1,1], modis_container.py:249-258) or a valid LST
+    * (×0.02 − 273.15 in [-50,60]°C, :289-301), each with its date; empty
+    * and invalid entries leave both null but still count as entries. */
+  private def modisRows(s: SparkSession, t: Transport): DataFrame = {
+    val subset = jsonFile(s, t, ModisJsonl,
+      "site STRING, product STRING, band STRING, calendar_date STRING, data ARRAY<INT>")
+    val n = size(col("data"))
+    val center = when(n > 0, element_at(col("data"), (n / lit(2)).cast("int") + 1)).cast("double")
+    val ndvi = center * lit(0.0001)
+    val temp = center * lit(0.02) - lit(273.15)
+    val ndviOk = col("band") === "250m_16_days_NDVI" && ndvi.between(-1.0, 1.0)
+    val lstOk = col("band") === "LST_Day_1km" && temp.between(-50.0, 60.0)
+    subset.select(
+      col("site"),
+      lit(1).as("subset_entry"),
+      when(ndviOk, ndvi).as("ndvi"), when(ndviOk, col("calendar_date")).as("ndvi_date"),
+      when(lstOk, temp).as("lst"), when(lstOk, col("calendar_date")).as("lst_date"))
+  }
+
+  /** Weather rows: current decode + risk + forecast roll-up, one struct
+    * per site. */
+  private def weatherRows(s: SparkSession, t: Transport): DataFrame = {
+    val w = jsonFile(s, t, WeatherJsonl,
+      "site STRING, dt BIGINT, main STRUCT<temp: DOUBLE, humidity: INT, pressure: INT>, " +
         "wind STRUCT<speed: DOUBLE, deg: INT>, weather ARRAY<STRUCT<main: STRING, description: STRING>>, " +
         "visibility INT, name STRING, " +
         "forecast ARRAY<STRUCT<dt: BIGINT, main: STRUCT<temp: DOUBLE, humidity: INT, pressure: INT>, wind: STRUCT<speed: DOUBLE, deg: INT>>>")
-    val w = t match {
-      case Files => reader.json(WeatherJsonl)
-      case Rest  => reader.json(restLines(s, "text/weather_current.jsonl"))
-    }
-    w.select(
-      col("site"),
+    w.select(col("site"), struct(
       col("main.temp").as("temperature_celsius"),
       col("main.humidity").as("humidity_percent"),
       col("main.pressure").as("pressure_hpa"),
@@ -253,38 +242,49 @@ object CollectFull {
       array_min(transform(col("forecast"), f => f.getField("main").getField("temp"))).as("forecast_min_temperature"),
       size(filter(col("forecast"), f =>
         fireWeatherScore(f.getField("main").getField("temp"), f.getField("main").getField("humidity"),
-          f.getField("wind").getField("speed")) >= 5)).as("n_fire_risk_periods"))
+          f.getField("wind").getField("speed")) >= 5)).as("n_fire_risk_periods")).as("wx"))
   }
 
-  /** Decoded elevation raster as (site, pos, elev) pixel rows — shared
-    * by the stats aggregate and the visualization downsample. */
+  /** Decoded elevation raster as (site, pos, elev) pixel rows — the
+    * visualization downsample's input. */
   def elevationPixels(s: SparkSession, t: Transport = Files): DataFrame =
-    rasterFiles(s, t)
-      .join(broadcast(rasterIndex(s, t).filter(col("product") === "elevation")), "file_name")
-      .withColumn("ras", decodeRaster(col("content")))
+    rasters(s, t, requests(s))
+      .filter(col("product") === "elevation")
       .select(col("site"), posexplode(col("ras.px")).as(Seq("pos", "elev")))
 
-  /** Topography: masked elevation stats over the decoded raster
-    * (topography_container.py:233-296). Sums stay exact because the
-    * fixture elevations are integral doubles; mean/std are single
-    * divisions/sqrt over those exact sums, mirrored verbatim in the
-    * oracle so both engines produce bit-identical doubles. */
-  def topography(s: SparkSession, t: Transport = Files): DataFrame =
-    elevationPixels(s, t)
-      .filter(col("elev") =!= NoData)
+  /** The one keyed pass: every source's rows aggregated by site, then
+    * the per-site classify rules. */
+  private def bySite(s: SparkSession, t: Transport, requests: DataFrame): DataFrame = {
+    def firstOf(product: String, c: String) =
+      first(when(col("product") === product, col(c)), ignoreNulls = true)
+    def landfireFirst(c: String) = first(when(col("product") =!= "elevation", col(c)), ignoreNulls = true)
+    rasterRows(s, t, requests)
+      .unionByName(modisRows(s, t), allowMissingColumns = true)
+      .unionByName(weatherRows(s, t), allowMissingColumns = true)
       .groupBy("site")
       .agg(
-        count(lit(1)).as("pixel_count"),
-        min("elev").as("min_elevation_m"),
-        max("elev").as("max_elevation_m"),
-        sum("elev").as("sum_elev"),
-        sum(col("elev") * col("elev")).as("ssq_elev"))
+        firstOf("vegetation_type", "interpreted").as("vegetation_class"),
+        firstOf("vegetation_type", "pixel_int").as("vegetation_pixel_value"),
+        firstOf("fuel_model", "interpreted").as("fuel_model_class"),
+        firstOf("fuel_model", "pixel_int").as("fuel_model_pixel_value"),
+        landfireFirst("px_row").as("px_row"),
+        landfireFirst("px_col").as("px_col"),
+        first(col("topo"), ignoreNulls = true).as("topo"),
+        max_by(col("ndvi"), col("ndvi_date")).as("ndvi_latest"),
+        max(col("ndvi_date")).as("last_observation_date"),
+        count(col("ndvi")).as("n_valid_ndvi"),
+        min_by(col("lst"), col("lst_date")).as("land_surface_temperature_c"),
+        count(col("subset_entry")).as("n_subset_entries"),
+        first(col("wx"), ignoreNulls = true).as("wx"))
+      .select(col("*"), col("wx.*"), col("topo.*"))
+      .withColumn("vegetation_health", vegetationHealth(col("ndvi_latest")))
+      .withColumn("fire_risk_vegetation", vegetationRisk(col("ndvi_latest"), lit))
       .withColumn("mean_elevation_m", col("sum_elev") / col("pixel_count"))
       .withColumn("std_elevation_m",
         sqrt(col("ssq_elev") / col("pixel_count") - col("mean_elevation_m") * col("mean_elevation_m")))
       .withColumn("elevation_range_m", col("max_elevation_m") - col("min_elevation_m"))
       .withColumn("terrain_roughness", terrainClass(col("elevation_range_m"), lit))
-      .drop("sum_elev", "ssq_elev")
+  }
 
   private def locationStruct: Column = struct(
     col("lat").as("latitude"),
@@ -320,21 +320,17 @@ object CollectFull {
     when(ok, lit(0)).otherwise(lit(1)).as("n_errors"),
     lit(0).as("n_warnings"))
 
-  /** The AggregatedResponse rows: one per request — golden coordinates
+  /** The AggregatedResponse rows: one per row of `requests` (columns
+    * `site`, `lat`, `lon`, `buffer_m`, `event_id`) — golden coordinates
     * fully populated, the off-grid request with a null-field landfire
     * interpretation (UNKNOWN risk) and a NULL modis envelope plus the
     * orchestrator's failure accounting (orchestrator.py:735-741,
     * :783-790). */
-  def run(s: SparkSession, t: Transport = Files): DataFrame = {
-    Fixtures.stage()
-    val joined = requests(s)
-      .join(landfire(s, t), Seq("site"), "left")
-      .join(modis(s, t), Seq("site"), "left")
-      .join(weather(s, t), Seq("site"), "left")
-      .join(topography(s, t), Seq("site"), "left")
+  def run(s: SparkSession, requests: DataFrame, t: Transport = Files): DataFrame = {
+    val joined = requests.join(broadcast(bySite(s, t, requests)), Seq("site"), "left")
 
     val landfireOk = col("px_row").isNotNull
-    val modisOk = col("modis_ok").isNotNull
+    val modisOk = col("n_valid_ndvi") > 0
     val weatherOk = col("temperature_celsius").isNotNull
     val topoOk = col("pixel_count").isNotNull
 
@@ -349,7 +345,7 @@ object CollectFull {
           lit("vegetation_type,fuel_model").as("interpreted_products"),
           col("vegetation_class").as("vegetation_interpreted"),
           col("fuel_model_class").as("fuel_model_interpreted")).as("area_summary"),
-        col("lf_risk").as("risk_assessment")), landfireOk)
+        landfireRisk(col("vegetation_class"), col("fuel_model_class")).as("risk_assessment")), landfireOk)
 
     val modisEnv = containerStruct("MODIS_ORNL", "modis_vegetation_indices", "modis-container-0",
       RetrievedAt,

@@ -121,7 +121,7 @@ object E2EQueries {
       // keeps null fields present, matching DuckDB's to_json. The native
       // nested shape stays pinned by CollectFullSpec.
       val j = Map("ignoreNullFields" -> "false")
-      CollectFull.run(s).select(
+      CollectFull.run(s, CollectFull.requests(s)).select(
         col("request_id"), col("event_id"),
         to_json(col("location"), j).as("location"),
         col("timestamp"),
@@ -621,8 +621,9 @@ LEFT JOIN topo2 t ON s.site = t.site""")
 
   /** §3.1 over the WIRE — the identical pipeline with every input byte
     * arriving over live HTTP ([[graft.ops.CollectFull.Transport.Rest]]:
-    * rasters, attribute/index CSVs, and both JSON feeds fetched through
-    * [[graft.sources.RestSource]] from the loopback endpoint). Reuses
+    * attribute/index CSVs and both JSON feeds fetched through
+    * [[graft.sources.RestSource]], the requested sites' rasters through
+    * [[graft.ops.RestFetch]], from the loopback endpoint). Reuses
     * `e2e_collect_full`'s oracle verbatim: the HTTP transport must be
     * byte-lossless through parse, decode, classify, and envelope
     * assembly — the deployment shape of the reference's four WAN
@@ -632,7 +633,7 @@ LEFT JOIN topo2 t ON s.site = t.site""")
     "Full /collect with ALL inputs over live HTTP (DataSource V2 REST fetch): must hash-match the file-transport oracle.",
     (s, _) => {
       val j = Map("ignoreNullFields" -> "false")
-      CollectFull.run(s, CollectFull.Transport.Rest).select(
+      CollectFull.run(s, CollectFull.requests(s), CollectFull.Transport.Rest).select(
         col("request_id"), col("event_id"),
         to_json(col("location"), j).as("location"),
         col("timestamp"),

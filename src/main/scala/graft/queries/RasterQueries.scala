@@ -108,8 +108,8 @@ object RasterQueries {
   /** J2 + X14 + S7 — pixel classification: exact attribute-table match
     * first, then range-membership fallback, then the literal
     * "Unknown (v)" default (landfire_container.py:68-84, 118-132). The
-    * exact table is a REAL broadcast CSV read, cached like the
-    * reference's downloaded-and-cached attribute table
+    * exact table is a REAL broadcast CSV read, the broadcast relation
+    * standing for the reference's downloaded-and-cached attribute table
     * (landfire_container.py:46-65); the range fallback is the
     * vegetation rows of [[CollectPipeline.rangeBands]], the reference's
     * in-code map. Both joins broadcast; precedence via

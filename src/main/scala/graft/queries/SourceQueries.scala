@@ -75,7 +75,7 @@ object SourceQueries {
     (s, _) => {
       graft.ops.Fixtures.stage()
       s.read.format("binaryFile")
-        .load(s"${graft.ops.Fixtures.TextDir}/*")
+        .load(graft.ops.Fixtures.TextDir)
         .select(
           element_at(split(col("path"), "/"), -1).as("file_name"),
           col("length"),

@@ -1,20 +1,27 @@
 package graft
 
 import graft.ops.{CollectFull, Fixtures}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Full-fidelity /collect: nested AggregatedResponse schema, the four
-  * golden-coordinate classifications (reference README.md:262-266), and
-  * the S7 plan shape (CSV attribute scan feeding a BroadcastExchange). */
+  * golden-coordinate classifications (reference README.md:262-266), one
+  * response row per caller-built request row, no cache left behind, and
+  * the plan shape (CSV attribute scan feeding a BroadcastExchange, one
+  * raster scan, one raster-index scan). */
 class CollectFullSpec extends SparkSpecBase {
+  import CollectFull.Transport.{Files, Rest}
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   private lazy val rows = {
-    val df = CollectFull.run(spark)
+    val df = CollectFull.run(spark, CollectFull.requests(spark))
     df.collect().map(r => r.getString(0) -> r).toMap
   }
 
   test("emits one AggregatedResponse row per request, nested ContainerOutput per source") {
-    val df = CollectFull.run(spark)
+    val df = CollectFull.run(spark, CollectFull.requests(spark))
     assert(df.count() == 5)
     val schema = df.schema
     // envelope columns are structs, with the ContainerOutput shape
@@ -69,17 +76,42 @@ class CollectFullSpec extends SparkSpecBase {
     assert(math.abs(modisCs("req_la").getDouble(5) - 33.65) < 1e-9)
   }
 
-  test("S7: the attribute table is a CSV scan feeding a BroadcastExchange, and is cached") {
-    val attrs = CollectFull.attributeTable(spark)
-    assert(attrs.storageLevel.useMemory, "attribute table should be cached like the reference's _attribute_cache")
-    val lf = CollectFull.landfire(spark)
-    lf.collect()
-    val plan = lf.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastQueryStage"),
-      s"attribute/index tables not broadcast:\n${plan.take(2000)}")
-    // the CSV scan appears below (possibly as InMemoryTableScan once cached)
-    assert(plan.contains("landfire_attributes.csv") || plan.contains("InMemoryTableScan"),
-      s"CSV attribute scan missing from plan:\n${plan.take(2000)}")
+  test("caller-built requests: one row per request row, each its site's full-run row") {
+    val req = CollectFull.requests(spark)
+    val picked = req.filter(col("site") === "req_seattle")
+      .unionByName(req.filter(col("site") === "req_la"))
+      .unionByName(req.filter(col("site") === "req_la"))
+    val got = CollectFull.run(spark, picked.drop("site_name")).collect()
+    assert(got.map(_.getString(0)).sorted.toSeq == Seq("req_la", "req_la", "req_seattle"))
+    got.foreach(r => assert(r == rows(r.getString(0)), s"${r.getString(0)}: $r"))
+  }
+
+  test("a run leaves no RDD persisted, over either transport") {
+    val sc = spark.sparkContext
+    for (t <- Seq(Files, Rest)) {
+      val before = sc.getPersistentRDDs.keySet
+      assert(CollectFull.run(spark, CollectFull.requests(spark), t).collect().length == 5)
+      assert(sc.getPersistentRDDs.keySet == before, s"$t left ${sc.getPersistentRDDs.keySet -- before} persisted")
+    }
+  }
+
+  test("S7: run broadcasts the attribute CSV; one raster scan, one index scan") {
+    // (raster scan, raster-index scan) as each transport's plan prints them
+    val scans = Seq(Files -> ("FileScan binaryFile", "rasters_index.csv"),
+      Rest -> ("MapPartitions graft.ops.RestFetch", "Scan ExistingRDD[file_name#"))
+    for ((t, (raster, index)) <- scans) {
+      val df = CollectFull.run(spark, CollectFull.requests(spark), t)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val tree = Plans.tree(plan)
+      for (needle <- Seq(raster, index))
+        assert(tree.linesIterator.count(_.contains(needle)) == 1, s"$t: '$needle' scans:\n$tree")
+      if (t == Files) {
+        val broadcasts = PlanWalk.collect(plan) { case b: BroadcastExchangeExec => b.child.toString }
+        assert(broadcasts.exists(_.contains("landfire_attributes.csv")),
+          s"attribute CSV scan not under a BroadcastExchange:\n$tree")
+      }
+    }
   }
 
   test("summary aggregates the orchestrator's success accounting") {

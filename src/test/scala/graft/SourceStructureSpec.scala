@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * guards the rule layer: the reference's classification rules are
   * written once (in `ops/CollectPipeline`), and every dot product calls
   * the `dot_product` kernel by name, with no optimizer rule injected to
-  * find hand-written copies. Reads the main sources as text (run from
+  * find hand-written copies. `ops/CollectFull` reads each input once
+  * and caches nothing. Reads the main sources as text (run from
   * the repo root, as sbt's forked tests are). */
 class SourceStructureSpec extends AnyFunSuite {
 
@@ -85,6 +86,10 @@ class SourceStructureSpec extends AnyFunSuite {
 
   test("no main source hand-writes the double-cast dot product lambda") {
     assert(filesWith("""x.cast("double") * y.cast("double")""").isEmpty)
+  }
+
+  test("the full-fidelity collect caches nothing") {
+    assert(!sources.toMap.apply("ops/CollectFull.scala").contains(".cache()"))
   }
 
   test("each reference classification label is a Scala literal in one main file") {
