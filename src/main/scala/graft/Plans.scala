@@ -10,7 +10,9 @@ import org.apache.spark.sql.internal.SQLConf
   * query at the given SF — the plan-shape evidence (pushdown, broadcast
   * choices, partial aggregation, custom operators) reviewed per round.
   *
-  * Usage: sbt "runMain graft.Plans [sfDir] [outFile]"
+  * Usage: SPARK_GRAFT_CPUS=4 sbt "runMain graft.Plans [sfDir] [outFile]".
+  * The header records the shuffle-partition count the plans were made
+  * with; regenerate the whole file in one run so every section shares it.
   */
 object Plans {
   private val Headline = Seq(
@@ -165,7 +167,9 @@ object Plans {
     val spark = GraftSession.local("graft-plans")
     val sb = new StringBuilder
     sb.append("# PLANS — headline physical plans (generated by `graft.Plans`)\n\n")
-    sb.append(s"Source: `$sfDir`. Regenerate: `sbt \"runMain graft.Plans\"`.\n")
+    sb.append(s"Source: `$sfDir`. Regenerate: `SPARK_GRAFT_CPUS=4 sbt \"runMain graft.Plans\"`.\n")
+    sb.append(s"Shuffle partitions (`spark.sql.shuffle.partitions`, from `SPARK_GRAFT_CPUS`): " +
+      s"${spark.conf.get("spark.sql.shuffle.partitions")}.\n")
     Headline.foreach { case (name, why) =>
       val df = queries.QueryRegistry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE so the printed plan is the executed one

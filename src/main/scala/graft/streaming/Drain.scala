@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -12,6 +13,13 @@ import org.apache.spark.sql.types.StructType
   * transform and returns the stream un-drained; the caller drains it:
   * `Drain(Op.stream(spark, src), ck)(Drain.appendParquet(sink))`, or
   * with the operator's own sink where the sink is part of its meaning.
+  *
+  * Boundary rule: `foreachBatch` hands its sink each micro-batch as a
+  * `LogicalRDD` over the stream's executed plan. Column pruning, the
+  * analyzer and whole-stage codegen stop at that RDD, and a transform
+  * built inside the sink is analyzed again for every batch. So the
+  * transform belongs on the stream side, in `ds`, where each micro-batch
+  * is planned as one query, and a sink only stamps and writes.
   *
   * Delivery contract: at-least-once. A batch whose sink ran but whose
   * commit did not land (a crash in between) is replayed on restart from
@@ -49,6 +57,11 @@ object Drain {
     * parquet dataset at `dir`. */
   def appendParquet[T](dir: String): (Dataset[T], Long) => Unit =
     (batch, _) => batch.write.mode("append").parquet(dir)
+
+  /** [[appendParquet]] with each row stamped with its micro-batch id in
+    * a `batch_id` column. */
+  def appendStamped[T](dir: String): (Dataset[T], Long) => Unit =
+    (batch, batchId) => batch.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(dir)
 
   /** The crash drill: drain `stream` into `sink`, but throw right after
     * the sink's first batch with id >= `crashFrom`. That batch's output

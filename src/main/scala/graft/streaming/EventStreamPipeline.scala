@@ -158,11 +158,8 @@ object EventStreamPipeline {
     val requests = route(eventSource(spark, srcDir, 4))
       .select(col("event_id"), col("user_id"), col("priority"),
         col("sources"), col("timeout_s"), col("ts").as("requested_at"))
-    Drain(requests, checkpointDir) { (batch, batchId) =>
-      // T3: the event-keyed persistence the reference stubs out
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(sinkDir)
-    }
+    // T3: the event-keyed persistence the reference stubs out
+    Drain(requests, checkpointDir)(Drain.appendStamped(sinkDir))
   }
 
   /** §3.3 — event → DataRequest derivation (the reference's
@@ -216,19 +213,18 @@ object EventStreamPipeline {
   }
 
   /** §3.3 streaming entry — T1 ingest → T2 route → the §3.1 collect
-    * pipeline per micro-batch → T3 event-keyed result sink. foreachBatch
-    * hands a STATIC frame to collectForEvents, so the batch operator
-    * chain runs unmodified inside the stream. That chain is row-local,
-    * so each micro-batch is one job with no shuffle, and the streamed
-    * results equal the batch run on the same events however the files
-    * split into micro-batches. */
+    * pipeline → T3 event-keyed result sink. collectForEvents is applied
+    * to the streaming frame, on the stream side of the drain, so each
+    * micro-batch is planned as one query: a single whole-stage-codegen
+    * stage that scans only the three event columns the chain reads and
+    * runs validate → classify → response over them, with no shuffle. The
+    * sink only stamps `batch_id` and appends. The chain is row-local, so
+    * the streamed results equal the batch run on the same events however
+    * the files split into micro-batches. */
   def runEventCollect(spark: SparkSession, srcDir: String, sinkDir: String,
                       checkpointDir: String): StreamingQuery =
-    Drain(eventSource(spark, srcDir, 4), checkpointDir) { (batch, batchId) =>
-      collectForEvents(batch)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(sinkDir)
-    }
+    Drain(collectForEvents(eventSource(spark, srcDir, 4)), checkpointDir)(
+      Drain.appendStamped(sinkDir))
 
   /** T5 — watermarked windowed aggregation as a stream, appending
     * finalized windows to `sinkDir`. */

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types.StructType
 import EventStreamPipeline.micros
@@ -73,12 +72,6 @@ object StreamingResultCache {
       .transformWithState(new Processor(ttlSeconds, compute), TimeMode.None(),
         OutputMode.Append(), Encoders.product[Served])
   }
-
-  /** The served-log sink: each batch's rows appended under `sinkDir`
-    * with their `batch_id`, so per-batch censuses stay readable. */
-  def sink(sinkDir: String): (Dataset[Served], Long) => Unit =
-    (batch, batchId) => batch.withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(sinkDir)
 
   /** The MEMOIZING face: the value arrives ON the row (computed by an
     * upstream stage — e.g. the routed-collect responses in

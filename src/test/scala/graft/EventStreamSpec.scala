@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import graft.streaming.EventStreamPipeline
+import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 
 /** Drives the real Structured Streaming pipeline (readStream → route /
@@ -74,6 +76,24 @@ class EventStreamSpec extends SparkSpecBase {
     // the off-box slice (every 19th event) is rejected upstream of the sink
     assert(streamed.filter(pmod(col("event_id"), lit(19)) === 0).count() == 0)
     assert(batch.count() < events.count())
+  }
+
+  test("§3.3: each event-collect micro-batch is one codegen stage over a three-column scan") {
+    val q = EventStreamPipeline.runEventCollect(spark, srcDir, tmp("ec_plan_sink"), tmp("ec_plan_ck"))
+    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    // the stream's own plan runs the collect chain, so pruning reaches the scan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, plan)
+    assert(scans.head.requiredSchema.fieldNames.toSet == Set("event_id", "user_id", "event_type"), plan)
+    // scan → validate → classify → response fuse into the scan's stage
+    val stage = plan.collect { case w: WholeStageCodegenExec => w }
+      .filter(_.child.exists(_ eq scans.head))
+    assert(stage.size == 1, plan)
+    assert(stage.head.child.exists {
+      case p: ProjectExec => p.output.map(_.name).contains("sources_successful")
+      case _ => false
+    }, plan)
   }
 
   test("§3.3: an event id delivered in two micro-batches equals the batch run over every delivery") {

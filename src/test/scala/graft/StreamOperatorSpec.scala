@@ -311,7 +311,7 @@ object StreamOperatorSpec {
       (s, src) => StreamingResultCache.stream(s, src, CacheTtl, cacheStamp),
       d => latest(d.read.filter(col("outcome") =!= "hit"), Seq("key"), "batch_id", "v").drop("batch_id"),
       t => cacheFold(t)._2,
-      sink = (_, dir) => StreamingResultCache.sink(dir),
+      sink = (_, dir) => Drain.appendStamped(dir),
       extra = d => assertSame(
         d.rows.groupBy(col("batch_id"), col("outcome"))
           .agg(count(lit(1)).as("n"), sum(col("v")).as("sv")),
